@@ -15,7 +15,7 @@ through row-level collect — this helper is timing-only.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 
 def materialize(df: DataFrame):
@@ -26,3 +26,13 @@ def materialize(df: DataFrame):
         return df.toPandas()
     except Exception:
         return df.collect()
+
+
+def max_job_id(spark: SparkSession) -> int:
+    """Highest Spark job id handed out so far (-1 before the first job),
+    whatever the job's group. Job ids increase by one per job, so the
+    jobs a step launched are the growth of this value across it. The
+    status tracker's id lists keep only the last
+    ``spark.ui.retainedJobs`` jobs, so their length clamps on long runs
+    and undercounts; the highest id never does."""
+    return int(spark.sparkContext._jsc.sc().dagScheduler().nextJobId()) - 1

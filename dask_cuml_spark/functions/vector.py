@@ -14,6 +14,9 @@ codegen; an equivalent pandas_udf would pay Arrow serialization per batch.
 
 from __future__ import annotations
 
+import math
+import numbers
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -57,34 +60,56 @@ def norm_sq(a: Column | str) -> Column:
     return dot(a, a)
 
 
-def matrix_lit(mat) -> Column:
-    """array<array<double>> literal (e.g. a centroid table) in ONE call.
+def _sql_scalar(v, where: str) -> str:
+    """One Spark SQL literal for an int, a double or a string."""
+    if isinstance(v, str):
+        # the parser unescapes backslash sequences inside quotes
+        return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    if isinstance(v, numbers.Integral) and not isinstance(v, bool):
+        return str(int(v))
+    if isinstance(v, numbers.Real) and not isinstance(v, bool):
+        f = float(v)
+        if not math.isfinite(f):
+            raise ValueError(
+                f"non-finite value {f!r} at {where} — check for empty "
+                "clusters / bad input vectors upstream"
+            )
+        return f"{f!r}D"
+    raise TypeError(f"no SQL literal for {type(v).__name__} at {where}")
 
-    PySpark's F.lit on a nested list expands client-side into one lit()
-    py4j round trip PER ELEMENT (an 8×64 centroid table = ~2.8k socket
-    round trips, measured 0.48 s of plan-construction latency per query
-    call); F.array(*[F.lit(v) ...]) is the same cost. Emitting the whole
-    table as one SQL array literal is a single py4j call + one JVM-side
-    parse (measured 3 ms warm). repr(float) round-trips exactly through
-    Spark's double-literal parser (verified incl. 5e-324), so values are
-    bit-identical to the per-element form.
 
-    Non-finite values would render as ``infD``/``nanD``, which Spark's
+def _array_sql(values, where: str) -> str:
+    return "array(" + ",".join(
+        _sql_scalar(v, f"{where}col {j}") for j, v in enumerate(values)
+    ) + ")"
+
+
+def array_lit(values) -> Column:
+    """1-d array literal of ints, doubles or strings in ONE py4j call.
+
+    PySpark's F.lit on a list expands client-side into one lit() py4j
+    round trip PER ELEMENT (a 1024-word list = 1024 socket round trips);
+    F.array(*[F.lit(v) ...]) is the same cost. Emitting the whole array
+    as one SQL literal is a single py4j call + one JVM-side parse.
+    repr(float) round-trips exactly through Spark's double-literal
+    parser (verified incl. 5e-324), so values are bit-identical to the
+    per-element form; ints keep Spark's literal typing (int when they
+    fit, else bigint) and strings are quoted and escaped.
+
+    Non-finite doubles would render as ``infD``/``nanD``, which Spark's
     SQL parser rejects with an opaque ParseException far from the cause
-    (e.g. a degenerate k-means fit with an empty cluster) — validate up
-    front and name the offending cell instead.
+    (e.g. a degenerate k-means fit with an empty cluster) — they are
+    rejected up front with the offending position named instead.
     """
-    import math
+    return F.expr(_array_sql(list(values), ""))
 
-    rows = []
-    for i, r in enumerate(mat):
-        vals = [float(v) for v in r]
-        for j, v in enumerate(vals):
-            if not math.isfinite(v):
-                raise ValueError(
-                    f"matrix_lit: non-finite value {v!r} at row {i}, "
-                    f"col {j} — check for empty clusters / bad input "
-                    "vectors upstream"
-                )
-        rows.append("array(" + ",".join(f"{v!r}D" for v in vals) + ")")
+
+def matrix_lit(mat) -> Column:
+    """array<array<double>> literal (e.g. a centroid table) in ONE call;
+    the row-wise form of array_lit (an 8×64 centroid table costs one
+    py4j call instead of ~2.8k)."""
+    rows = [
+        _array_sql([float(v) for v in r], f"row {i}, ")
+        for i, r in enumerate(mat)
+    ]
     return F.expr(f"array({','.join(rows)})")

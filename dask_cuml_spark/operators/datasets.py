@@ -12,6 +12,8 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dask_cuml_spark.functions.vector import array_lit
+
 
 def make_blobs(
     spark: SparkSession,
@@ -32,7 +34,7 @@ def make_blobs(
     feature = F.array(
         *[
             F.element_at(
-                F.array(*[F.lit(float(ctrs[c][d])) for c in range(centers)]),
+                array_lit([ctrs[c][d] for c in range(centers)]),
                 F.col("label") + 1,
             )
             + F.randn(seed + d) * cluster_std
@@ -72,7 +74,7 @@ def make_classification(
     cols = []
     for d in range(n_informative):
         center_d = F.element_at(
-            F.array(*[F.lit(float(centroids[c][d])) for c in range(n_classes)]),
+            array_lit([centroids[c][d] for c in range(n_classes)]),
             F.col("label") + 1,
         )
         cols.append(center_d + F.randn(seed + 10_000 + d))

@@ -52,30 +52,56 @@ def confusion_matrix(df: DataFrame, label_col: str, pred_col: str) -> DataFrame:
     ).agg(F.count(F.lit(1)).alias("n"))
 
 
-def adjusted_rand_score(df: DataFrame, label_col: str, pred_col: str) -> float:
-    """ARI between two labelings (reference: cuml.metrics
-    adjusted_rand_score; SURVEY §2A A19). One distributed contingency
-    aggregate; the O(k²) pair-counting closes on the driver."""
-    cont = (
-        df.groupBy(label_col, pred_col)
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
+def ari_sql(sum_ij: str, sum_a: str, sum_b: str, n: str) -> str:
+    """SQL expression for ARI from its four pair-count sums (double
+    columns): cell pairs, row-marginal pairs, column-marginal pairs and
+    the row count. One expression string is one py4j call, where the
+    same tree built from Column operators costs about ten per node.
+    n < 2 has no pairs: expected is 0 there, which makes max_index ==
+    expected and the score 1.0 (nothing to disagree on)."""
+    pairs = f"({n} * ({n} - 1) / 2)"
+    expected = f"IF({pairs} > 0, {sum_a} * {sum_b} / {pairs}, 0D)"
+    max_index = f"(({sum_a} + {sum_b}) / 2)"
+    return (
+        f"IF({max_index} = {expected}, 1D, "
+        f"({sum_ij} - {expected}) / ({max_index} - {expected}))"
     )
 
-    def comb2(x: float) -> float:
-        return x * (x - 1) / 2.0
 
-    n = sum(r["n"] for r in cont)
-    sum_ij = sum(comb2(r["n"]) for r in cont)
-    a: dict = {}
-    b: dict = {}
-    for r in cont:
-        a[r[label_col]] = a.get(r[label_col], 0) + r["n"]
-        b[r[pred_col]] = b.get(r[pred_col], 0) + r["n"]
-    sum_a = sum(comb2(v) for v in a.values())
-    sum_b = sum(comb2(v) for v in b.values())
-    expected = sum_a * sum_b / comb2(n)
-    max_index = (sum_a + sum_b) / 2.0
-    if max_index == expected:
-        return 1.0
-    return float((sum_ij - expected) / (max_index - expected))
+def adjusted_rand_frame(df: DataFrame, label_col: str, pred_col: str) -> DataFrame:
+    """One-row frame of the ARI pair-count sums between two labelings —
+    ``sum_ij``, ``sum_a``, ``sum_b``, ``n`` (double) — and ``ari``
+    (reference: cuml.metrics adjusted_rand_score; SURVEY §2A A19).
+
+    One CUBE over (label, pred) yields the contingency cells, both
+    marginals and the total in a single shuffle; one global aggregate
+    folds them to pair counts. Building the frame runs no job, so a
+    query can embed it. Pair counts are exact integers in double at any
+    realistic n, so summation order cannot change the value."""
+    cells = (
+        df.select(F.col(label_col).alias("_a"), F.col(pred_col).alias("_b"))
+        .cube("_a", "_b")
+        .agg(
+            F.expr("grouping_id() AS g"),
+            F.expr("CAST(count(1) AS DOUBLE) AS c"),
+        )
+    )
+    # grouping_id bits: (grouping(_a) << 1) | grouping(_b), so g = 0 are
+    # the cells, 1 and 2 the two marginals and 3 the grand total
+    sums = cells.agg(
+        *[
+            F.expr(f"coalesce(sum(IF(g = {g}, {term}, 0D)), 0D) AS {name}")
+            for g, term, name in (
+                (0, "c * (c - 1) / 2", "sum_ij"),
+                (1, "c * (c - 1) / 2", "sum_a"),
+                (2, "c * (c - 1) / 2", "sum_b"),
+                (3, "c", "n"),
+            )
+        ]
+    )
+    return sums.withColumn("ari", F.expr(ari_sql("sum_ij", "sum_a", "sum_b", "n")))
+
+
+def adjusted_rand_score(df: DataFrame, label_col: str, pred_col: str) -> float:
+    """ARI as a float: one action over ``adjusted_rand_frame``."""
+    return float(adjusted_rand_frame(df, label_col, pred_col).first()["ari"])

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from dask_cuml_spark.functions.vector import array_lit
 from dask_cuml_spark.io import load_table
 from dask_cuml_spark.registry import register
 
@@ -976,7 +977,7 @@ def q110_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     stop_hits = F.array_size(
         F.array_intersect(
             F.array_distinct(F.transform(toks, F.lower)),
-            F.array(*[F.lit(s) for s in _Q110_STOPWORDS]),
+            array_lit(_Q110_STOPWORDS),
         )
     )
     out = d.select(
@@ -3203,14 +3204,17 @@ def q148_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
 # n_bloom_hits per doc BY CONSTRUCTION (no false negatives) — the
 # spread between the two columns is the measured FP audit.
 #
-# Scale: the bits table is ≤ m = 65 536 ints at ANY corpus/eval size —
-# always broadcastable, which is the operator's reason to exist. The
-# train pass is one narrow exploded projection + three broadcast LEFT
-# joins against distinct keys (no row multiplication) + the canonical
-# per-doc partial+final agg; nothing corpus-sized shuffles. The
-# per-char fold lambda is the oracle-parity tax (the q129/q144
-# adjudication): production swaps xxhash64(slice) for the gram key —
-# same plan shape, no per-char work — and keeps the m-bit layout.
+# Scale: the mask is m bits = m/64 int64 words (8 KB) at ANY
+# corpus/eval size — always broadcastable, which is the operator's
+# reason to exist. It is a mergeable aggregate built in the plan and
+# crossJoined back as one broadcast row, so building the query runs no
+# job. The train pass is one narrow exploded projection + one broadcast
+# LEFT join against the distinct eval keys (no row multiplication) +
+# two getbit tests against the mask row + the canonical per-doc
+# partial+final agg; nothing corpus-sized shuffles. The per-char fold
+# lambda is the oracle-parity tax (the q129/q144 adjudication):
+# production swaps xxhash64(slice) for the gram key — same plan shape,
+# no per-char work — and keeps the m-bit layout.
 # ---------------------------------------------------------------------------
 _Q149_M = 1 << 16  # Bloom bits
 _Q149_GMOD = 999999937  # gram-key fold prime (< 2^30: products stay exact)
@@ -3277,24 +3281,38 @@ def q149_bloom_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bloom_decontaminate(spark, sf_dir, key_mode="portable")
 
 
-def _q149_mask_words(bits: DataFrame) -> list:
-    """Fold the Bloom bit-position frame into an m-bit mask literal:
-    1024 signed int64 words (8 KB). Bounded BY CONSTRUCTION — positions
-    live in [0, m = 2^16); corpus/eval growth never widens it (that
-    corpus-independence is the operator's reason to exist). One bounded
-    collect replaces two broadcast-hash-join builds (r16 verdict item
-    5, guide §2.4: membership in a fixed 8 KB set is an expression, not
-    a join)."""
-    words = [0] * (_Q149_M >> 6)
-    for (p,) in bits.collect():
-        words[p >> 6] |= 1 << (p & 63)
-    return [w - (1 << 64) if w >= (1 << 63) else w for w in words]
+def _q149_mask(ev_keys: DataFrame) -> DataFrame:
+    """One-row frame: the m-bit Bloom mask of the eval keys' (p1, p2)
+    positions as ``_mask``, an array of m/64 int64 words (8 KB). The
+    mask is built in the plan as a mergeable aggregate — OR-fold each
+    word's bits, then one row of words — so building the query runs no
+    job. Bounded for ANY corpus: positions live in [0, m), so the word
+    table never exceeds m/64 entries and the dense array is exactly
+    m/64 words; bit_or is idempotent, so duplicate positions need no
+    distinct."""
+    words = (
+        ev_keys.select(F.explode(F.array("p1", "p2")).alias("p"))
+        .groupBy(F.expr("shiftright(p, 6) AS w"))
+        .agg(F.expr("bit_or(shiftleft(1L, int(p & 63))) AS v"))
+    )
+    # dense word array, so each test is an O(1) array index where a map
+    # lookup would scan up to m/64 keys
+    return words.agg(
+        F.expr("map_from_entries(collect_list(struct(w, v))) AS _sparse")
+    ).select(
+        F.expr(
+            f"transform(sequence(0L, {(_Q149_M >> 6) - 1}L), "
+            "w -> coalesce(element_at(_sparse, w), 0L)) AS _mask"
+        )
+    )
 
 
-def _q149_bit_set(words: list, col):
-    """Boolean column: bit `col` (∈ [0, m)) set in the mask literal."""
-    word = F.element_at(F.lit(words), (F.shiftright(col, 6) + 1).cast("int"))
-    return F.getbit(word, F.pmod(col, F.lit(64))) == 1
+def _q149_bit_set(p: str):
+    """Boolean column: bit ``p`` (∈ [0, m)) set in the ``_mask`` words."""
+    return F.expr(
+        f"getbit(element_at(_mask, int(shiftright({p}, 6)) + 1), "
+        f"int({p} & 63)) = 1"
+    )
 
 
 def bloom_decontaminate(
@@ -3315,8 +3333,8 @@ def bloom_decontaminate(
     # 100x vs ~56 s for the per-distinct shape. In 'xxhash64'
     # (production) mode there are NO strings and NO folds anywhere:
     # gram key = xxhash64(slice), Bloom positions are integer exprs on
-    # it, and the whole query is one narrow explode + a 65 536-int
-    # broadcast + the canonical per-doc agg — the scan-speed shape.
+    # it, and the whole query is one narrow explode + the 8 KB mask
+    # row + the canonical per-doc agg — the scan-speed shape.
     d = load_table(spark, sf_dir, "documents").repartition(
         spark.sparkContext.defaultParallelism
     )
@@ -3352,20 +3370,14 @@ def bloom_decontaminate(
         if small:
             keyed = persist_for_reuse(keyed)
         ev_rows = keyed.filter(F.col("doc_id") % 97 == 0)
-        bits = (
-            ev_rows.select(F.col("p1").alias("p"))
-            .unionAll(ev_rows.select(F.col("p2").alias("p")))
-            .distinct()
-        )
         ev = ev_rows.select("gk").distinct()
-        words = _q149_mask_words(bits)
         train = (
             keyed.filter(F.col("doc_id") % 97 != 0)
             .join(F.broadcast(ev.withColumn("_me", F.lit(1))), "gk", "left")
+            .crossJoin(F.broadcast(_q149_mask(ev_rows)))
             .select(
                 "doc_id",
-                (_q149_bit_set(words, F.col("p1"))
-                 & _q149_bit_set(words, F.col("p2")))
+                (_q149_bit_set("p1") & _q149_bit_set("p2"))
                 .cast("bigint")
                 .alias("_bloom"),
                 F.col("_me").isNotNull().cast("bigint").alias("_key"),
@@ -3448,19 +3460,13 @@ def bloom_decontaminate(
         .distinct()
         .join(gmap, "xh")
     )
-    bits = (
-        ev_keys.select(F.col("p1").alias("p"))
-        .unionAll(ev_keys.select(F.col("p2").alias("p")))
-        .distinct()
-    )
     ev = ev_keys.select("gk").distinct()
-    words = _q149_mask_words(bits)
     flagged_map = (
         gmap.join(F.broadcast(ev.withColumn("_e", F.lit(1))), "gk", "left")
+        .crossJoin(F.broadcast(_q149_mask(ev_keys)))
         .select(
             "xh",
-            (_q149_bit_set(words, F.col("p1"))
-             & _q149_bit_set(words, F.col("p2")))
+            (_q149_bit_set("p1") & _q149_bit_set("p2"))
             .cast("bigint")
             .alias("_bloom"),
             F.col("_e").isNotNull().cast("bigint").alias("_key"),

@@ -126,14 +126,14 @@ WHERE rk = 1
 def q41_centroid_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Assignment is a NARROW per-row argmin, not a join: collecting the
     # k centroids (model state, the k-means broadcast pattern) and
-    # folding them as one literal table turns the round-5 shape
+    # folding them as one literal table turns the join shape
     # (crossJoin ×k row expansion + row_number window = a k·n-row
     # shuffle) into a zero-shuffle select — measured 0.79 → 0.35 s at
     # sf0.1 and 1.75 → 1.23 s at 100×, and at 100 TB the shuffle it
     # deletes is k× the corpus. array_position takes the FIRST min, so
     # ties break to the lowest centroid_id exactly like the oracle's
     # ORDER BY dist_sq, centroid_id.
-    from dask_cuml_spark.functions.vector import matrix_lit
+    from dask_cuml_spark.functions.vector import array_lit, matrix_lit
 
     e = load_table(spark, sf_dir, "embeddings")
     rows = sorted(
@@ -141,7 +141,7 @@ def q41_centroid_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
         key=lambda r: r.vec_id,
     )
     cents = matrix_lit([r.embedding for r in rows])
-    ids = F.array(*[F.lit(int(r.vec_id)) for r in rows])
+    ids = array_lit([r.vec_id for r in rows])
     dists = F.transform(cents, lambda c: l2_sq(F.col("embedding"), c))
     md = F.array_min(dists)
     cid = F.element_at(ids, F.array_position(dists, md).cast("int"))
@@ -784,17 +784,19 @@ def q108_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # far tail before clustering/dedup" quality gate (mirrors the outlier
 # pre-filter ahead of SemDeDup-style pipelines; q108 is the
 # within-cluster dedup step, THIS is the global curation step before
-# it). Two-pass exact design, the q12 convention: pass 1 reduces the
-# table to one 64-double centroid row (partial+final agg of per-dim
-# avgs — the kmeans allreduce shape, no explode, no shuffle of the
-# vectors), pass 2 computes distances against the bit-exact centroid
-# literal (matrix_lit repr round-trip) and one exact percentile row.
-# Both driver fetches are model-state-sized (1 row each — the gated
-# .collect() class). At 100 TB swap percentile for approx_percentile
-# (the documented q12 substitute) and the plan is a pure two-scan
-# pipeline; distances stay engine-portable (functions.vector double
-# fold == the DuckDB list-lambda, verified bitwise) and the 6-dp round
-# absorbs the engines' aggregation-order jitter in the centroid.
+# it). Two-pass exact design, the q12 convention, entirely in the
+# plan (building the frame runs no job): pass 1 reduces the table to
+# one centroid row (per-dimension avgs over the exploded coordinates,
+# partially aggregated before the shuffle, so it moves ≤ d rows per
+# partition, never the vectors), crossJoined back as a broadcast;
+# pass 2 computes distances against it and one exact percentile row,
+# crossJoined the same way. An empty table yields an empty centroid
+# and so zero rows, with no special case. At 100 TB swap percentile
+# for approx_percentile (the documented q12 substitute) and the plan
+# is a pure two-scan pipeline; distances stay engine-portable
+# (functions.vector double fold == the DuckDB list-lambda, verified
+# bitwise) and the 6-dp round absorbs the engines' aggregation-order
+# jitter in the centroid.
 # ---------------------------------------------------------------------------
 _Q124_PCT = 0.99
 
@@ -823,29 +825,32 @@ FROM d, t
 """,
 )
 def q124_embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dask_cuml_spark.functions.vector import l2, matrix_lit
+    return _q124_outliers(load_table(spark, sf_dir, "embeddings"))
 
-    e = load_table(spark, sf_dir, "embeddings")
-    # pass 1: one centroid row (64 partial-aggregated means — the
-    # allreduce analogue; model-state-sized driver fetch)
-    head = e.select("embedding").first()
-    if head is None:  # degenerate input: no vectors → no outliers
-        return spark.createDataFrame(
-            [], "vec_id long, center_dist double, is_outlier int"
-        )
-    dim = len(head[0])
-    cen_row = e.agg(
-        *[F.avg(F.col("embedding")[i]).alias(f"c{i}") for i in range(dim)]
-    ).first()
-    cen = F.element_at(matrix_lit([[float(v) for v in cen_row]]), 1)
-    dists = e.select("vec_id", l2("embedding", cen).alias("dist"))
+
+def _q124_outliers(e: DataFrame) -> DataFrame:
+    from dask_cuml_spark.functions.vector import l2
+
+    # pass 1: one centroid row — the allreduce analogue as a partial+final
+    # per-dimension agg; sorting the (dim, mean) structs puts the means
+    # in dimension order
+    dims = (
+        e.select(F.posexplode("embedding").alias("i", "v"))
+        .groupBy("i")
+        .agg(F.avg(F.col("v").cast("double")).alias("m"))
+    )
+    cen = dims.agg(
+        F.array_sort(F.collect_list(F.struct("i", "m"))).alias("_c")
+    ).select(F.col("_c.m").alias("cen"))
+    dists = e.crossJoin(F.broadcast(cen)).select(
+        "vec_id", l2("embedding", "cen").alias("dist")
+    )
     # pass 2: exact interpolated percentile (== DuckDB QUANTILE_CONT)
-    # joined back IN-PLAN as a broadcast single-row fold — no driver
-    # round-trip for the threshold; approx_percentile is the 100 TB
-    # substitute, same as q12's documented trade
+    # joined back as a broadcast single-row fold; approx_percentile is
+    # the 100 TB substitute, same as q12's documented trade
     thr = dists.agg(F.percentile("dist", _Q124_PCT).alias("thr"))
-    # the flag compares the SAME 6-dp-rounded values the oracle rounds
-    # (advisor r8): centroid aggregation order differs between engines
+    # the flag compares the SAME 6-dp-rounded values the oracle rounds:
+    # centroid aggregation order differs between engines
     # by float jitter, and an unrounded comparison at the exact p99
     # boundary could flip is_outlier while center_dist still matched
     return dists.crossJoin(F.broadcast(thr)).select(

@@ -22,7 +22,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import dask_cuml_spark.queries  # noqa: E402,F401
-from dask_cuml_spark.benchlib import materialize  # noqa: E402
+from dask_cuml_spark.benchlib import materialize, max_job_id  # noqa: E402
 from dask_cuml_spark.plans.cost import scoped_caches  # noqa: E402
 from dask_cuml_spark.registry import QUERIES  # noqa: E402
 from dask_cuml_spark.session import get_spark  # noqa: E402
@@ -87,11 +87,10 @@ def main() -> None:
         with scoped_caches():
             materialize(QUERIES[n](spark, sf_dir))
 
-    st = sc.statusTracker()
     records = []
     for it in range(iters):
         for n in NAMES:
-            jobs_before = len(st.getJobIdsForGroup(None) or [])
+            jobs_before = max_job_id(spark)
             sc.setJobDescription(f"diag iter{it} {n}")
             done = threading.Event()
             t0 = time.perf_counter()
@@ -103,12 +102,11 @@ def main() -> None:
                 materialize(QUERIES[n](spark, sf_dir))
             dt = time.perf_counter() - t0
             done.set()
-            jobs_after = len(st.getJobIdsForGroup(None) or [])
             rec = {
                 "iter": it,
                 "q": n,
                 "sec": round(dt, 3),
-                "jobs": jobs_after - jobs_before,
+                "jobs": max_job_id(spark) - jobs_before,
                 "t_wall": round(time.time(), 2),
             }
             records.append(rec)

@@ -357,6 +357,42 @@ def test_adjusted_rand_score_known_values(spark):
     assert abs(adjusted_rand_score(rand, "label", "pred")) < 0.05
 
 
+def test_adjusted_rand_frame_matches_score_and_textbook(spark):
+    """The float API and the lazy one-row frame are one computation,
+    self-ARI is exactly 1.0, and the CUBE pair-count sums equal the
+    textbook contingency-table closed form computed here in Python."""
+    from collections import Counter
+
+    from dask_cuml_spark.operators.metrics import (
+        adjusted_rand_frame,
+        adjusted_rand_score,
+    )
+
+    e = load_table(spark, SF, "embeddings").withColumn(
+        "pred", (F.col("vec_id") * 7919) % 7
+    )
+    row = adjusted_rand_frame(e, "label", "pred").first()
+    assert adjusted_rand_score(e, "label", "pred") == row["ari"]
+    assert adjusted_rand_score(e, "label", "label") == 1.0
+    # no rows means no pairs to disagree on
+    assert adjusted_rand_score(e.filter(F.lit(False)), "label", "pred") == 1.0
+
+    pairs = [(r.label, r.pred) for r in e.select("label", "pred").collect()]
+
+    def comb2(x):
+        return x * (x - 1) / 2.0
+
+    sum_ij = sum(comb2(v) for v in Counter(pairs).values())
+    sum_a = sum(comb2(v) for v in Counter(a for a, _ in pairs).values())
+    sum_b = sum(comb2(v) for v in Counter(b for _, b in pairs).values())
+    expected = sum_a * sum_b / comb2(len(pairs))
+    max_index = (sum_a + sum_b) / 2.0
+    assert (row["sum_ij"], row["sum_a"], row["sum_b"], row["n"]) == (
+        sum_ij, sum_a, sum_b, len(pairs)
+    )
+    assert row["ari"] == (sum_ij - expected) / (max_index - expected)
+
+
 def test_merge_upsert_null_update_wins(spark):
     """CDC NULL semantics: a matched update row fully wins — an explicit
     NULL update value overwrites the target's non-NULL value (ADVICE r1)."""
@@ -864,6 +900,21 @@ def test_q124_embedding_outliers_invariants(spark):
     out = pdf[pdf.is_outlier == 1]
     assert 0 < len(out) <= max(1, int(n * 0.011) + 1)
     assert out.center_dist.min() > pdf[pdf.is_outlier == 0].center_dist.max()
+
+
+def test_q124_empty_input_gives_empty_typed_frame(spark):
+    """No vectors: the in-plan centroid is empty, so the body yields
+    zero rows with the query's schema and needs no special case."""
+    from dask_cuml_spark.queries.vector import _q124_outliers
+
+    empty = load_table(spark, SF, "embeddings").filter(F.lit(False))
+    out = _q124_outliers(empty)
+    assert out.collect() == []
+    assert [(f.name, f.dataType.simpleString()) for f in out.schema] == [
+        ("vec_id", "bigint"),
+        ("center_dist", "double"),
+        ("is_outlier", "int"),
+    ]
 
 
 def test_q121_gram_layout_branch(spark):
@@ -1854,6 +1905,24 @@ def test_matrix_lit_bit_exact_roundtrip(spark):
     for row_got, row_want in zip(got, vals):
         for g, w in zip(row_got, row_want):
             assert g == w and str(g) == str(float(w)), (g, w)
+
+
+def test_array_lit_round_trips_ints_and_quoted_strings(spark):
+    """array_lit's one SQL literal must read back exactly what the
+    per-element F.lit form would: quotes, backslashes and non-ascii in
+    strings survive the parser's unescaping, and ints keep Spark's
+    literal typing (int when they fit, widened to bigint otherwise)."""
+    from dask_cuml_spark.functions.vector import array_lit
+
+    strs = ["plain", "it's", "back\\slash", "\\'", "tōkyō", ""]
+    ints = [0, -7, 2**40]
+    row = spark.range(1).select(
+        array_lit(strs).alias("s"), array_lit(ints).alias("i")
+    ).first()
+    assert row.s == strs and row.i == ints
+    assert spark.range(1).select(array_lit([1, 2])).dtypes[0][1] == "array<int>"
+    with pytest.raises(TypeError, match="col 1"):
+        array_lit([1, None])
 
 
 def test_matrix_lit_rejects_non_finite(spark):
