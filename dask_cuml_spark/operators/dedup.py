@@ -48,12 +48,17 @@ def exact_dedup(
 
 def shingles(df: DataFrame, text_col: str = "text", n: int = 3) -> DataFrame:
     """Word n-gram shingles as an array column (built-ins only)."""
-    toks = F.split(F.col(text_col), " ")
+    toks = F.col("_toks")
     idx = F.sequence(F.lit(0), F.greatest(F.array_size(toks) - n, F.lit(0)))
     sh = F.transform(
         idx, lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n))
     )
-    return df.withColumn("shingles", F.array_distinct(sh))
+    # split once per row: the lambda reads the projected token column
+    return (
+        df.withColumn("_toks", F.split(F.col(text_col), " "))
+        .withColumn("shingles", F.array_distinct(sh))
+        .drop("_toks")
+    )
 
 
 def hashed_shingles(

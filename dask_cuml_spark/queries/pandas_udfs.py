@@ -1157,10 +1157,12 @@ def q151_paragraph_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         minhash_signatures,
     )
 
-    d = load_table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
+    d = (
+        load_table(spark, sf_dir, "documents")
+        .repartition(spark.sparkContext.defaultParallelism)
+        .select("doc_id", F.split(F.col("text"), " ").alias("toks"))
     )
-    toks = F.split(F.col("text"), " ")
+    toks = F.col("toks")
     n = F.array_size(toks)
     nblocks = F.ceil(n.cast("double") / _Q151_P).cast("int")
     blocks = d.select(

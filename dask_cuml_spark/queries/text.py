@@ -943,10 +943,12 @@ def q110_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 1.46 s total on one core at sf0.1). At deployment scale the scan
     # already has many splits and this repartition is a no-op-sized
     # shuffle relative to the compute it unlocks.
-    d = load_table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
+    d = (
+        load_table(spark, sf_dir, "documents")
+        .repartition(spark.sparkContext.defaultParallelism)
+        .select("doc_id", tokens().alias("toks"))
     )
-    toks = tokens()
+    toks = F.col("toks")
     n = F.array_size(toks)
     tri_total = F.greatest(n - 2, F.lit(1))
     trigrams = F.transform(
@@ -1251,10 +1253,12 @@ _Q121_BUCKETS = 32
 def _q121_hashed_grams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One exploded pass: (doc_id, _h) with _h = xxhash64 of the
     distinct token-array 5-gram slices (no per-gram string building)."""
-    d = load_table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
+    d = (
+        load_table(spark, sf_dir, "documents")
+        .repartition(spark.sparkContext.defaultParallelism)
+        .select("doc_id", tokens().alias("toks"))
     )
-    toks = tokens()
+    toks = F.col("toks")
     n = F.array_size(toks)
     grams = F.array_distinct(
         F.transform(
@@ -1277,10 +1281,10 @@ def _positioned_grams(
     ONLY the appended files' docs through the same construction)."""
     if d is None:
         d = load_table(spark, sf_dir, "documents")
-    d = d.repartition(
-        spark.sparkContext.defaultParallelism
+    d = d.repartition(spark.sparkContext.defaultParallelism).select(
+        "doc_id", tokens().alias("toks")
     )
-    toks = tokens()
+    toks = F.col("toks")
     n = F.array_size(toks)
     grams = F.transform(
         F.sequence(F.lit(0), F.greatest(n - _Q121_N, F.lit(0))),
@@ -3182,42 +3186,37 @@ def q148_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# q149 — Bloom-filter decontamination (Bloom 1970; the bounded-memory
-# membership structure production decontamination uses when the eval
-# n-gram set outgrows an exact broadcast set — the structure behind
-# e.g. BigQuery/Spark bloom-filter joins and the "bloom filter" pass
-# in large-corpus decontamination writeups). Completes the membership
-# trio: q139 = exact broadcast hash set, q112 = stored LSH index,
-# q149 = fixed m-bit filter whose size is INDEPENDENT of corpus and
-# eval-set growth.
+# q149 — Bloom-filter decontamination (Bloom 1970): a fixed m-bit
+# membership filter whose size is independent of corpus and eval-set
+# growth. Completes the membership trio: q139 = exact broadcast hash
+# set, q112 = stored LSH index, q149 = Bloom filter.
 #
-# Everything is exact integer arithmetic both engines state
-# identically, so the oracle reproduces the filter BIT-FOR-BIT —
-# including its false positives, which are part of Bloom semantics,
-# not noise (the q144 collision-reproduction convention):
-#   tid       = per-token ascii polyfold (the q144 fold)
-#   gram key  = fold of the 5-token tid slice mod a < 2^30 prime
+# Every step is exact integer arithmetic both engines state
+# identically, so the oracle reproduces the filter bit for bit,
+# including its false positives (the q144 collision-reproduction
+# convention):
+#   tid       = per-token fold (a*31 + ascii(c)) % _Q144_MOD; the
+#               modulus is < 2^20, so tid < 2^20
+#   gram key  = fold (g*10007 + tid) % _Q149_GMOD over the 5-token tid
+#               slice; the modulus is < 2^30, so gk < 2^30 and
+#               g*10007 + tid < 2^44 is exact in int64
 #   positions = double hashing h1 + i·h2 over m = 2^16 bits, k = 2
-#     (Kirsch & Mitzenmacher 2006: two hashes suffice)
+#               (Kirsch & Mitzenmacher 2006: two hashes suffice)
 # Eval slice = doc_id % 97 == 0 (the q139 slice); train docs report
-# per-doc gram counts, Bloom hits, and exact-key hits. n_key_hits ≤
-# n_bloom_hits per doc BY CONSTRUCTION (no false negatives) — the
-# spread between the two columns is the measured FP audit.
+# per-doc gram counts, Bloom hits and exact-key hits. Every eval key
+# sets both of its bits, so there are no false negatives and
+# n_key_hits ≤ n_bloom_hits per doc; the spread between the two is the
+# measured false-positive audit.
 #
-# Scale: the mask is m bits = m/64 int64 words (8 KB) at ANY
-# corpus/eval size — always broadcastable, which is the operator's
-# reason to exist. It is a mergeable aggregate built in the plan and
-# crossJoined back as one broadcast row, so building the query runs no
-# job. The train pass is one narrow exploded projection + one broadcast
-# LEFT join against the distinct eval keys (no row multiplication) +
-# two getbit tests against the mask row + the canonical per-doc
-# partial+final agg; nothing corpus-sized shuffles. The per-char fold
-# lambda is the oracle-parity tax (the q129/q144 adjudication):
-# production swaps xxhash64(slice) for the gram key — same plan shape,
-# no per-char work — and keeps the m-bit layout.
+# The mask is m/64 int64 words (8 KB) for any corpus: positions lie in
+# [0, m). It is a one-row in-plan aggregate crossJoined back as a
+# broadcast, so building the query runs no job. The train pass is one
+# narrow explode + a broadcast LEFT join against the distinct eval keys
+# + two getbit tests against the mask row + the per-doc agg; nothing
+# corpus-sized shuffles.
 # ---------------------------------------------------------------------------
 _Q149_M = 1 << 16  # Bloom bits
-_Q149_GMOD = 999999937  # gram-key fold prime (< 2^30: products stay exact)
+_Q149_GMOD = 999999937  # gram-key fold prime, < 2^30
 
 
 @register(
@@ -3272,37 +3271,35 @@ GROUP BY k.doc_id
 """,
 )
 def q149_bloom_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Registered ORACLE mode: portable ascii-fold gram keys so DuckDB
-    reproduces the filter bit-for-bit. Production mode (xxhash64 keys,
-    zero string/fold work — the scan-speed shape) is
-    ``bloom_decontaminate(..., key_mode='xxhash64')`` below; the
-    measured 100x pair is in SCALEBENCH/PLANS (the q129
-    oracle-mode-vs-production-mode adjudication class)."""
+    """Registered oracle mode: portable ascii-fold gram keys, so DuckDB
+    reproduces the filter bit for bit. ``bloom_decontaminate(...,
+    key_mode='xxhash64')`` is the same plan with xxhash64 gram keys."""
     return bloom_decontaminate(spark, sf_dir, key_mode="portable")
 
 
 def _q149_mask(ev_keys: DataFrame) -> DataFrame:
     """One-row frame: the m-bit Bloom mask of the eval keys' (p1, p2)
-    positions as ``_mask``, an array of m/64 int64 words (8 KB). The
-    mask is built in the plan as a mergeable aggregate — OR-fold each
-    word's bits, then one row of words — so building the query runs no
-    job. Bounded for ANY corpus: positions live in [0, m), so the word
-    table never exceeds m/64 entries and the dense array is exactly
-    m/64 words; bit_or is idempotent, so duplicate positions need no
-    distinct."""
-    words = (
-        ev_keys.select(F.explode(F.array("p1", "p2")).alias("p"))
-        .groupBy(F.expr("shiftright(p, 6) AS w"))
-        .agg(F.expr("bit_or(shiftleft(1L, int(p & 63))) AS v"))
+    positions as ``_mask``, an array of exactly m/64 int64 words. Each
+    word w ∈ [0, m/64) gets a zero row before the bit_or, so every word
+    is present and the sorted word list is the dense array; positions
+    lie in [0, m), so no other word exists for any corpus. bit_or is
+    idempotent, so duplicate positions need no distinct."""
+    bits = ev_keys.select(F.explode(F.array("p1", "p2")).alias("p")).select(
+        F.expr("shiftright(p, 6) AS w"),
+        F.expr("shiftleft(1L, int(p & 63)) AS b"),
     )
-    # dense word array, so each test is an O(1) array index where a map
-    # lookup would scan up to m/64 keys
-    return words.agg(
-        F.expr("map_from_entries(collect_list(struct(w, v))) AS _sparse")
-    ).select(
-        F.expr(
-            f"transform(sequence(0L, {(_Q149_M >> 6) - 1}L), "
-            "w -> coalesce(element_at(_sparse, w), 0L)) AS _mask"
+    zeros = ev_keys.sparkSession.range(_Q149_M >> 6).select(
+        F.col("id").alias("w"), F.lit(0).cast("bigint").alias("b")
+    )
+    return (
+        bits.unionByName(zeros)
+        .groupBy("w")
+        .agg(F.expr("bit_or(b) AS v"))
+        .agg(
+            F.expr(
+                "transform(array_sort(collect_list(struct(w, v))), "
+                "s -> s.v) AS _mask"
+            )
         )
     )
 
@@ -3315,175 +3312,84 @@ def _q149_bit_set(p: str):
     )
 
 
+def _q149_keyed(d: DataFrame, key_mode: str) -> DataFrame:
+    """(doc_id, gk, p1, p2) per 5-gram occurrence of ``d``'s text.
+
+    The tokens are split once per document and, in portable mode,
+    char-folded once per token into ``tids``; each gram key then folds
+    its 5-element slice. key_mode 'xxhash64' keys each gram by
+    xxhash64 of its token slice instead, with no per-char work."""
+    if key_mode == "portable":
+        toks = F.transform(
+            tokens(),
+            lambda t: F.aggregate(
+                F.transform(
+                    F.split(t, ""), lambda c: F.ascii(c).cast("bigint")
+                ),
+                F.lit(0).cast("bigint"),
+                lambda a, c: (a * 31 + c) % _Q144_MOD,
+            ),
+        )
+
+        def key(s):
+            return F.aggregate(
+                s,
+                F.lit(0).cast("bigint"),
+                lambda a, t: (a * 10007 + t) % _Q149_GMOD,
+            )
+    elif key_mode == "xxhash64":
+        toks, key = tokens(), F.xxhash64
+    else:
+        raise ValueError(f"unknown key_mode: {key_mode}")
+    seq = F.sequence(
+        F.lit(0), F.greatest(F.array_size("toks") - _Q121_N, F.lit(0))
+    )
+    gk = F.col("gk")
+    # pmod: xxhash64 keys can be negative; portable keys are ≥ 0, where
+    # pmod equals the oracle's %
+    p1 = F.pmod(gk, F.lit(_Q149_M))
+    return d.select("doc_id", toks.alias("toks")).select(
+        "doc_id",
+        F.explode(
+            F.transform(seq, lambda i: key(F.slice("toks", i + 1, _Q121_N)))
+        ).alias("gk"),
+    ).select(
+        "doc_id",
+        "gk",
+        p1.alias("p1"),
+        ((p1 + 1 + F.pmod(gk, F.lit(_Q149_M - 1))) % _Q149_M).alias("p2"),
+    )
+
+
 def bloom_decontaminate(
-    spark: SparkSession,
-    sf_dir: str,
-    key_mode: str = "xxhash64",
-    fold_strategy: str = "auto",
+    spark: SparkSession, sf_dir: str, key_mode: str = "xxhash64"
 ) -> DataFrame:
-    # CORPUS-side work never folds characters: occurrences carry only
-    # xxhash64(token-slice) — the 8-byte JVM-codegen key every gram
-    # family uses (q121/q134). In 'portable' (oracle) mode the ascii
-    # fold runs once per DISTINCT gram and joins back by the 8-byte
-    # key; the distinct-gram frame is corpus-sized in general (the
-    # scale fixture makes cross-copy grams DISJOINT by design), so
-    # this mode pays an inherent per-string fold tax for cross-engine
-    # bit-parity — DuckDB pays the same fold on the same frame, and
-    # the first cut that folded per OCCURRENCE measured 129.9 s at
-    # 100x vs ~56 s for the per-distinct shape. In 'xxhash64'
-    # (production) mode there are NO strings and NO folds anywhere:
-    # gram key = xxhash64(slice), Bloom positions are integer exprs on
-    # it, and the whole query is one narrow explode + the 8 KB mask
-    # row + the canonical per-doc agg — the scan-speed shape.
+    """Per train doc: gram count, Bloom hits and exact eval-key hits
+    against the Bloom filter of the eval slice's gram keys. The two
+    key modes share one plan and differ only in the gram-key
+    expression (``_q149_keyed``)."""
     d = load_table(spark, sf_dir, "documents").repartition(
         spark.sparkContext.defaultParallelism
     )
-    from dask_cuml_spark.io import source_size_bytes
-    from dask_cuml_spark.plans.cost import persist_for_reuse
-
-    small = source_size_bytes(sf_dir, "documents") <= (256 << 20)
-    toks = tokens()
-    n = F.array_size(toks)
-    seq = F.sequence(F.lit(0), F.greatest(n - _Q121_N, F.lit(0)))
-    occ = d.select(
-        "doc_id",
-        F.explode(
-            F.transform(seq, lambda i: F.xxhash64(F.slice(toks, i + 1, _Q121_N)))
-        ).alias("xh"),
-    )
-    if key_mode == "xxhash64":
-        # production: positions straight off the 8-byte key — one
-        # narrow explode, no strings, no map join
-        keyed = occ.select(
-            "doc_id",
-            F.col("xh").alias("gk"),
-            F.pmod(F.col("xh"), F.lit(_Q149_M)).alias("p1"),
-            (
-                (
-                    F.pmod(F.col("xh"), F.lit(_Q149_M))
-                    + 1
-                    + F.pmod(F.col("xh"), F.lit(_Q149_M - 1))
-                )
-                % _Q149_M
-            ).alias("p2"),
-        )
-        if small:
-            keyed = persist_for_reuse(keyed)
-        ev_rows = keyed.filter(F.col("doc_id") % 97 == 0)
-        ev = ev_rows.select("gk").distinct()
-        train = (
-            keyed.filter(F.col("doc_id") % 97 != 0)
-            .join(F.broadcast(ev.withColumn("_me", F.lit(1))), "gk", "left")
-            .crossJoin(F.broadcast(_q149_mask(ev_rows)))
-            .select(
-                "doc_id",
-                (_q149_bit_set("p1") & _q149_bit_set("p2"))
-                .cast("bigint")
-                .alias("_bloom"),
-                F.col("_me").isNotNull().cast("bigint").alias("_key"),
-            )
-        )
-        return _q149_doc_agg(train)
-    if key_mode != "portable":
-        raise ValueError(f"unknown key_mode: {key_mode}")
-    if small:
-        # occ feeds the eval-key resolution AND the train scan
-        occ = persist_for_reuse(occ)
-    gstr = d.select(
-        F.explode(
-            F.transform(
-                seq,
-                lambda i: F.struct(
-                    F.xxhash64(F.slice(toks, i + 1, _Q121_N)).alias("xh"),
-                    F.concat_ws(" ", F.slice(toks, i + 1, _Q121_N)).alias(
-                        "gs"
-                    ),
-                ),
-            )
-        ).alias("g")
-    ).select("g.xh", "g.gs").distinct()
-    # the oracle folds PER-TOKEN tids then folds the tid slice;
-    # replicate exactly: fold each token of the gram, then combine.
-    # Two bit-identical strategies (the q131/q145 size-gate pattern):
-    # 'expr' mirrors the oracle SQL as interpreted HOF lambdas — the
-    # proof path, but CodegenFallback per CHARACTER (~5 s / 10M
-    # elements, PLANS.md) — and 'kernel' runs the same recurrence as
-    # numpy column sweeps (operators/strfold.py; strategy agreement +
-    # driver-twin replay pytest-pinned). 'auto' flips at GATE_BYTES.
-    from dask_cuml_spark.operators.quantize import GATE_BYTES
-    from dask_cuml_spark.operators.strfold import fold_gram_keys
-
-    if fold_strategy == "auto":
-        big = source_size_bytes(sf_dir, "documents") > GATE_BYTES
-        fold_strategy = "kernel" if big else "expr"
-    if fold_strategy == "kernel":
-        folded = fold_gram_keys(
-            gstr, "gs", "gk", _Q144_MOD, _Q149_GMOD
-        ).select("xh", "gk")
-    else:
-        tid_fold = F.aggregate(
-            F.transform(
-                F.split("gs", " "),
-                lambda t: F.aggregate(
-                    F.transform(
-                        F.split(t, ""), lambda c: F.ascii(c).cast("bigint")
-                    ),
-                    F.lit(0).cast("bigint"),
-                    lambda a, c: (a * F.lit(31) + c) % F.lit(_Q144_MOD),
-                ),
-            ),
-            F.lit(0).cast("bigint"),
-            lambda a, t: (a * F.lit(10007) + t) % F.lit(_Q149_GMOD),
-        )
-        folded = gstr.select("xh", tid_fold.alias("gk"))
-    gmap = folded.select(
-        "xh",
-        "gk",
-        (F.col("gk") % _Q149_M).alias("p1"),
-        (
-            (F.col("gk") % _Q149_M + 1 + F.col("gk") % (_Q149_M - 1))
-            % _Q149_M
-        ).alias("p2"),
-    )
-    # the distinct-gram map feeds the eval-key resolution AND the flag
-    # computation below; without the pin the string distinct (the
-    # mode's one inherently corpus-sized leg) re-runs per consumer.
-    gmap = persist_for_reuse(gmap)
-    # membership is a property of the GRAM, not the occurrence — so
-    # resolve the Bloom bits and exact-key flags ON THE MAP
-    # (model-state-sized joins), and the corpus side stays ONE explode
-    # + one broadcast join + the canonical per-doc agg. No
-    # corpus-sized frame is ever persisted or re-consumed.
-    ev_keys = (
-        occ.filter(F.col("doc_id") % 97 == 0)
-        .select("xh")
-        .distinct()
-        .join(gmap, "xh")
-    )
-    ev = ev_keys.select("gk").distinct()
-    flagged_map = (
-        gmap.join(F.broadcast(ev.withColumn("_e", F.lit(1))), "gk", "left")
-        .crossJoin(F.broadcast(_q149_mask(ev_keys)))
+    keyed = _q149_keyed(d, key_mode)
+    # keyed is not pinned: the doc_id filters push below the
+    # repartition, so the train branch folds only train docs and the
+    # two eval branches only the 1/97 eval slice; a pin would
+    # materialize every gram row of the corpus
+    ev_rows = keyed.filter(F.col("doc_id") % 97 == 0)
+    ev = ev_rows.select("gk").distinct()
+    train = (
+        keyed.filter(F.col("doc_id") % 97 != 0)
+        .join(F.broadcast(ev.withColumn("_me", F.lit(1))), "gk", "left")
+        .crossJoin(F.broadcast(_q149_mask(ev_rows)))
         .select(
-            "xh",
+            "doc_id",
             (_q149_bit_set("p1") & _q149_bit_set("p2"))
             .cast("bigint")
             .alias("_bloom"),
-            F.col("_e").isNotNull().cast("bigint").alias("_key"),
+            F.col("_me").isNotNull().cast("bigint").alias("_key"),
         )
     )
-    # broadcast the flagged map below the source-size gate; above it
-    # the 8-byte-key join is the q134 dup-join class and AQE picks
-    # the strategy
-    if small:
-        flagged_map = F.broadcast(flagged_map)
-    train = occ.filter(F.col("doc_id") % 97 != 0).join(flagged_map, "xh")
-    return _q149_doc_agg(train)
-
-
-def _q149_doc_agg(train: DataFrame) -> DataFrame:
-    """Shared per-doc tail: (doc_id, _bloom, _key) occurrence flags →
-    gram counts, Bloom hits, exact-key hits, hit fraction."""
     return train.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_grams"),
         F.sum("_bloom").alias("n_bloom_hits"),
@@ -3551,10 +3457,12 @@ GROUP BY doc_id
 """,
 )
 def q150_paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load_table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
+    d = (
+        load_table(spark, sf_dir, "documents")
+        .repartition(spark.sparkContext.defaultParallelism)
+        .select("doc_id", tokens().alias("toks"))
     )
-    toks = tokens()
+    toks = F.col("toks")
     n = F.array_size(toks)
     nblocks = F.ceil(n.cast("double") / _Q150_P).cast("int")
     seq = F.sequence(F.lit(0), nblocks - 1)

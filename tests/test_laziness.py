@@ -21,9 +21,9 @@ from dask_cuml_spark.registry import QUERIES
 TABLES = ("documents", "embeddings", "customer")
 
 
-def _q149(key_mode, fold_strategy):
+def _q149(key_mode):
     return lambda spark, sf_dir: T.bloom_decontaminate(
-        spark, sf_dir, key_mode=key_mode, fold_strategy=fold_strategy
+        spark, sf_dir, key_mode=key_mode
     )
 
 
@@ -33,10 +33,8 @@ def _registered(name):
 
 # builder -> construction jobs allowed
 BUILDERS = {
-    "q149 portable/expr": (_q149("portable", "expr"), 0),
-    "q149 portable/kernel": (_q149("portable", "kernel"), 0),
-    "q149 xxhash64/expr": (_q149("xxhash64", "expr"), 0),
-    "q149 xxhash64/kernel": (_q149("xxhash64", "kernel"), 0),
+    "q149 portable": (_q149("portable"), 0),
+    "q149 xxhash64": (_q149("xxhash64"), 0),
     "q124": (_registered("q124_embedding_outliers"), 0),
     "q102": (_registered("q102_adjusted_rand"), 0),
     # q45 collects its B side (the vectors every A row is scored

@@ -3377,62 +3377,51 @@ def test_q147_tercile_structure(spark):
         assert all(a >= b for a, b in zip(s, s[1:])), lang
 
 
-def test_q149_fold_strategy_agreement_and_twin_replay(spark):
-    """The portable gram-key fold's two strategies — the
-    oracle-mirroring HOF expr and the numpy column-sweep kernel
-    (operators/strfold.py) — must be BIT-IDENTICAL end-to-end (the
-    q131/adc convention: integer fold, so whole-output equality is
-    exact), and the driver-side twin must replay the expr fold exactly
-    on edge-shaped strings (short grams, repeated/empty tokens,
-    non-ascii codepoints)."""
+def test_q149_portable_key_replay(spark):
+    """q149's portable gram keys and Bloom positions, as the Spark plan
+    computes them, must equal a pure-Python twin of the oracle's
+    per-token ``tids`` fold and 5-token gram fold, occurrence by
+    occurrence, on edge-shaped texts: fewer than 5 tokens, repeated
+    tokens, a double space (an empty token), non-ASCII code points,
+    NUL inside a token, and an empty text."""
     import dask_cuml_spark.queries.text as T
-    from dask_cuml_spark.operators.strfold import gram_keys_of
 
-    a = {
-        r.doc_id: tuple(r)
-        for r in T.bloom_decontaminate(
-            spark, SF, key_mode="portable", fold_strategy="expr"
-        ).collect()
-    }
-    b = {
-        r.doc_id: tuple(r)
-        for r in T.bloom_decontaminate(
-            spark, SF, key_mode="portable", fold_strategy="kernel"
-        ).collect()
-    }
-    assert a == b
-    # driver-twin replay vs the expr fold on hand-built edge strings
+    def twin(text):
+        tids = []
+        for tok in text.split(" "):
+            a = 0
+            for ch in tok:
+                a = (a * 31 + ord(ch)) % T._Q144_MOD
+            tids.append(a)
+        keys = []
+        for i in range(max(len(tids) - T._Q121_N, 0) + 1):
+            g = 0
+            for t in tids[i : i + T._Q121_N]:
+                g = (g * 10007 + t) % T._Q149_GMOD
+            h1 = g % T._Q149_M
+            keys.append((g, h1, (h1 + 1 + g % (T._Q149_M - 1)) % T._Q149_M))
+        return keys
+
     cases = [
-        "alpha beta gamma delta epsilon",
+        "alpha beta gamma delta epsilon zeta eta",
         "a",
         "x y",
-        "same same same same same",
+        "same same same same same same",
         "café naïve über tōkyō motör",
-        "a  b",  # double space -> empty middle token, split-compatible
-        "nul\x00inside plain",  # NUL inside a token -> per-string path
+        "a  b c d e",
+        "nul\x00inside plain",
+        "",
     ]
-    expr = F.aggregate(
-        F.transform(
-            F.split("gs", " "),
-            lambda t: F.aggregate(
-                F.transform(
-                    F.split(t, ""), lambda c: F.ascii(c).cast("bigint")
-                ),
-                F.lit(0).cast("bigint"),
-                lambda acc, c: (acc * F.lit(31) + c) % F.lit(T._Q144_MOD),
-            ),
-        ),
-        F.lit(0).cast("bigint"),
-        lambda acc, t: (acc * F.lit(10007) + t) % F.lit(T._Q149_GMOD),
+    d = spark.createDataFrame(
+        list(enumerate(cases)), "doc_id bigint, text string"
     )
-    want = [
-        r.gk
-        for r in spark.createDataFrame([(c,) for c in cases], "gs string")
-        .select(expr.alias("gk"))
-        .collect()
+    got = {i: [] for i in range(len(cases))}
+    for r in T._q149_keyed(d, "portable").collect():
+        got[r.doc_id].append((r.gk, r.p1, r.p2))
+    want = {i: twin(c) for i, c in enumerate(cases)}
+    assert got == want, [
+        (c, got[i], want[i]) for i, c in enumerate(cases) if got[i] != want[i]
     ]
-    got = gram_keys_of(cases, T._Q144_MOD, T._Q149_GMOD).tolist()
-    assert got == want, list(zip(cases, got, want))
 
 
 def test_serving_topk_invariants(spark):
