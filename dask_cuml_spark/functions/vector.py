@@ -60,8 +60,21 @@ def norm_sq(a: Column | str) -> Column:
     return dot(a, a)
 
 
-def _sql_scalar(v, where: str) -> str:
-    """One Spark SQL literal for an int, a double or a string."""
+def sql_lit(v, where: str = "") -> str:
+    """One Spark SQL literal, as text, for an int, a double, a string,
+    a list or tuple (``array(...)``) or a str-keyed dict
+    (``named_struct(...)``), nested freely — the text form behind
+    array_lit/matrix_lit, for callers that splice a literal into a
+    larger SQL expression. ``where`` names the position in errors."""
+    if isinstance(v, dict):
+        return "named_struct(" + ",".join(
+            f"{sql_lit(str(k))},{sql_lit(x, f'{where}{k}: ')}"
+            for k, x in v.items()
+        ) + ")"
+    if isinstance(v, (list, tuple)):
+        return "array(" + ",".join(
+            sql_lit(x, f"{where}col {j}") for j, x in enumerate(v)
+        ) + ")"
     if isinstance(v, str):
         # the parser unescapes backslash sequences inside quotes
         return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
@@ -76,12 +89,6 @@ def _sql_scalar(v, where: str) -> str:
             )
         return f"{f!r}D"
     raise TypeError(f"no SQL literal for {type(v).__name__} at {where}")
-
-
-def _array_sql(values, where: str) -> str:
-    return "array(" + ",".join(
-        _sql_scalar(v, f"{where}col {j}") for j, v in enumerate(values)
-    ) + ")"
 
 
 def array_lit(values) -> Column:
@@ -101,7 +108,7 @@ def array_lit(values) -> Column:
     (e.g. a degenerate k-means fit with an empty cluster) — they are
     rejected up front with the offending position named instead.
     """
-    return F.expr(_array_sql(list(values), ""))
+    return F.expr(sql_lit(list(values)))
 
 
 def matrix_lit(mat) -> Column:
@@ -109,7 +116,7 @@ def matrix_lit(mat) -> Column:
     the row-wise form of array_lit (an 8×64 centroid table costs one
     py4j call instead of ~2.8k)."""
     rows = [
-        _array_sql([float(v) for v in r], f"row {i}, ")
+        sql_lit([float(v) for v in r], f"row {i}, ")
         for i, r in enumerate(mat)
     ]
     return F.expr(f"array({','.join(rows)})")

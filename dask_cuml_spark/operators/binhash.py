@@ -36,6 +36,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
+from dask_cuml_spark.functions.vector import sql_lit
+
 _SIG_SCHEMA = StructType(
     [
         StructField("vec_id", LongType()),
@@ -105,24 +107,6 @@ def sign_signatures(
     return out
 
 
-def hamming_to(sig_col: str, query_words: list[int]):
-    """JVM-codegen Hamming distance from a signature COLUMN to a
-    LITERAL query signature: sum of bit_count(word XOR lit) — the
-    16-byte-scan ranking expression (no kernel, no LUT)."""
-    parts = [
-        F.bit_count(
-            F.element_at(F.col(sig_col), w + 1).bitwiseXOR(
-                F.lit(int(qw)).cast("long")
-            )
-        )
-        for w, qw in enumerate(query_words)
-    ]
-    total = parts[0]
-    for p in parts[1:]:
-        total = total + p
-    return total.cast("int")
-
-
 _CAND_SCHEMA = StructType(
     [
         StructField("neighbor_id", LongType()),
@@ -143,11 +127,14 @@ def hamming_candidates(
     the global per-query top-``shortlist`` window. Two strategies, one
     contract (the q138 adc_candidates convention):
 
-    expr    — one projection emitting an array of per-query structs
-              (XOR + POPCNT per word, whole-stage codegen), exploded.
-              The serving story: ranking reads nbits/8 bytes per row
-              with two JVM instructions per word. Emits n x |Q| rows
-              into the window exchange — fine at fixture scale.
+    expr    — one projection: the query signatures are ONE array
+              literal, and ``transform`` over it emits a (query_id,
+              ham) struct per query (ham = sum of bit_count(word XOR
+              query word), whole-stage codegen), exploded. The serving
+              story: ranking reads nbits/8 bytes per row with two JVM
+              instructions per word, and building the plan costs the
+              same few py4j calls whatever |Q|. Emits n x |Q| rows into the
+              window exchange — fine at fixture scale.
     kernel  — Arrow-batched numpy scan emitting only the per-BATCH
               top-``shortlist`` per query, so the window exchange
               carries batches x |Q| x shortlist rows instead of
@@ -158,22 +145,21 @@ def hamming_candidates(
     Null signatures (from null input vectors) are unsearchable and are
     excluded HERE, identically in both strategies — otherwise the expr
     path would rank null ham first (Spark nulls-first asc) while the
-    kernel's np.stack would crash: the q131 auto-gate-divergence class
-    (advisor r11), closed at the shared entry instead.
+    kernel's np.stack would crash.
     """
     sigs = sigs.filter(F.col("sig").isNotNull())
     if strategy == "expr":
-        per_q = F.array(
-            *[
-                F.struct(
-                    F.lit(int(qid)).cast("long").alias("query_id"),
-                    hamming_to("sig", words).cast("long").alias("ham"),
-                )
-                for qid, words in queries
-            ]
+        qlit = sql_lit(
+            [{"q": int(qid), "w": [int(w) for w in words]} for qid, words in queries]
+        )
+        per_q = F.expr(
+            f"explode(transform({qlit}, s -> named_struct("
+            "'query_id', CAST(s.q AS BIGINT), "
+            "'ham', CAST(aggregate(zip_with(sig, s.w, "
+            "(a, b) -> bit_count(a ^ b)), 0, (acc, x) -> acc + x) AS BIGINT))))"
         )
         return sigs.select(
-            F.col("vec_id").alias("neighbor_id"), F.explode(per_q).alias("s")
+            F.col("vec_id").alias("neighbor_id"), per_q.alias("s")
         ).select("neighbor_id", F.col("s.query_id"), F.col("s.ham"))
 
     qw = np.array([words for _qid, words in queries], dtype=np.int64)

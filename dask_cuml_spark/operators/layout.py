@@ -82,16 +82,25 @@ def drop_table_and_location(spark, table: str) -> None:
         shutil.rmtree(loc, ignore_errors=True)
 
 
+def tables_with_prefix(spark, prefix: str) -> list[str]:
+    """Catalog table names starting with ``prefix``. SHOW TABLES is
+    answered by the catalog alone (no Spark job), unlike
+    ``spark.catalog.listTables()``, which collects a DataFrame and pays
+    one py4j call per row."""
+    rows = spark.sql(f"SHOW TABLES LIKE '{prefix}*'").collect()
+    return [r.tableName for r in rows if r.tableName.startswith(prefix)]
+
+
 def drop_stale_layouts(spark, prefix: str, keep_tag: str) -> list[str]:
     """Drop catalog tables named ``{prefix}_{tag}`` whose tag is not
     ``keep_tag`` — layouts built from a source parquet that has since
     been rewritten (their fingerprint tag no longer matches, so no
     query will ever read them again)."""
     dropped = []
-    for t in spark.catalog.listTables():
-        if t.name.startswith(prefix) and not t.name.endswith(keep_tag):
-            spark.sql(f"DROP TABLE IF EXISTS {t.name}")
-            dropped.append(t.name)
+    for name in tables_with_prefix(spark, prefix):
+        if not name.endswith(keep_tag):
+            spark.sql(f"DROP TABLE IF EXISTS {name}")
+            dropped.append(name)
     return dropped
 
 
@@ -182,24 +191,50 @@ def source_files(sf_dir: str, name) -> dict[str, tuple[int, int]]:
     return out
 
 
+#: table property of a layout's primary table holding its source-file
+#: manifest (JSON object relpath -> [size, mtime_ns])
+MANIFEST_PROPERTY = "dcs.source_manifest"
+
+
 def write_layout_manifest(
-    spark, sf_dir: str, source_name: str, manifest_table: str
+    spark, sf_dir: str, source_name, table: str
 ) -> None:
-    """Persist the source-file manifest next to a layout table — the
-    append-only detector's baseline for the NEXT provisioning call (a
-    few rows: one per source part file)."""
-    rows = [
-        (f, s, m)
-        for f, (s, m) in sorted(source_files(sf_dir, source_name).items())
-    ]
-    # drop-through first (the r9 LOCATION_ALREADY_EXISTS class): a
-    # manifest dir left in the warehouse by a PREVIOUS session has no
-    # catalog entry in this one, and overwrite-saveAsTable refuses the
-    # orphaned location
-    drop_table_and_location(spark, manifest_table)
-    spark.createDataFrame(
-        rows, "file string, size bigint, mtime_ns bigint"
-    ).write.mode("overwrite").saveAsTable(manifest_table)
+    """Store the source-file manifest the layout ``table`` was derived
+    from as a property of that table — the append-only detector's
+    baseline for the NEXT provisioning call. A catalog-only write (no
+    Spark job); the manifest lives and dies with its table, so a
+    dropped or renamed layout can never leave a stale baseline behind."""
+    import json
+
+    from dask_cuml_spark.functions.vector import sql_lit
+
+    value = json.dumps(
+        dict(sorted(source_files(sf_dir, source_name).items())),
+        separators=(",", ":"),
+    )
+    # spark.sql substitutes ${...} references in the statement text,
+    # string literals included; a JSON escape keeps '$' out of it
+    value = value.replace("$", "\\u0024")
+    spark.sql(
+        f"ALTER TABLE {table} SET TBLPROPERTIES "
+        f"({sql_lit(MANIFEST_PROPERTY)} = {sql_lit(value)})"
+    )
+
+
+def read_layout_manifest(spark, table: str) -> dict | None:
+    """relpath -> (size, mtime_ns) as stored by write_layout_manifest,
+    or None when ``table`` carries no manifest. Catalog-only read (no
+    Spark job)."""
+    import json
+
+    props = {
+        r.key: r.value
+        for r in spark.sql(f"SHOW TBLPROPERTIES {table}").collect()
+    }
+    raw = props.get(MANIFEST_PROPERTY)
+    if raw is None:
+        return None
+    return {f: (s, m) for f, (s, m) in json.loads(raw).items()}
 
 
 class IncrementalNotApplicable(Exception):
@@ -216,25 +251,24 @@ def incremental_refresh(
     sf_dir: str,
     source_name: str,
     table_prefix: str,
-    manifest_for,
     new_table: str,
     append_fn,
     sibling_renames=None,
 ) -> float | None:
-    """Generic append-only incremental layout refresh (the grams/signs
-    shared mechanism — r13; the q112 Θ(|new batch|) posture applied to
-    stored layouts).
+    """Generic append-only incremental layout refresh: per-batch work
+    is Θ(|new files|), never Θ(corpus).
 
     Detection is strictly conservative: a previous-tag table under
-    ``table_prefix`` qualifies only if its stored manifest is a
-    strict SUBSET of the current source file set with every old file
-    bit-unchanged (size + mtime_ns) — any mutation of an existing
-    file disqualifies the fast path and the caller falls back to a
-    full rebuild, so correctness never depends on the detector. On a
+    ``table_prefix`` qualifies only if the manifest stored on it (the
+    MANIFEST_PROPERTY table property) is a strict SUBSET of the current
+    source file set with every old file bit-unchanged (size +
+    mtime_ns) — any mutation of an existing file, or a table with no
+    manifest, disqualifies the fast path and the caller falls back to
+    a full rebuild, so correctness never depends on the detector. On a
     hit, ``append_fn(spark, new_parquet_paths, old_table)`` writes
     ONLY the new files' derived rows into the existing table (Spark
     appends preserve bucket specs), the table is renamed to the new
-    fingerprint tag, and the manifest sidecar follows.
+    fingerprint tag, and the grown manifest is stored on it.
 
     Returns write seconds on a refresh, None when not applicable.
     MUST run before the stale-GC keyed on the new tag — the GC would
@@ -249,16 +283,13 @@ def incremental_refresh(
     if spark.catalog.tableExists(new_table):
         return 0.0
     cur = source_files(sf_dir, source_name)
-    for t in spark.catalog.listTables():
-        if not t.name.startswith(table_prefix) or t.name.endswith(new_tag):
+    for name in tables_with_prefix(spark, table_prefix):
+        if name.endswith(new_tag):
             continue
-        old_tag = t.name.rsplit("_", 1)[1]
-        mf = manifest_for(old_tag)
-        if not spark.catalog.tableExists(mf):
+        old_tag = name.rsplit("_", 1)[1]
+        old = read_layout_manifest(spark, name)
+        if old is None:
             continue
-        old = {
-            r.file: (r.size, r.mtime_ns) for r in spark.table(mf).collect()
-        }
         if not set(old) <= set(cur) or len(old) == len(cur):
             continue
         if any(cur[f] != old[f] for f in old):
@@ -267,9 +298,8 @@ def incremental_refresh(
         # build (interrupted full write, dropped sidecar): the fast
         # path must NOT run — an append_fn's mode("append") write
         # would silently RECREATE the sibling holding only this
-        # batch's delta, corrupting every additive sidecar consumer
-        # (the r16 eight-layout chaos test caught exactly this for the
-        # postings stats table). Full-rebuild territory.
+        # batch's delta, corrupting every additive sidecar consumer.
+        # Full-rebuild territory.
         if any(
             not spark.catalog.tableExists(f"{p}{old_tag}")
             for p in sibling_renames or ()
@@ -279,8 +309,8 @@ def incremental_refresh(
         # only write-markers (_SUCCESS, .crc dotfiles) may be skipped:
         # a new non-marker file we don't append from would be recorded
         # as consumed by the manifest below yet never processed —
-        # silently excluded from the layout forever (advisor r13).
-        # Unknown file kinds are full-rebuild territory, not skips.
+        # silently excluded from the layout forever. Unknown file kinds
+        # are full-rebuild territory, not skips.
         if any(
             not f.endswith(".parquet")
             and not os.path.basename(f).startswith(("_", "."))
@@ -293,17 +323,17 @@ def incremental_refresh(
             # exclude marker-NAMED parquet too (".hidden.parquet"):
             # Spark's directory readers skip dot/underscore files, so
             # appending their rows would make the stored layout a
-            # SUPERSET of the plain table (r14 self-review)
+            # SUPERSET of the plain table
             if f.endswith(".parquet")
             and not os.path.basename(f).startswith(("_", "."))
         ]
         t0 = _time.perf_counter()
         if new_files:
             try:
-                append_fn(spark, new_files, t.name)
+                append_fn(spark, new_files, name)
             except IncrementalNotApplicable:
                 return None  # precondition failed pre-write → rebuild
-        spark.sql(f"ALTER TABLE {t.name} RENAME TO {new_table}")
+        spark.sql(f"ALTER TABLE {name} RENAME TO {new_table}")
         # multi-table layouts (pq: codes + model sidecar) carry their
         # sibling tables to the new tag in the same refresh — the
         # sidecar's CONTENT is untouched (FAISS add() never retrains)
@@ -314,7 +344,6 @@ def incremental_refresh(
             )
             if spark.catalog.tableExists(old_sib):
                 spark.sql(f"ALTER TABLE {old_sib} RENAME TO {new_sib}")
-        write_layout_manifest(spark, sf_dir, source_name, manifest_for(new_tag))
-        spark.sql(f"DROP TABLE IF EXISTS {mf}")
+        write_layout_manifest(spark, sf_dir, source_name, new_table)
         return _time.perf_counter() - t0
     return None

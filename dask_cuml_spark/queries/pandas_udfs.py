@@ -762,26 +762,11 @@ def q112_index_layout(
         .sortBy("band_hash")
         .saveAsTable(bt)
     )
-    # manifest sidecar (r16): the append-only detector's baseline for
-    # q112_index_refresh — before r16 this was the ONLY layout without
-    # an incremental path, so an ingest stream refreshing it paid a
-    # full Θ(corpus) rebuild every micro-batch
+    # the append-only detector's baseline for q112_index_refresh
     from dask_cuml_spark.operators.layout import write_layout_manifest
 
-    write_layout_manifest(
-        spark,
-        sf_dir,
-        "documents.parquet",
-        _q112_manifest_table(bt.rsplit("_", 1)[1]),
-    )
+    write_layout_manifest(spark, sf_dir, "documents.parquet", bt)
     return _time.perf_counter() - t0
-
-
-def _q112_manifest_table(tag: str) -> str:
-    p = _Q112_PARAMS
-    return (
-        f"dcs_q112mf_{p['n']}_{p['num_hashes']}_{p['bands']}_{tag}"
-    )
 
 
 def q112_index_refresh(spark: SparkSession, sf_dir: str) -> float | None:
@@ -860,7 +845,6 @@ def q112_index_refresh(spark: SparkSession, sf_dir: str) -> float | None:
         sf_dir,
         "documents.parquet",
         f"dcs_{stem}_bands_",
-        _q112_manifest_table,
         bt,
         append,
         sibling_renames=(f"dcs_{stem}_shingles_",),

@@ -132,10 +132,6 @@ def _q02_bucket_tables(sf_dir: str) -> tuple[str, str]:
     return f"dcs_q02_orders_{tag}", f"dcs_q02_lineitem_{tag}"
 
 
-def _q02_manifest_table(tag: str) -> str:
-    return f"dcs_q02mf_{tag}"
-
-
 def q02_layout_refresh(spark: SparkSession, sf_dir: str) -> float | None:
     """Append-only incremental refresh of the co-located fact layout
     (r13 — the fourth consumer of operators/layout.incremental_refresh,
@@ -185,7 +181,6 @@ def q02_layout_refresh(spark: SparkSession, sf_dir: str) -> float | None:
         sf_dir,
         ("orders.parquet", "lineitem.parquet"),
         "dcs_q02_orders_",
-        _q02_manifest_table,
         bo,
         append,
         sibling_renames=("dcs_q02_lineitem_",),
@@ -233,15 +228,12 @@ def q02_bucketed_layout(
             .sortBy(key)
             .saveAsTable(tbl)
         )
-    # manifest sidecar over BOTH sources: the append-only detector's
-    # baseline for the NEXT provisioning call (q02_layout_refresh)
+    # the append-only detector's baseline for q02_layout_refresh,
+    # over BOTH sources
     from dask_cuml_spark.operators.layout import write_layout_manifest
 
     write_layout_manifest(
-        spark,
-        sf_dir,
-        ("orders.parquet", "lineitem.parquet"),
-        _q02_manifest_table(bo.rsplit("_", 1)[1]),
+        spark, sf_dir, ("orders.parquet", "lineitem.parquet"), bo
     )
     return _time.perf_counter() - t0
 # The pruned 2-column customer map is ~1/10 of the full-table estimate;

@@ -1313,10 +1313,6 @@ def _gram_table(sf_dir: str) -> str:
     return f"dcs_grams{_Q121_N}pos_{tag}"
 
 
-def _gram_manifest_table(tag: str) -> str:
-    return f"dcs_gramsmf{_Q121_N}_{tag}"
-
-
 def gram_layout_refresh(spark: SparkSession, sf_dir: str) -> float | None:
     """Append-only incremental refresh of the positioned-gram layout
     (r13 verdict task 4 — the q112 Θ(|new batch|) posture generalized
@@ -1350,7 +1346,6 @@ def gram_layout_refresh(spark: SparkSession, sf_dir: str) -> float | None:
         sf_dir,
         "documents.parquet",
         f"dcs_grams{_Q121_N}pos_",
-        _gram_manifest_table,
         _gram_table(sf_dir),
         append,
     )
@@ -1386,16 +1381,10 @@ def gram_layout(
         .sortBy("_h")
         .saveAsTable(tbl)
     )
-    # manifest sidecar: the append-only detector's baseline for the
-    # NEXT provisioning call (gram_layout_refresh above)
+    # the append-only detector's baseline for gram_layout_refresh
     from dask_cuml_spark.operators.layout import write_layout_manifest
 
-    write_layout_manifest(
-        spark,
-        sf_dir,
-        "documents.parquet",
-        _gram_manifest_table(tbl.rsplit("_", 1)[1]),
-    )
+    write_layout_manifest(spark, sf_dir, "documents.parquet", tbl)
     return _time.perf_counter() - t0
 
 
@@ -2898,10 +2887,6 @@ def _pack_tables(sf_dir: str) -> tuple[str]:
     return (f"dcs_pack{_Q126_BLOCK}_{tag}",)
 
 
-def _pack_manifest_table(tag: str) -> str:
-    return f"dcs_packmf{_Q126_BLOCK}_{tag}"
-
-
 def pack_layout(spark: SparkSession, sf_dir: str) -> float:
     """One-time packing-manifest build. Returns write seconds."""
     import time as _time
@@ -2917,12 +2902,7 @@ def pack_layout(spark: SparkSession, sf_dir: str) -> float:
     _placements_plain(spark, sf_dir).write.mode("overwrite").saveAsTable(
         tbl
     )
-    write_layout_manifest(
-        spark,
-        sf_dir,
-        "documents.parquet",
-        _pack_manifest_table(tbl.rsplit("_", 1)[1]),
-    )
+    write_layout_manifest(spark, sf_dir, "documents.parquet", tbl)
     return _time.perf_counter() - t0
 
 
@@ -2964,7 +2944,6 @@ def pack_layout_refresh(spark: SparkSession, sf_dir: str) -> float | None:
         sf_dir,
         "documents.parquet",
         f"dcs_pack{_Q126_BLOCK}_",
-        _pack_manifest_table,
         tbl,
         append,
     )
@@ -3989,10 +3968,6 @@ def _postings_tables(sf_dir: str) -> tuple[str, str]:
     return (f"dcs_postings_{tag}", f"dcs_poststats_{tag}")
 
 
-def _postings_manifest_table(tag: str) -> str:
-    return f"dcs_postingsmf_{tag}"
-
-
 def _postings_frame(
     spark: SparkSession, sf_dir: str, d: DataFrame | None = None
 ) -> DataFrame:
@@ -4048,12 +4023,7 @@ def postings_layout(spark: SparkSession, sf_dir: str) -> float:
     _postings_stats_delta(
         load_table(spark, sf_dir, "documents")
     ).write.mode("overwrite").saveAsTable(stbl)
-    write_layout_manifest(
-        spark,
-        sf_dir,
-        "documents.parquet",
-        _postings_manifest_table(ptbl.rsplit("_", 1)[1]),
-    )
+    write_layout_manifest(spark, sf_dir, "documents.parquet", ptbl)
     return _time.perf_counter() - t0
 
 
@@ -4096,7 +4066,6 @@ def postings_layout_refresh(spark: SparkSession, sf_dir: str) -> float | None:
         sf_dir,
         "documents.parquet",
         "dcs_postings_",
-        _postings_manifest_table,
         ptbl,
         append,
         sibling_renames=("dcs_poststats_",),
@@ -4207,10 +4176,6 @@ def _cms_tables(sf_dir: str) -> tuple[str]:
     return (f"dcs_cmssketch{_Q158_D}x{_Q158_W}_{tag}",)
 
 
-def _cms_manifest_table(tag: str) -> str:
-    return f"dcs_cmsmf{_Q158_D}x{_Q158_W}_{tag}"
-
-
 def _cms_counters(
     spark: SparkSession, sf_dir: str, d: DataFrame | None = None
 ) -> DataFrame:
@@ -4256,12 +4221,7 @@ def cms_layout(spark: SparkSession, sf_dir: str) -> float:
     (tbl,) = _cms_tables(sf_dir)
     drop_table_and_location(spark, tbl)
     _cms_counters(spark, sf_dir).write.mode("overwrite").saveAsTable(tbl)
-    write_layout_manifest(
-        spark,
-        sf_dir,
-        "documents.parquet",
-        _cms_manifest_table(tbl.rsplit("_", 1)[1]),
-    )
+    write_layout_manifest(spark, sf_dir, "documents.parquet", tbl)
     return _time.perf_counter() - t0
 
 
@@ -4284,7 +4244,6 @@ def cms_layout_refresh(spark: SparkSession, sf_dir: str) -> float | None:
         sf_dir,
         "documents.parquet",
         f"dcs_cmssketch{_Q158_D}x{_Q158_W}_",
-        _cms_manifest_table,
         tbl,
         append,
     )

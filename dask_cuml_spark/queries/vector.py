@@ -1434,21 +1434,11 @@ def pq_layout(
     spark.createDataFrame(
         rows, "kind string, s int, j int, center array<double>"
     ).write.mode("overwrite").saveAsTable(model_tbl)
-    # manifest sidecar: the append-only detector's baseline for the
-    # NEXT provisioning call (pq_layout_refresh below — FAISS add())
+    # the append-only detector's baseline for pq_layout_refresh
     from dask_cuml_spark.operators.layout import write_layout_manifest
 
-    write_layout_manifest(
-        spark,
-        sf_dir,
-        "embeddings.parquet",
-        _pq_manifest_table(codes_tbl.rsplit("_", 1)[1], m, k),
-    )
+    write_layout_manifest(spark, sf_dir, "embeddings.parquet", codes_tbl)
     return _time.perf_counter() - t0
-
-
-def _pq_manifest_table(tag: str, m: int = 8, k: int = 16) -> str:
-    return f"dcs_pqmf{m}x{k}_{tag}"
 
 
 def pq_layout_refresh(
@@ -1520,7 +1510,6 @@ def pq_layout_refresh(
         sf_dir,
         "embeddings.parquet",
         f"dcs_pqcodes{m}x{k}_",
-        lambda tag: _pq_manifest_table(tag, m, k),
         codes_tbl,
         append,
         sibling_renames=(model_prefix,),
@@ -1886,21 +1875,11 @@ def signature_layout(
     sign_signatures(_par(e), "vec_id", "embedding", planes).write.mode(
         "overwrite"
     ).saveAsTable(tbl)
-    # manifest sidecar: the append-only detector's baseline for the
-    # NEXT provisioning call (signature_layout_refresh below)
+    # the append-only detector's baseline for signature_layout_refresh
     from dask_cuml_spark.operators.layout import write_layout_manifest
 
-    write_layout_manifest(
-        spark,
-        sf_dir,
-        "embeddings.parquet",
-        _sig_manifest_table(tbl.rsplit("_", 1)[1], nbits, seed),
-    )
+    write_layout_manifest(spark, sf_dir, "embeddings.parquet", tbl)
     return _time.perf_counter() - t0
-
-
-def _sig_manifest_table(tag: str, nbits: int = 128, seed: int = 7) -> str:
-    return f"dcs_signsmf{nbits}s{seed}_{tag}"
 
 
 def signature_layout_refresh(
@@ -1944,7 +1923,6 @@ def signature_layout_refresh(
         sf_dir,
         "embeddings.parquet",
         f"dcs_signs{nbits}s{seed}_",
-        lambda tag: _sig_manifest_table(tag, nbits, seed),
         tbl,
         append,
     )

@@ -95,6 +95,13 @@ def get_spark(
         ).config("spark.sql.parquet.compression.codec", codec)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
+    # Python workers inherit PYTHONPATH from the JVM this call launches:
+    # with the package root on it, a pandas-UDF closure that references
+    # this package unpickles whatever the driver's working directory
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    paths = os.environ.get("PYTHONPATH", "")
+    if root not in paths.split(os.pathsep):
+        os.environ["PYTHONPATH"] = os.pathsep.join(p for p in (root, paths) if p)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

@@ -1082,6 +1082,199 @@ def test_ensure_layouts_idempotent_and_stale_gc(spark, tmp_path):
     spark.sql(f"DROP TABLE IF EXISTS {tbl2}")
 
 
+def test_ensure_layouts_steady_state_launches_no_jobs(spark, tmp_path):
+    """The per-batch provisioning call of an ingest stream pays no
+    Spark job when nothing changed: the stale-GC and the refresh
+    detector read the catalog with SHOW TABLES (not listTables, which
+    collects a DataFrame: one job plus one per partition, per call), and
+    each layout's manifest is a table property read with SHOW
+    TBLPROPERTIES (not a sidecar table collected back)."""
+    import os
+    import shutil
+
+    from conftest import SF_SMOKE
+
+    import dask_cuml_spark.queries.text as T
+    import dask_cuml_spark.queries.vector as V
+    from dask_cuml_spark.benchlib import max_job_id
+    from dask_cuml_spark.layouts import ensure_layouts
+    from dask_cuml_spark.operators.layout import (
+        read_layout_manifest,
+        source_files,
+    )
+
+    sf = str(tmp_path / "sf")
+    os.makedirs(sf)
+    for t in ("documents", "embeddings"):
+        shutil.copy(f"{SF_SMOKE}/{t}.parquet", f"{sf}/{t}.parquet")
+    three = ("grams", "signs", "cms")
+    first = ensure_layouts(spark, sf, layouts=three)
+    assert all(first[n] > 0.0 for n in three)
+    tables = {
+        "documents.parquet": (T._gram_table(sf), T._cms_tables(sf)[0]),
+        "embeddings.parquet": V._sig_tables(sf),
+    }
+
+    j0 = max_job_id(spark)
+    again = ensure_layouts(spark, sf, layouts=three)
+    assert max_job_id(spark) == j0
+    assert again == {n: 0.0 for n in three}
+
+    j0 = max_job_id(spark)
+    got = {
+        t: read_layout_manifest(spark, t)
+        for ts in tables.values()
+        for t in ts
+    }
+    assert max_job_id(spark) == j0
+    for src, ts in tables.items():
+        for t in ts:
+            assert got[t] == source_files(sf, src), t
+    for ts in tables.values():
+        for t in ts:
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
+def test_layout_manifest_property_round_trip(spark, tmp_path):
+    """The source-file manifest is a property of the layout's primary
+    table: it equals source_files() after a full build, the renamed
+    new-tag table carries the grown manifest after an append, a table
+    without it falls back to the full rebuild, and part-file names the
+    SQL text must escape (quote, backslash, '${...}') round-trip."""
+    import os
+
+    import pyarrow.parquet as pq_mod
+    from conftest import SF_SMOKE
+
+    import dask_cuml_spark.queries.text as T
+    from dask_cuml_spark.layouts import ensure_layouts
+    from dask_cuml_spark.operators.layout import (
+        MANIFEST_PROPERTY,
+        drop_table_and_location,
+        read_layout_manifest,
+        source_files,
+        write_layout_manifest,
+    )
+
+    sf = str(tmp_path / "sf")
+    ddir = os.path.join(sf, "documents.parquet")
+    os.makedirs(ddir)
+    t = pq_mod.read_table(f"{SF_SMOKE}/documents.parquet")
+    pq_mod.write_table(t.slice(0, 300), os.path.join(ddir, "part-0.parquet"))
+
+    assert ensure_layouts(spark, sf, layouts=("grams",))["grams"] > 0.0
+    tbl1 = T._gram_table(sf)
+    assert read_layout_manifest(spark, tbl1) == source_files(
+        sf, "documents.parquet"
+    )
+
+    # append + rename: the new-tag table carries the grown manifest
+    pq_mod.write_table(
+        t.slice(300, 100), os.path.join(ddir, "part-1.parquet")
+    )
+    assert ensure_layouts(spark, sf, layouts=("grams",))["grams"] > 0.0
+    tbl2 = T._gram_table(sf)
+    assert not spark.catalog.tableExists(tbl1)
+    grown = source_files(sf, "documents.parquet")
+    assert len(grown) == 2 and read_layout_manifest(spark, tbl2) == grown
+
+    # no manifest → no fast path → the full writer rebuilds
+    spark.sql(
+        f"ALTER TABLE {tbl2} UNSET TBLPROPERTIES ('{MANIFEST_PROPERTY}')"
+    )
+    assert read_layout_manifest(spark, tbl2) is None
+    pq_mod.write_table(t.slice(400), os.path.join(ddir, "part-2.parquet"))
+    assert T.gram_layout_refresh(spark, sf) is None
+    calls = []
+    real = T.gram_layout
+
+    def _spy(sp, sd):
+        calls.append(sd)
+        return real(sp, sd)
+
+    T.gram_layout = _spy
+    try:
+        assert ensure_layouts(spark, sf, layouts=("grams",))["grams"] > 0.0
+    finally:
+        T.gram_layout = real
+    assert calls == [sf]
+    tbl3 = T._gram_table(sf)
+    assert read_layout_manifest(spark, tbl3) == source_files(
+        sf, "documents.parquet"
+    )
+    stored = sorted(map(tuple, spark.table(tbl3).collect()))
+    fresh = sorted(map(tuple, T._positioned_grams(spark, sf).collect()))
+    assert stored == fresh and len(stored) > 0
+    spark.sql(f"DROP TABLE IF EXISTS {tbl3}")
+
+    # names that need escaping in the ALTER TABLE statement's text
+    odd = str(tmp_path / "odd")
+    os.makedirs(os.path.join(odd, "t.parquet"))
+    names = ("it's.parquet", "back\\slash.parquet", "${spark.app.name}.parquet")
+    for i, n in enumerate(names):
+        with open(os.path.join(odd, "t.parquet", n), "w") as fh:
+            fh.write("x" * (i + 1))
+    probe = "dcs_manifest_probe"
+    drop_table_and_location(spark, probe)
+    spark.range(1).write.saveAsTable(probe)
+    try:
+        write_layout_manifest(spark, odd, "t.parquet", probe)
+        want = source_files(odd, "t.parquet")
+        assert {os.path.basename(f) for f in want} == set(names)
+        assert read_layout_manifest(spark, probe) == want
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {probe}")
+
+
+def test_get_spark_puts_package_on_worker_path(tmp_path):
+    """A driver that imports the package by sys.path from a working
+    directory outside the repository (no PYTHONPATH) must still run
+    pandas-UDF queries: their closures reference this package, so the
+    Python workers must be able to import it."""
+    import os
+    import subprocess
+    import sys
+    import textwrap
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = tmp_path / "drive.py"
+    script.write_text(
+        textwrap.dedent(
+            f"""
+            import sys
+            sys.path.insert(0, {repo!r})
+            from dask_cuml_spark.operators.binhash import (
+                hyperplanes,
+                sign_signatures,
+            )
+            from dask_cuml_spark.session import get_spark
+
+            spark = get_spark("worker-path", master="local[1]",
+                              shuffle_partitions=1)
+            df = spark.createDataFrame(
+                [(1, [1.0, -1.0])], "vec_id long, embedding array<double>"
+            )
+            rows = sign_signatures(
+                df, "vec_id", "embedding", hyperplanes(64, 2)
+            ).collect()
+            spark.stop()
+            print("rows", len(rows))
+            """
+        )
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_DRIVER_MEMORY"] = "512m"
+    r = subprocess.run(
+        [sys.executable, str(script)],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert r.returncode == 0 and "rows 1" in r.stdout, r.stderr[-4000:]
+
+
 def test_gram_layout_incremental_refresh(spark, tmp_path):
     """r13 (verdict task 4): an APPEND-ONLY source change (new part
     files, old files bit-unchanged) refreshes the grams layout by
@@ -1136,7 +1329,6 @@ def test_gram_layout_incremental_refresh(spark, tmp_path):
     # idempotent after refresh
     assert ensure_layouts(spark, sf, layouts=("grams",))["grams"] == 0.0
     spark.sql(f"DROP TABLE IF EXISTS {tbl2}")
-    spark.sql(f"DROP TABLE IF EXISTS {T._gram_manifest_table(tbl2.rsplit('_', 1)[1])}")
 
 
 def test_signs_layout_incremental_refresh(spark, tmp_path):
@@ -1194,9 +1386,6 @@ def test_signs_layout_incremental_refresh(spark, tmp_path):
     # idempotent after refresh
     assert ensure_layouts(spark, sf, layouts=("signs",))["signs"] == 0.0
     spark.sql(f"DROP TABLE IF EXISTS {tbl2}")
-    spark.sql(
-        f"DROP TABLE IF EXISTS {V._sig_manifest_table(tbl2.rsplit('_', 1)[1])}"
-    )
 
 
 def test_ensure_layouts_heals_partial_multitable(spark, tmp_path):
@@ -1236,10 +1425,6 @@ def test_ensure_layouts_heals_partial_multitable(spark, tmp_path):
     assert from_layout and coded.count() > 0
     for t in (codes_tbl, model_tbl):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
-    spark.sql(
-        "DROP TABLE IF EXISTS "
-        + V._pq_manifest_table(codes_tbl.rsplit("_", 1)[1])
-    )
 
 
 def test_incremental_refresh_unknown_append_rebuilds(spark, tmp_path):
@@ -1300,10 +1485,6 @@ def test_incremental_refresh_unknown_append_rebuilds(spark, tmp_path):
     n_docs = load_table(spark, sf, "documents").count()
     assert n_docs == 400  # Spark read the extension-less part too
     spark.sql(f"DROP TABLE IF EXISTS {tbl2}")
-    spark.sql(
-        "DROP TABLE IF EXISTS "
-        + T._gram_manifest_table(tbl2.rsplit("_", 1)[1])
-    )
 
 
 def test_pq_layout_incremental_refresh(spark, tmp_path):
@@ -1376,7 +1557,7 @@ def test_pq_layout_incremental_refresh(spark, tmp_path):
     norm = lambda rows: sorted((r.vec_id, r.cell_id, tuple(r.codes)) for r in rows)  # noqa: E731
     assert norm(spark.table(codes2).collect()) == norm(fresh)
     assert ensure_layouts(spark, sf, layouts=("pq",))["pq"] == 0.0
-    for tbl in (codes2, model2, V._pq_manifest_table(codes2.rsplit("_", 1)[1])):
+    for tbl in (codes2, model2):
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
 
 
@@ -1430,7 +1611,7 @@ def test_q02_layout_incremental_refresh(spark, tmp_path):
         got = sorted(map(tuple, spark.table(tbl).collect()))
         assert got == src and len(got) > 0, t
     assert ensure_layouts(spark, sf, layouts=("q02",))["q02"] == 0.0
-    for tbl in (bo2, bl2, R._q02_manifest_table(bo2.rsplit("_", 1)[1])):
+    for tbl in (bo2, bl2):
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
 
 
@@ -1481,9 +1662,6 @@ def test_pack_layout_incremental_refresh_and_interleave_fallback(
     assert stored == fresh
     assert ensure_layouts(spark, sf, layouts=("pack",))["pack"] == 0.0
     spark.sql(f"DROP TABLE IF EXISTS {tbl2}")
-    spark.sql(
-        f"DROP TABLE IF EXISTS {T._pack_manifest_table(tbl2.rsplit('_', 1)[1])}"
-    )
 
     # --- interleaved ids: precondition fails pre-write → full rebuild
     sf2 = str(tmp_path / "sf2")
@@ -1505,9 +1683,6 @@ def test_pack_layout_incremental_refresh_and_interleave_fallback(
     }
     assert got == want and len(got) == t.num_rows
     spark.sql(f"DROP TABLE IF EXISTS {tbl3}")
-    spark.sql(
-        f"DROP TABLE IF EXISTS {T._pack_manifest_table(tbl3.rsplit('_', 1)[1])}"
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -3918,16 +4093,6 @@ def test_ingest_stream_end_to_end(spark, tmp_path):
 
     for t in (gt, st, codes_tbl, model_tbl, pt, pptbl, pstbl):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
-    for fn, tag_tbl in (
-        (T._gram_manifest_table, gt),
-        (V._sig_manifest_table, st),
-        (V._pq_manifest_table, codes_tbl),
-        (T._pack_manifest_table, pt),
-        (T._postings_manifest_table, pptbl),
-    ):
-        spark.sql(
-            "DROP TABLE IF EXISTS " + fn(tag_tbl.rsplit("_", 1)[1])
-        )
 
 
 def test_ingest_stream_second_run_never_clobbers_first(spark, tmp_path):
@@ -4517,10 +4682,7 @@ def test_postings_layout_serving_and_incremental_refresh(spark, tmp_path):
     )
     assert served2 == plain2
 
-    for t in (
-        ptbl2, stbl2,
-        T._postings_manifest_table(ptbl2.rsplit("_", 1)[1]),
-    ):
+    for t in (ptbl2, stbl2):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
@@ -4605,10 +4767,6 @@ def test_cms_layout_additive_refresh(spark, tmp_path):
         map(tuple, T.q160_cms_point_query(spark, sf).collect())
     )
     assert served2 == plain2
-    spark.sql(
-        "DROP TABLE IF EXISTS "
-        + T._cms_manifest_table(tbl.rsplit("_", 1)[1])
-    )
 
 
 def test_audio_fingerprints_hand_built_and_strictness(spark):
@@ -4945,7 +5103,7 @@ def test_ingest_stream_all_eight_layouts_chaos(spark, tmp_path):
     assert spark.table(bl).count() == srcs["lineitem"].num_rows
     assert stats_b[0]["refresh_sec"]["q02"] == 0.0
 
-    # cleanup: drop every layout table + manifest for this tmp corpus
+    # cleanup: drop every layout table (its manifest goes with it)
     for tname in (
         T._gram_table(sf), st, *V._pq_tables(sf), T._pack_tables(sf)[0],
         pptbl, pstbl, ctbl, _bt, q112_st, bo, bl,
