@@ -23,6 +23,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from dask_cuml_spark.functions.vector import rows_lit
+
 
 def global_row_number(
     df: DataFrame,
@@ -55,7 +57,7 @@ def global_row_number(
     for r in counts:
         offsets.append((r["_pid"], acc))
         acc += r["_cnt"]
-    off_df = spark.createDataFrame(offsets, "_pid int, _off long")
+    off_df = rows_lit(spark, offsets, "_pid int, _off long")
     out = (
         local.join(F.broadcast(off_df), "_pid")
         .withColumn(rn_col, (F.col("_lrn") + F.col("_off")).cast("long"))

@@ -10,6 +10,10 @@ are oracle-safe without rounding.
 
 No Python UDFs here: at 100 TB these expressions run inside whole-stage
 codegen; an equivalent pandas_udf would pay Arrow serialization per batch.
+
+Driver-side values enter a plan only through the literal helpers below:
+sql_lit/array_lit/matrix_lit for one value, rows_lit for a small table
+of rows (a LocalRelation — executing it launches no job).
 """
 
 from __future__ import annotations
@@ -17,8 +21,9 @@ from __future__ import annotations
 import math
 import numbers
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 def _to_col(c: Column | str) -> Column:
@@ -120,3 +125,22 @@ def matrix_lit(mat) -> Column:
         for i, r in enumerate(mat)
     ]
     return F.expr(f"array({','.join(rows)})")
+
+
+def rows_lit(spark: SparkSession, rows, schema) -> DataFrame:
+    """Driver-built ``rows`` (tuples; ``schema`` is DDL text or a
+    StructType) as a LocalRelation: one Arrow table typed by ``schema``,
+    so executing it launches no Spark job (a list passed to
+    createDataFrame is a Python-RDD scan, one Python-worker job per
+    execution) and int64 stays exact beside nulls (pandas would widen
+    it to float64). Same rows and schema as the list form, empty too."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if not isinstance(schema, StructType):
+        schema = StructType.fromDDL(schema)
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows],
+        schema=to_arrow_schema(schema),
+    )
+    return spark.createDataFrame(table, schema)

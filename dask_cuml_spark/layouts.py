@@ -102,8 +102,7 @@ def ensure_layouts(
         _pack_tables,
         _cms_tables,
         _postings_tables,
-        _Q158_D,
-        _Q158_W,
+        _CMS_PREFIX,
         cms_layout,
         cms_layout_refresh,
         gram_layout,
@@ -165,7 +164,7 @@ def ensure_layouts(
         "signs": ("dcs_signs128s7_",),
         "pack": (f"dcs_pack{_Q126_BLOCK}_",),
         "postings": ("dcs_postings_", "dcs_poststats_"),
-        "cms": (f"dcs_cmssketch{_Q158_D}x{_Q158_W}_",),
+        "cms": (_CMS_PREFIX,),
     }
     out: dict[str, float] = {}
     for name in layouts:

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from dask_cuml_spark.functions.vector import rows_lit
 from dask_cuml_spark.operators.gemm import pairwise_similarity_above
 from dask_cuml_spark.plans.cost import scoped_cache
 
@@ -339,8 +340,10 @@ def dbscan(
                         if a not in labels or lb < labels[a]:
                             labels[a] = lb
                 id_t = dict(df.dtypes)[id_col]
-                assigned = df.sparkSession.createDataFrame(
-                    list(labels.items()), f"id {id_t}, label {id_t}"
+                assigned = rows_lit(
+                    df.sparkSession,
+                    list(labels.items()),
+                    f"id {id_t}, label {id_t}",
                 )
                 return (
                     df.select(F.col(id_col).alias("id"))

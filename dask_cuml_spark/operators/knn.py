@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from dask_cuml_spark.functions.vector import l2_sq
+from dask_cuml_spark.functions.vector import l2_sq, rows_lit
 
 # expr/gemm crossover for dense-kernel candidates (see brute_force_knn
 # docstring for the bracketing measurements) — deliberately lower than
@@ -558,7 +558,7 @@ def classwise_nearest(
             # empty frame instead of letting numpy raise an AxisError
             # on a 0-row (Q*Q).sum(1) (advisor r16).
             return _classwise_final(
-                spark.createDataFrame([], schema), id_col
+                rows_lit(spark, [], schema), id_col
             )
         Q = np.array(pdf["_v"].tolist(), dtype=np.float64)
         if Q.nbytes > max_broadcast_bytes * 2:

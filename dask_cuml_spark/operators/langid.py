@@ -26,6 +26,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from dask_cuml_spark.functions.vector import rows_lit
+
 
 def char_ngrams(
     df: DataFrame,
@@ -172,12 +174,13 @@ def classify(
     oracle mirrors; use it when the label set itself is too large to
     collect (not the lang-ID regime).
     """
+    spark = ngrams.sparkSession
     if strategy == "pivot":
         rows = profiles.collect()
         langs = sorted({r["cand"] for r in rows})
         if not langs:  # empty profile → no doc can score a hit
-            return ngrams.sparkSession.createDataFrame(
-                [], f"{id_col} long, lang_pred string, score long"
+            return rows_lit(
+                spark, [], f"{id_col} long, lang_pred string, score long"
             )
         if len(langs) > 63:
             # the bitmask ships as ONE signed-long column: lane 63 is the
@@ -193,8 +196,8 @@ def classify(
                 r["ngram"], 0
             ) | (1 << lane[r["cand"]])
         prof = (
-            ngrams.sparkSession.createDataFrame(
-                list(mask_by_ngram.items()), "ngram string, _mask long"
+            rows_lit(
+                spark, list(mask_by_ngram.items()), "ngram string, _mask long"
             )
             .select(F.xxhash64("ngram").alias("_h"), "_mask")
         )

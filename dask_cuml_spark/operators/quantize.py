@@ -42,6 +42,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from dask_cuml_spark.functions.vector import matrix_lit, rows_lit
+
 #: expr/kernel crossover (bytes of source parquet) — knn.py's 16 MB idiom
 GATE_BYTES = 16 * 1024 * 1024
 
@@ -444,8 +446,6 @@ def pq_train_encode(
 def _assignment_expr_on(vec_expr, centers) -> "F.Column":
     """kmeans._assignment_expr generalized to an arbitrary array
     EXPRESSION (the original binds a column by name)."""
-    from dask_cuml_spark.functions.vector import matrix_lit
-
     dists = F.transform(
         matrix_lit(centers),
         lambda c: F.aggregate(
@@ -497,7 +497,8 @@ def adc_candidates(
     m = len(lut_rows[0][1])
     if strategy == "expr":
         if cell_col is not None:
-            probes = spark.createDataFrame(
+            probes = rows_lit(
+                spark,
                 [
                     (qid, int(c), lut)
                     for qid, lut, cells in lut_rows
@@ -507,7 +508,8 @@ def adc_candidates(
             )
             cand = df.join(F.broadcast(probes), cell_col)
         else:
-            luts = spark.createDataFrame(
+            luts = rows_lit(
+                spark,
                 [(qid, lut) for qid, lut, _cells in lut_rows],
                 "query_id long, lut array<array<double>>",
             )

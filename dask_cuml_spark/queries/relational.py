@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from dask_cuml_spark.functions.vector import rows_lit
 from dask_cuml_spark.io import load_table
 from dask_cuml_spark.registry import register
 
@@ -796,9 +797,10 @@ GROUP BY b.band
 )
 def q14_range_join_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = load_table(spark, sf_dir, "part")
-    bands = spark.createDataFrame(
+    bands = rows_lit(
+        spark,
         [("cheap", 0.0, 500.0), ("mid", 500.0, 1200.0), ("expensive", 1200.0, 1e12)],
-        ["band", "lo", "hi"],
+        "band string, lo double, hi double",
     )
     cond = (p.p_retailprice >= bands.lo) & (p.p_retailprice < bands.hi)
     return (

@@ -22,11 +22,11 @@ Scale design:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from dask_cuml_spark.functions.vector import array_lit
+from dask_cuml_spark.functions.vector import array_lit, rows_lit, sql_lit
 from dask_cuml_spark.io import load_table
 from dask_cuml_spark.registry import register
 
@@ -3707,20 +3707,18 @@ def q157_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 # step is load-bearing: raw codes are ≲2^12, so without it a_r·code+b_r
 # never wraps P and ANY affine per-row hash preserves the difference
 # structure — all d rows then share one collision pattern mod w and
-# min() degenerates (the first cut of this query measured exactly
-# that: identical est for every term). With the spread, a_r·x ≈ 2^47
-# wraps P many times and each row collides independently (every
-# intermediate < 2^47, int64-exact in both engines). The candidate
-# set for the report is the distinct vocabulary (tiny here; a 100 TB
-# deployment feeds sampled candidates — the sketch answers point
-# queries, it does not enumerate).
+# min() degenerates to identical estimates for every term. With the
+# spread, a_r·x ≈ 2^47 wraps P many times and each row collides
+# independently. The candidate set for the report is the distinct
+# vocabulary (a 100 TB deployment feeds sampled candidates — the
+# sketch answers point queries, it does not enumerate).
 #
-# Spark shape: explode → narrow code/bucket projection replicated
-# d=4× (a broadcast 4-row (r,a,b) cross join, NOT four scans) → ONE
-# groupBy on the 8-byte (r, bucket) key (map-side combinable: ≤ 244
-# rows reach the shuffle) → broadcast the d×w counter table onto the
-# candidate terms → min over d estimates. Full-value oracle:
-# identical integer arithmetic both engines.
+# Spark shape (_cms_counters): explode → code/bucket projection
+# replicated d× in-plan by the (r, a, b) generator (_cms_rows) →
+# ONE groupBy on the (r, bucket) key (map-side combinable: ≤ d×w rows
+# reach the shuffle) → broadcast the counter table onto the candidate
+# terms → min over d estimates. Full-value oracle: identical integer
+# arithmetic both engines.
 # ---------------------------------------------------------------------------
 _Q158_W = 61
 _Q158_D = 4
@@ -3728,6 +3726,36 @@ _Q158_P = 2147483647
 _Q158_SPREAD = 2654435761
 _Q158_AB = ((48271, 0), (16807, 12345), (69621, 54321), (40692, 99991))
 _Q158_TOPK = 10
+
+
+def _cms_rows() -> Column:
+    """The d sketch rows' (r, a, b) hash parameters as one generator
+    over an array literal: selected beside a row, it replicates that
+    row d× in-plan — no join, no scan, no job."""
+    ab = [{"r": r, "a": a, "b": b} for r, (a, b) in enumerate(_Q158_AB)]
+    return F.inline(F.expr(sql_lit(ab)))
+
+
+def _cms_x(term: Column) -> Column:
+    """term → its spread code x in [0, P): the q38 char-code
+    convention times one multiply-mod-P (int64-exact in both
+    engines)."""
+    code = (
+        F.length(term) * 131
+        + 7 * F.ascii(term)
+        + 31 * F.ascii(F.substring(term, 2, 1))
+        + F.ascii(F.substring(term, -1, 1))
+    )
+    return F.pmod(code * F.lit(_Q158_SPREAD), F.lit(_Q158_P))
+
+
+def _cms_bucket(x: Column) -> Column:
+    """Sketch row r's counter for code x: ((a·x + b) mod P) mod w over
+    the (r, a, b) columns of _cms_rows."""
+    return F.pmod(
+        F.pmod(F.col("a") * x + F.col("b"), F.lit(_Q158_P)),
+        F.lit(_Q158_W),
+    )
 
 
 @register(
@@ -3771,31 +3799,15 @@ LIMIT {_Q158_TOPK}
 )
 def q158_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    code = (
-        F.length("term") * 131
-        + 7 * F.ascii("term")
-        + 31 * F.ascii(F.substring("term", 2, 1))
-        + F.ascii(F.substring("term", -1, 1))
-    )
-    x = F.pmod(code * F.lit(_Q158_SPREAD), F.lit(_Q158_P))
     tok = d.select(F.explode(tokens()).alias("term")).select(
-        "term", x.alias("x")
-    )
-    spark_rows = d.sparkSession.createDataFrame(
-        [(r, a, b) for r, (a, b) in enumerate(_Q158_AB)],
-        "r int, a long, b long",
-    )
-    bucket = F.pmod(
-        F.pmod(F.col("a") * F.col("x") + F.col("b"), F.lit(_Q158_P)),
-        F.lit(_Q158_W),
+        "term", _cms_x(F.col("term")).alias("x")
     )
     (cms_tbl,) = _cms_tables(sf_dir)
     if spark.catalog.tableExists(cms_tbl):
-        # served (r16 verdict task 4): candidate scoring reads the
-        # SAME stored (r, bucket) delta SUM q160's point queries do —
-        # the d×w counter pass (the ×4 crossJoin over every corpus
-        # token, the dominant stage at 1000×) disappears; the only
-        # corpus-sized work left is the cand scan, which exists to
+        # served: candidate scoring reads the SAME stored (r, bucket)
+        # delta SUM q160's point queries do — the d×w counter pass
+        # (every corpus token replicated d×) disappears; the
+        # only corpus-sized work left is the cand scan, which exists to
         # carry the ground-truth true_n column. Delta additivity is
         # pytest-pinned (stored ≡ fresh counters bit-for-bit), so the
         # same full-value oracle proves this branch.
@@ -3805,12 +3817,7 @@ def q158_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.sum("c").alias("c"))
         )
     else:
-        counters = (
-            tok.crossJoin(F.broadcast(spark_rows))
-            .select("r", bucket.alias("bucket"))
-            .groupBy("r", "bucket")
-            .agg(F.count(F.lit(1)).alias("c"))
-        )
+        counters = _cms_counters(spark, sf_dir, d)
     cand = tok.groupBy("term").agg(
         F.any_value("x").alias("x"),
         F.count(F.lit(1)).alias("true_n"),
@@ -3821,8 +3828,8 @@ def q158_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c",
     )
     est = (
-        cand.crossJoin(F.broadcast(spark_rows))
-        .withColumn("cand_bucket", bucket)
+        cand.select("*", _cms_rows())
+        .withColumn("cand_bucket", _cms_bucket(F.col("x")))
         .join(
             F.broadcast(ctr),
             (F.col("cr") == F.col("r"))
@@ -4148,32 +4155,33 @@ def _bm25_from_postings(
 
 
 # ---------------------------------------------------------------------------
-# q160 — CMS point queries off the STORED sketch (round 15; the
-# companion to q158 and the eighth stored layout): a Count-Min sketch
-# is a mergeable summary — counters are PURE SUMS — so the stored
-# form is an APPEND-ONLY table of (r, bucket, c) delta rows (one set
-# per corpus snapshot / ingest batch) and readers SUM per (r, bucket)
-# before taking the min over rows. That additivity is the entire
-# point of sketches at 100 TB: the ingest stream appends a
-# batch-sized delta (Θ(|batch|) work, d×w rows) and a point query
-# answers from O(d·w) state with NO corpus scan at all — the first
-# layout here whose serving path touches nothing corpus-sized.
+# q160 — CMS point queries off the STORED sketch (the companion to
+# q158): a Count-Min sketch is a mergeable summary — counters are PURE
+# SUMS — so the stored form is an APPEND-ONLY table of (r, bucket, c)
+# delta rows (one set per corpus snapshot / ingest batch) and readers
+# SUM per (r, bucket) before taking the min over rows. The ingest
+# stream appends a batch-sized delta (d×w rows) and a point query
+# answers from O(d·w) state with NO corpus scan at all.
 #
 # q160 asks the sketch for the estimated frequencies of a fixed
-# candidate-term set (q155's query terms + two more — point queries,
-# the operation a CMS exists for; exact counts are q158's business).
-# Catalog-gated: fresh sessions recompute the counters from the
-# corpus with IDENTICAL arithmetic (one delta set — the sum is the
-# identity), so the same full-value oracle proves both branches.
+# candidate-term set (q155's query terms + two more). Spark shape:
+# the d rows per candidate term are one LocalRelation with its bucket
+# folded in-plan; the delta rows inner-join it (broadcast), one zero
+# row per (term, r) keeps untouched counters at 0, and ONE groupBy
+# term takes the least over r of the per-r sums. Catalog-gated: fresh
+# sessions feed freshly counted deltas (one delta set — the sum is the
+# identity) into the same aggregate, so one full-value oracle proves
+# both branches.
 # ---------------------------------------------------------------------------
 _Q160_TERMS = ("vector", "fast", "dup", "join", "the")
+_CMS_PREFIX = f"dcs_cmssketch{_Q158_D}x{_Q158_W}_"
 
 
 def _cms_tables(sf_dir: str) -> tuple[str]:
     from dask_cuml_spark.operators.layout import layout_tag
 
     tag = layout_tag(sf_dir, "documents.parquet")
-    return (f"dcs_cmssketch{_Q158_D}x{_Q158_W}_{tag}",)
+    return (f"{_CMS_PREFIX}{tag}",)
 
 
 def _cms_counters(
@@ -4184,25 +4192,12 @@ def _cms_counters(
     incremental refresh (batch slice), and q160's plain branch."""
     if d is None:
         d = load_table(spark, sf_dir, "documents")
-    code = (
-        F.length("term") * 131
-        + 7 * F.ascii("term")
-        + 31 * F.ascii(F.substring("term", 2, 1))
-        + F.ascii(F.substring("term", -1, 1))
-    )
-    x = F.pmod(code * F.lit(_Q158_SPREAD), F.lit(_Q158_P))
-    tok = d.select(F.explode(tokens()).alias("term")).select(x.alias("x"))
-    spark_rows = d.sparkSession.createDataFrame(
-        [(r, a, b) for r, (a, b) in enumerate(_Q158_AB)],
-        "r int, a long, b long",
-    )
-    bucket = F.pmod(
-        F.pmod(F.col("a") * F.col("x") + F.col("b"), F.lit(_Q158_P)),
-        F.lit(_Q158_W),
+    tok = d.select(F.explode(tokens()).alias("term")).select(
+        _cms_x(F.col("term")).alias("x")
     )
     return (
-        tok.crossJoin(F.broadcast(spark_rows))
-        .select("r", bucket.alias("bucket"))
+        tok.select("x", _cms_rows())
+        .select("r", _cms_bucket(F.col("x")).alias("bucket"))
         .groupBy("r", "bucket")
         .agg(F.count(F.lit(1)).alias("c"))
     )
@@ -4240,12 +4235,7 @@ def cms_layout_refresh(spark: SparkSession, sf_dir: str) -> float | None:
         ).saveAsTable(old_tbl)
 
     return incremental_refresh(
-        spark,
-        sf_dir,
-        "documents.parquet",
-        f"dcs_cmssketch{_Q158_D}x{_Q158_W}_",
-        tbl,
-        append,
+        spark, sf_dir, "documents.parquet", _CMS_PREFIX, tbl, append
     )
 
 
@@ -4287,53 +4277,27 @@ GROUP BY cand.term
 )
 def q160_cms_point_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     (tbl,) = _cms_tables(sf_dir)
-    if spark.catalog.tableExists(tbl):
-        # stored sketch: SUM the delta rows per (r, bucket) — O(d·w)
-        # state, no corpus scan anywhere in this branch
-        counters = (
-            spark.table(tbl)
-            .groupBy("r", "bucket")
-            .agg(F.sum("c").alias("c"))
-        )
-    else:
-        counters = _cms_counters(spark, sf_dir)
-    cand = spark.createDataFrame(
-        [(t,) for t in _Q160_TERMS], "term string"
+    deltas = (
+        spark.table(tbl)
+        if spark.catalog.tableExists(tbl)
+        else _cms_counters(spark, sf_dir)
     )
-    code = (
-        F.length("term") * 131
-        + 7 * F.ascii("term")
-        + 31 * F.ascii(F.substring("term", 2, 1))
-        + F.ascii(F.substring("term", -1, 1))
+    rows = [
+        (t, r, a, b) for r, (a, b) in enumerate(_Q158_AB) for t in _Q160_TERMS
+    ]
+    cand = rows_lit(spark, rows, "term string, r int, a long, b long").select(
+        "term", "r", _cms_bucket(_cms_x(F.col("term"))).alias("bucket")
     )
-    x = F.pmod(code * F.lit(_Q158_SPREAD), F.lit(_Q158_P))
-    spark_rows = spark.createDataFrame(
-        [(r, a, b) for r, (a, b) in enumerate(_Q158_AB)],
-        "r int, a long, b long",
-    )
-    cb = F.pmod(
-        F.pmod(F.col("a") * F.col("x") + F.col("b"), F.lit(_Q158_P)),
-        F.lit(_Q158_W),
-    )
-    ctr = counters.select(
-        F.col("r").alias("cr"), F.col("bucket").alias("cbucket"), "c"
-    )
+    hits = deltas.join(F.broadcast(cand), ["r", "bucket"])
+    zeros = cand.select("term", "r", F.lit(0).cast("long").alias("c"))
+    per_r = [
+        F.sum(F.when(F.col("r") == r, F.col("c"))) for r in range(_Q158_D)
+    ]
     return (
-        cand.select("term", x.alias("x"))
-        .crossJoin(F.broadcast(spark_rows))
-        .withColumn("cand_bucket", cb)
-        .join(
-            F.broadcast(ctr),
-            (F.col("cr") == F.col("r"))
-            & (F.col("cbucket") == F.col("cand_bucket")),
-            "left",
-        )
+        hits.select("term", "r", "c")
+        .unionByName(zeros)
         .groupBy("term")
-        .agg(
-            F.min(F.coalesce(F.col("c"), F.lit(0)))
-            .cast("long")
-            .alias("est_n")
-        )
+        .agg(F.least(*per_r).cast("long").alias("est_n"))
     )
 
 

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from dask_cuml_spark.functions.vector import dot, l2_sq
+from dask_cuml_spark.functions.vector import dot, l2_sq, rows_lit
 from dask_cuml_spark.io import load_table, source_size_bytes
 from dask_cuml_spark.registry import register
 
@@ -1349,7 +1349,8 @@ def _ann_invariants(topk, exact, min_hits: int):
         ex[["query_id", "neighbor_id"]], on=["query_id", "neighbor_id"]
     )
     recall_ok = int(len(hits) >= min_hits)
-    return spark.createDataFrame(
+    return rows_lit(
+        spark,
         [(n_queries, n_results, n_dup_pairs, n_rank_violations, recall_ok)],
         "n_queries long, n_results long, n_dup_pairs long, "
         "n_rank_violations long, recall_ok int",
@@ -1431,8 +1432,8 @@ def pq_layout(
         ("ivf", 0, j, [float(x) for x in idx.centers_[j]])
         for j in range(len(idx.centers_))
     ]
-    spark.createDataFrame(
-        rows, "kind string, s int, j int, center array<double>"
+    rows_lit(
+        spark, rows, "kind string, s int, j int, center array<double>"
     ).write.mode("overwrite").saveAsTable(model_tbl)
     # the append-only detector's baseline for pq_layout_refresh
     from dask_cuml_spark.operators.layout import write_layout_manifest

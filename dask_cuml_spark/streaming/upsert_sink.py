@@ -51,6 +51,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dask_cuml_spark.functions.vector import rows_lit
 from dask_cuml_spark.operators.merge import merge_upsert
 from dask_cuml_spark.streaming import _state_partitions, auto_state_partitions
 
@@ -141,14 +142,10 @@ def read_committed(spark: SparkSession, root: str) -> DataFrame:
     manifest (dirs from different versions — that's the point)."""
     buckets, _n, schema_json = _read_manifest(root, _committed(root))
     if not buckets:
-        # zero-bucket manifest (empty seed, no batches yet): the table
-        # is empty but SELF-DESCRIBING — the schema travels in the
-        # manifest so this returns a typed empty frame instead of an
-        # opaque no-paths parquet error (advisor r7)
+        # zero-bucket manifest (empty seed, no batches yet): the schema
+        # travels in the manifest, so the empty table is still typed
         if schema_json is None:
-            # pre-r8 manifest format (no schema field) AND no bucket
-            # dirs to infer from — nothing recoverable (advisor r8:
-            # fail with the migration story, not a KeyError)
+            # pre-schema manifest and no bucket dirs to infer one from
             raise ValueError(
                 f"merge-sink table at {root}: committed manifest has no "
                 "schema field (pre-schema format) and no bucket dirs to "
@@ -157,11 +154,10 @@ def read_committed(spark: SparkSession, root: str) -> DataFrame:
             )
         from pyspark.sql.types import StructType
 
-        return spark.createDataFrame(
-            [], StructType.fromJson(json.loads(schema_json))
+        return rows_lit(
+            spark, [], StructType.fromJson(json.loads(schema_json))
         )
-    # schema_json may be None for pre-schema manifests — the parquet
-    # footers of the bucket dirs carry it (advisor r8 fallback)
+    # pre-schema manifests: the bucket dirs' parquet footers carry it
     return spark.read.parquet(
         *[os.path.join(root, rel) for rel in buckets.values()]
     )
@@ -284,7 +280,7 @@ def merge_batch(
             spark.read.parquet(*existing)
             if existing
             # every touched bucket is empty so far → pure insert
-            else spark.createDataFrame([], batch_flat.schema)
+            else rows_lit(spark, [], batch_flat.schema)
         )
         merged = merge_upsert(
             cur, batch_flat, key, update_cols
@@ -379,8 +375,8 @@ def stream_upsert_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         # materialize before the tempdir is removed; the committed table
         # is per-key totals (thousands of rows), not event-sized
         rows = final.orderBy("user_id").collect()
-        return spark.createDataFrame(
-            rows, "user_id long, n_events long, total_value double"
+        return rows_lit(
+            spark, rows, "user_id long, n_events long, total_value double"
         )
     finally:
         shutil.rmtree(root, ignore_errors=True)

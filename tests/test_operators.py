@@ -4769,6 +4769,68 @@ def test_cms_layout_additive_refresh(spark, tmp_path):
     assert served2 == plain2
 
 
+def test_q160_stored_sketch_is_one_aggregate(spark, tmp_path):
+    """q160 reads the stored sketch in ONE aggregate over in-plan
+    literals: on a two-term corpus most candidates hit a counter no
+    token reached (est_n = 0), and stored ≡ plain ≡ the DuckDB oracle;
+    the stored branch's executed plan scans no Python RDD and has
+    exactly one hash exchange (the term-keyed aggregate), and running
+    it launches at most 3 jobs."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq_mod
+
+    import duckdb
+
+    import dask_cuml_spark.queries.text as T
+    from dask_cuml_spark.benchlib import max_job_id
+    from dask_cuml_spark.layouts import ensure_layouts
+    from dask_cuml_spark.oracle import compare
+    from dask_cuml_spark.registry import ORACLES
+
+    sf = str(tmp_path / "sf")
+    ddir = f"{sf}/documents.parquet"
+    os.makedirs(ddir)
+    td = pq_mod.read_table("/root/testdata/sf0.001/documents.parquet")
+    td = td.slice(0, 3).set_column(
+        td.schema.get_field_index("text"),
+        "text",
+        pa.array(["vector fast", "vector", "fast vector vector"]),
+    )
+    pq_mod.write_table(td, os.path.join(ddir, "part-0.parquet"))
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW documents AS SELECT * FROM "
+        f"read_parquet('{ddir}/*.parquet')"
+    )
+    oracle = con.execute(ORACLES["q160_cms_point_query"]).df()
+    con.close()
+
+    plain_df = T.q160_cms_point_query(spark, sf)
+    ok, report = compare(plain_df.toPandas(), oracle)
+    assert ok, report
+    plain = sorted(map(tuple, plain_df.collect()))
+    assert len(plain) == len(T._Q160_TERMS)
+    assert any(n == 0 for _t, n in plain), plain
+    assert dict(plain)["vector"] >= 4 and dict(plain)["fast"] >= 2
+
+    (tbl,) = T._cms_tables(sf)
+    try:
+        ensure_layouts(spark, sf, layouts=("cms",))
+        assert spark.catalog.tableExists(tbl)
+        df = T.q160_cms_point_query(spark, sf)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "ExistingRDD" not in plan, plan
+        assert plan.count("Exchange hashpartitioning") == 1, plan
+        j0 = max_job_id(spark)
+        stored = sorted(map(tuple, df.collect()))
+        assert max_job_id(spark) - j0 <= 3
+        assert stored == plain
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+
+
 def test_audio_fingerprints_hand_built_and_strictness(spark):
     """audio_fingerprints (q161's operator, audio's first): a
     hand-built PCM payload with bursts planted at known frames must
