@@ -41,11 +41,9 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import dask_cuml_spark.queries  # noqa: F401 — populate registry
-import dask_cuml_spark.queries.pandas_udfs as P
 import dask_cuml_spark.queries.relational as rel
-import dask_cuml_spark.queries.text as T
 from dask_cuml_spark.io import enable_table_cache
-from dask_cuml_spark.layouts import ensure_layouts
+from dask_cuml_spark.layouts import ensure_layouts, layout_tables
 from dask_cuml_spark.registry import ORACLES, QUERIES
 from dask_cuml_spark.session import get_spark
 
@@ -136,23 +134,11 @@ def duck_timed(sf_dir, name, tables):
 
 
 def drop_layout(spark, layout, sf):
-    import dask_cuml_spark.queries.vector as V
-
     if isinstance(layout, tuple):
         for one in layout:
             drop_layout(spark, one, sf)
         return
-    tables = {
-        "q02": rel._q02_bucket_tables(sf),
-        "grams": (T._gram_table(sf),),
-        "q112": P._q112_index_tables(sf),
-        "pq": V._pq_tables(sf),
-        "signs": V._sig_tables(sf),
-        "pack": T._pack_tables(sf),
-        "postings": T._postings_tables(sf),
-        "cms": T._cms_tables(sf),
-    }[layout]
-    for t in tables:
+    for t in layout_tables(layout, sf):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 

@@ -66,11 +66,11 @@ def drop_table_and_location(spark, table: str) -> None:
     """DROP TABLE IF EXISTS plus removal of the managed-table LOCATION.
 
     With the default in-memory catalog, a layout write that crashed
-    mid-`saveAsTable` (r9: the 1000× q02 leg died on a full disk)
-    leaves the warehouse directory behind while no catalog entry
-    exists — the retry then fails with LOCATION_ALREADY_EXISTS. Every
-    layout writer drops through this helper so a retry always starts
-    clean."""
+    mid-`saveAsTable` (a full disk, say) leaves the warehouse
+    directory behind while no catalog entry exists — the retry then
+    fails with LOCATION_ALREADY_EXISTS. A full layout build
+    (layouts.build_layout) drops through this helper so a retry always
+    starts clean."""
     import os
     import shutil
 
@@ -238,7 +238,7 @@ def read_layout_manifest(spark, table: str) -> dict | None:
 
 
 class IncrementalNotApplicable(Exception):
-    """Raised by an append_fn BEFORE it writes anything when a
+    """Raised by a refresh BEFORE it writes anything when a
     layout-specific precondition fails (e.g. the pack manifest needs
     appended doc_ids to sort strictly after every existing one so the
     token stream grows as a suffix) — the caller falls back to the
@@ -249,44 +249,45 @@ class IncrementalNotApplicable(Exception):
 def incremental_refresh(
     spark,
     sf_dir: str,
-    source_name: str,
-    table_prefix: str,
-    new_table: str,
+    source_name,
+    prefixes: tuple[str, ...],
+    new_tag: str,
     append_fn,
-    sibling_renames=None,
 ) -> float | None:
     """Generic append-only incremental layout refresh: per-batch work
     is Θ(|new files|), never Θ(corpus).
 
-    Detection is strictly conservative: a previous-tag table under
-    ``table_prefix`` qualifies only if the manifest stored on it (the
+    The layout's tables are ``prefix + tag`` for each of ``prefixes``;
+    the first is the primary table, which carries the source-file
+    manifest. Detection is strictly conservative: a previous-tag
+    primary table qualifies only if the manifest stored on it (the
     MANIFEST_PROPERTY table property) is a strict SUBSET of the current
     source file set with every old file bit-unchanged (size +
-    mtime_ns) — any mutation of an existing file, or a table with no
-    manifest, disqualifies the fast path and the caller falls back to
-    a full rebuild, so correctness never depends on the detector. On a
-    hit, ``append_fn(spark, new_parquet_paths, old_table)`` writes
-    ONLY the new files' derived rows into the existing table (Spark
-    appends preserve bucket specs), the table is renamed to the new
-    fingerprint tag, and the grown manifest is stored on it.
+    mtime_ns), and every sibling table exists at its tag — any
+    mutation of an existing file, a table with no manifest or a
+    partial build disqualifies the fast path and the caller falls back
+    to a full rebuild, so correctness never depends on the detector.
+    On a hit, ``append_fn(spark, new_parquet_paths, old_tables)``
+    writes ONLY the new files' derived rows into the existing tables
+    (Spark appends preserve bucket specs), every table is renamed to
+    ``new_tag``, and the grown manifest is stored on the primary.
 
     Returns write seconds on a refresh, None when not applicable.
     MUST run before the stale-GC keyed on the new tag — the GC would
-    drop the very table this appends to. The 0.0 early-return attests
-    only that the PRIMARY ``new_table`` exists — a multi-table caller
-    (ensure_layouts) re-verifies the sibling tables and falls through
-    to the full writer when the layout is partially built."""
+    drop the very tables this appends to. The 0.0 early-return attests
+    only that the PRIMARY table exists — a multi-table caller
+    re-verifies the sibling tables and falls through to the full
+    writer when the layout is partially built."""
     import os
     import time as _time
 
-    new_tag = new_table.rsplit("_", 1)[1]
-    if spark.catalog.tableExists(new_table):
+    new_tables = [f"{p}{new_tag}" for p in prefixes]
+    if spark.catalog.tableExists(new_tables[0]):
         return 0.0
     cur = source_files(sf_dir, source_name)
-    for name in tables_with_prefix(spark, table_prefix):
+    for name in tables_with_prefix(spark, prefixes[0]):
         if name.endswith(new_tag):
             continue
-        old_tag = name.rsplit("_", 1)[1]
         old = read_layout_manifest(spark, name)
         if old is None:
             continue
@@ -294,16 +295,13 @@ def incremental_refresh(
             continue
         if any(cur[f] != old[f] for f in old):
             continue  # an existing file changed — full-rebuild territory
+        old_tag = name.rsplit("_", 1)[1]
+        old_tables = [f"{p}{old_tag}" for p in prefixes]
         # a missing sibling table at the matched tag means a PARTIAL
-        # build (interrupted full write, dropped sidecar): the fast
-        # path must NOT run — an append_fn's mode("append") write
+        # build (interrupted full write, dropped sidecar): an append
         # would silently RECREATE the sibling holding only this
         # batch's delta, corrupting every additive sidecar consumer.
-        # Full-rebuild territory.
-        if any(
-            not spark.catalog.tableExists(f"{p}{old_tag}")
-            for p in sibling_renames or ()
-        ):
+        if not all(spark.catalog.tableExists(t) for t in old_tables[1:]):
             return None
         new_rel = sorted(set(cur) - set(old))
         # only write-markers (_SUCCESS, .crc dotfiles) may be skipped:
@@ -330,20 +328,11 @@ def incremental_refresh(
         t0 = _time.perf_counter()
         if new_files:
             try:
-                append_fn(spark, new_files, name)
+                append_fn(spark, new_files, old_tables)
             except IncrementalNotApplicable:
                 return None  # precondition failed pre-write → rebuild
-        spark.sql(f"ALTER TABLE {name} RENAME TO {new_table}")
-        # multi-table layouts (pq: codes + model sidecar) carry their
-        # sibling tables to the new tag in the same refresh — the
-        # sidecar's CONTENT is untouched (FAISS add() never retrains)
-        for sib_prefix in sibling_renames or ():
-            old_sib, new_sib = (
-                f"{sib_prefix}{old_tag}",
-                f"{sib_prefix}{new_tag}",
-            )
-            if spark.catalog.tableExists(old_sib):
-                spark.sql(f"ALTER TABLE {old_sib} RENAME TO {new_sib}")
-        write_layout_manifest(spark, sf_dir, source_name, new_table)
+        for old_t, new_t in zip(old_tables, new_tables):
+            spark.sql(f"ALTER TABLE {old_t} RENAME TO {new_t}")
+        write_layout_manifest(spark, sf_dir, source_name, new_tables[0])
         return _time.perf_counter() - t0
     return None

@@ -686,169 +686,27 @@ def q83_logreg_predict(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# q112 stored corpus index (r9, the layout the q112 docstring always
-# promised): the corpus side's (doc_id, band, band_hash) bucket frame
-# and (doc_id, shingles) sets precomputed ONCE and saved as bucketed
-# tables — per-run signature work drops to Θ(|new batch|). Same
-# catalog-gated mechanism as q02/q121: fingerprinted table identity
-# (operators/layout.layout_tag — never collides across fixtures, never
-# serves stale data), fresh driver sessions never have it so the
-# oracle path is untouched. The index params (n, num_hashes, bands)
-# are part of the table name: an index built under different LSH
-# params must never be silently served.
+# q112 stored corpus index (layouts 'q112', the layout the q112
+# docstring always promised): the corpus side's (doc_id, band,
+# band_hash) bucket frame and (doc_id, shingles) sets precomputed ONCE
+# and saved as bucketed tables — per-run signature work drops to
+# Θ(|new batch|). Same catalog-gated mechanism as q02/q121:
+# fingerprinted table identity (operators/layout.layout_tag — never
+# collides across fixtures, never serves stale data), fresh driver
+# sessions never have it so the oracle path is untouched. The index
+# params (n, num_hashes, bands) are part of the table name: an index
+# built under different LSH params must never be silently served.
 # ---------------------------------------------------------------------------
 _Q112_PARAMS = dict(n=3, num_hashes=36, bands=12, threshold=0.5)
 _Q112_BUCKETS = 16
 
 
 def _q112_index_tables(sf_dir: str) -> tuple[str, str]:
-    from dask_cuml_spark.operators.layout import layout_tag
+    """(bands table, shingles table)."""
+    from dask_cuml_spark.layouts import layout_tables
 
-    tag = layout_tag(sf_dir, "documents.parquet")
-    p = _Q112_PARAMS
-    stem = f"q112_{p['n']}_{p['num_hashes']}_{p['bands']}"
-    return f"dcs_{stem}_bands_{tag}", f"dcs_{stem}_shingles_{tag}"
-
-
-def q112_index_layout(
-    spark: SparkSession, sf_dir: str, n_buckets: int = _Q112_BUCKETS
-) -> float:
-    """One-time corpus LSH index for q112: shingle sets bucketed by
-    doc_id, band buckets bucketed by band_hash (the probe join key).
-    Returns wall seconds spent writing — amortized across every daily
-    batch that probes the corpus."""
-    import time as _time
-
-    from dask_cuml_spark.operators.dedup import (
-        band_buckets,
-        hashed_shingles,
-        minhash_signatures,
-    )
-    from dask_cuml_spark.operators.layout import drop_table_and_location
-
-    t0 = _time.perf_counter()
-    bt, st = _q112_index_tables(sf_dir)
-    p = _Q112_PARAMS
-    corpus = (
-        load_table(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") % 2 == 0)
-        .select("doc_id", "text")
-    )
-    sh = hashed_shingles(corpus, "text", p["n"]).select(
-        "doc_id", "shingles"
-    )
-    drop_table_and_location(spark, st)
-    (
-        sh.repartition(n_buckets, F.col("doc_id"))
-        .write.mode("overwrite")
-        .bucketBy(n_buckets, "doc_id")
-        .sortBy("doc_id")
-        .saveAsTable(st)
-    )
-    bands = band_buckets(
-        minhash_signatures(
-            spark.table(st), "doc_id", "shingles",
-            p["num_hashes"], pre_hashed=True,
-        ),
-        "doc_id",
-        p["bands"],
-        p["num_hashes"] // p["bands"],
-    )
-    drop_table_and_location(spark, bt)
-    (
-        bands.repartition(n_buckets, F.col("band_hash"))
-        .write.mode("overwrite")
-        .bucketBy(n_buckets, "band_hash")
-        .sortBy("band_hash")
-        .saveAsTable(bt)
-    )
-    # the append-only detector's baseline for q112_index_refresh
-    from dask_cuml_spark.operators.layout import write_layout_manifest
-
-    write_layout_manifest(spark, sf_dir, "documents.parquet", bt)
-    return _time.perf_counter() - t0
-
-
-def q112_index_refresh(spark: SparkSession, sf_dir: str) -> float | None:
-    """Append-only incremental refresh of the q112 corpus LSH index
-    (r16 — the last layout without one; the eight-layout chaos test
-    made the per-micro-batch Θ(corpus) rebuild visible): the batch's
-    even-doc shingle sets append into the bucketed shingles table and
-    their band buckets into the bands table — minhash/banding is
-    per-doc, so the batch-wise derivation equals the full writer's —
-    Θ(|batch|), bucket specs preserved by saveAsTable append (the
-    grams/postings mechanics, shared via
-    operators/layout.incremental_refresh)."""
-    from dask_cuml_spark.operators.dedup import (
-        band_buckets,
-        hashed_shingles,
-        minhash_signatures,
-    )
-    from dask_cuml_spark.operators.layout import incremental_refresh
-
-    bt, _st = _q112_index_tables(sf_dir)
-    p = _Q112_PARAMS
-    stem = f"q112_{p['n']}_{p['num_hashes']}_{p['bands']}"
-
-    def _buckets_of(spark_, tbl):
-        return int(
-            next(
-                r.data_type
-                for r in spark_.sql(
-                    f"DESCRIBE EXTENDED {tbl}"
-                ).collect()
-                if r.col_name == "Num Buckets"
-            )
-        )
-
-    def append(spark_, new_files, old_bt):
-        old_tag = old_bt.rsplit("_", 1)[1]
-        old_st = f"dcs_{stem}_shingles_{old_tag}"
-        batch = (
-            spark_.read.parquet(*new_files)
-            .filter(F.col("doc_id") % 2 == 0)
-            .select("doc_id", "text")
-        )
-        # batch-sized frame fanning into two appends: pin it
-        sh = (
-            hashed_shingles(batch, "text", p["n"])
-            .select("doc_id", "shingles")
-            .localCheckpoint(eager=False)
-        )
-        (
-            sh.repartition(_buckets_of(spark_, old_st), F.col("doc_id"))
-            .write.mode("append")
-            .bucketBy(_buckets_of(spark_, old_st), "doc_id")
-            .sortBy("doc_id")
-            .saveAsTable(old_st)
-        )
-        bands = band_buckets(
-            minhash_signatures(
-                sh, "doc_id", "shingles",
-                p["num_hashes"], pre_hashed=True,
-            ),
-            "doc_id",
-            p["bands"],
-            p["num_hashes"] // p["bands"],
-        )
-        nb = _buckets_of(spark_, old_bt)
-        (
-            bands.repartition(nb, F.col("band_hash"))
-            .write.mode("append")
-            .bucketBy(nb, "band_hash")
-            .sortBy("band_hash")
-            .saveAsTable(old_bt)
-        )
-
-    return incremental_refresh(
-        spark,
-        sf_dir,
-        "documents.parquet",
-        f"dcs_{stem}_bands_",
-        bt,
-        append,
-        sibling_renames=(f"dcs_{stem}_shingles_",),
-    )
+    shingles, bands = layout_tables("q112", sf_dir)
+    return bands, shingles
 
 
 # ---------------------------------------------------------------------------
@@ -896,10 +754,10 @@ def q112_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     corpus = d.filter(F.col("doc_id") % 2 == 0)
     new = d.filter(F.col("doc_id") % 2 == 1)
-    # stored corpus index when provisioned (q112_index_layout /
-    # layouts.ensure_layouts): only the new batch is shingled+signed
-    # per run — value-identical, catalog-gated, absent in fresh
-    # sessions so the oracle path is unchanged
+    # stored corpus index when provisioned (layouts 'q112'): only the
+    # new batch is shingled+signed per run — value-identical,
+    # catalog-gated, absent in fresh sessions so the oracle path is
+    # unchanged
     bt, st = _q112_index_tables(sf_dir)
     stored = {}
     if spark.catalog.tableExists(bt) and spark.catalog.tableExists(st):

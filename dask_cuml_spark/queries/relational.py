@@ -81,7 +81,7 @@ def q01_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 #     4.45 s / THIS 3.66 s. The shuffle_hash hint matters: SMJ sorts
 #     60 M + 15 M rows for a join whose output feeds a 25-group agg.
 #   'bucketed' (r8 — the owed co-location A/B, measured WIN): when the
-#     session catalog has the q02_bucketed_layout tables for this
+#     session catalog has the 'q02' layout tables (layouts.py) for this
 #     sf_dir (orders+lineitem bucketBy(orderkey)), the same bcast-cmap
 #     shape reads them instead, and the one wide join runs
 #     Exchange-free on both inputs (ShuffledHashJoin straight off the
@@ -115,128 +115,18 @@ _Q02_EAGER_AGG_MIN_ORDERS_BYTES = 64 << 20
 # it ONCE at layout time (45 s write, amortized across every
 # orderkey-join on the table — the standard warehouse co-location
 # decision at 100 TB). q02 picks this branch whenever the session
-# catalog has the layout for its sf_dir (q02_bucketed_layout creates
+# catalog has the layout for its sf_dir (layouts.py 'q02' creates
 # it); correctness gates never have it, so the oracle path is
 # unchanged.
 _Q02_BUCKETS = 32
 
 
 def _q02_bucket_tables(sf_dir: str) -> tuple[str, str]:
-    # fingerprinted identity (advisor r8): the tag hashes the absolute
-    # fixture path AND the source parquets' (count, bytes, mtime)
-    # fingerprints, so distinct fixtures never collide onto one table
-    # and a layout built from since-rewritten parquet silently stops
-    # matching — q02 falls back to the plain branch, never stale data
-    from dask_cuml_spark.operators.layout import layout_tag
+    from dask_cuml_spark.layouts import layout_tables
 
-    tag = layout_tag(sf_dir, "orders.parquet", "lineitem.parquet")
-    return f"dcs_q02_orders_{tag}", f"dcs_q02_lineitem_{tag}"
+    return layout_tables("q02", sf_dir)
 
 
-def q02_layout_refresh(spark: SparkSession, sf_dir: str) -> float | None:
-    """Append-only incremental refresh of the co-located fact layout
-    (r13 — the fourth consumer of operators/layout.incremental_refresh,
-    and the simplest: the derived rows ARE the source rows). A daily
-    fact ingest appends orders/lineitem part files; only those files'
-    rows are appended into the matching bucketed table (per-bucket
-    append files — the Exchange-free join plan is unchanged), then
-    both tables rename to the new combined fingerprint tag. Detection
-    is the shared conservative manifest check over BOTH sources; any
-    existing-file mutation falls back to the full rebuild."""
-    from dask_cuml_spark.operators.layout import incremental_refresh
-
-    bo, _bl = _q02_bucket_tables(sf_dir)
-
-    def append(spark_, new_files, old_orders_tbl):
-        old_tag = old_orders_tbl.rsplit("_", 1)[1]
-        for src_name, tbl, key in (
-            ("orders", old_orders_tbl, "o_orderkey"),
-            ("lineitem", f"dcs_q02_lineitem_{old_tag}", "l_orderkey"),
-        ):
-            marker = f"{src_name}.parquet"
-            files = [
-                f
-                for f in new_files
-                if f"/{marker}/" in f or f.endswith(f"/{marker}")
-            ]
-            if not files:
-                continue
-            n_buckets = int(
-                next(
-                    r.data_type
-                    for r in spark_.sql(f"DESCRIBE EXTENDED {tbl}").collect()
-                    if r.col_name == "Num Buckets"
-                )
-            )
-            (
-                spark_.read.parquet(*files)
-                .repartition(n_buckets, F.col(key))
-                .write.mode("append")
-                .bucketBy(n_buckets, key)
-                .sortBy(key)
-                .saveAsTable(tbl)
-            )
-
-    return incremental_refresh(
-        spark,
-        sf_dir,
-        ("orders.parquet", "lineitem.parquet"),
-        "dcs_q02_orders_",
-        bo,
-        append,
-        sibling_renames=("dcs_q02_lineitem_",),
-    )
-
-
-def q02_bucketed_layout(
-    spark: SparkSession, sf_dir: str, n_buckets: int = _Q02_BUCKETS
-) -> float:
-    """One-time co-located layout for q02's wide join: orders and
-    lineitem written bucketBy(n_buckets, orderkey), sorted within
-    buckets, one file per bucket (repartition on the bucket key with
-    Spark's own hash → write tasks align 1:1 with buckets). Returns
-    the wall seconds spent writing — the amortized cost a deployment
-    pays once per table, not per query."""
-    import time as _time
-
-    from dask_cuml_spark.io import source_size_bytes
-    from dask_cuml_spark.operators.layout import drop_table_and_location
-
-    t0 = _time.perf_counter()
-    bo, bl = _q02_bucket_tables(sf_dir)
-    for name, tbl, key in (
-        ("orders", bo, "o_orderkey"),
-        ("lineitem", bl, "l_orderkey"),
-    ):
-        drop_table_and_location(spark, tbl)
-        src = load_table(spark, sf_dir, name)
-        # bucketBy needs NO pre-shuffle: every write task hashes its
-        # rows into local per-bucket files. The repartition below only
-        # prettifies small layouts (one file per bucket); on a big
-        # table it stages a full extra copy of the input as shuffle
-        # files — the r10 1000x write died on disk exactly there
-        # (600M-row lineitem: ~12.7 GB parquet + ~2x that in shuffle).
-        # Past the threshold, write shuffle-free and accept
-        # (input tasks x buckets) files — the shape a real multi-
-        # executor cluster write produces anyway; bucketed reads
-        # co-group all files of a bucket, so the Exchange-free join
-        # plan is identical.
-        if source_size_bytes(sf_dir, name) <= (4 << 30):
-            src = src.repartition(n_buckets, F.col(key))
-        (
-            src.write.mode("overwrite")
-            .bucketBy(n_buckets, key)
-            .sortBy(key)
-            .saveAsTable(tbl)
-        )
-    # the append-only detector's baseline for q02_layout_refresh,
-    # over BOTH sources
-    from dask_cuml_spark.operators.layout import write_layout_manifest
-
-    write_layout_manifest(
-        spark, sf_dir, ("orders.parquet", "lineitem.parquet"), bo
-    )
-    return _time.perf_counter() - t0
 # The pruned 2-column customer map is ~1/10 of the full-table estimate;
 # 1 GiB of customer ≈ a ~100 MB broadcast build — the upper end of
 # routine Spark broadcast practice. Past it, fall back to all-shuffle.

@@ -1167,7 +1167,7 @@ def q114_ngram_language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ≡ equality-of-string at the repo's accepted 2^-64 collision class,
 # and the DuckDB oracle recomputes the overlap on the STRINGS, so the
 # hash shortcut is re-proven against string truth on every driver run).
-# When the q121 gram layout exists (catalog-gated, q121_gram_layout),
+# When the q121 gram layout exists (catalog-gated, layouts 'grams'),
 # the exploded pass is a bucketed table scan — construction vanishes
 # and the only exchange left is the doc_id aggregate (the eval side
 # broadcasts). At 100 TB the eval side is benchmark-sized → broadcast;
@@ -1238,11 +1238,12 @@ def q119_contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 # pre-materialize the (doc_id, gram-hash) pairs bucketed by hash — the
 # inverted-index layout every gram consumer (boilerplate,
 # contamination, near-dup) can share — and BOTH the gram construction
-# and the wide exchange disappear from query time. q121_gram_layout
-# writes it (bucketBy(_h), one file per bucket so the scan reports
-# hash distribution AND sort order); q121 picks the catalog-gated
-# branch whenever the layout exists for its sf_dir. Correctness gates
-# run fresh sessions without the layout → oracle path untouched.
+# and the wide exchange disappear from query time. The 'grams' layout
+# (layouts.py) stores it (bucketBy(_h), one file per bucket so the
+# scan reports hash distribution AND sort order); q121 picks the
+# catalog-gated branch whenever the layout exists for its sf_dir.
+# Correctness gates run fresh sessions without the layout → oracle
+# path untouched.
 # ---------------------------------------------------------------------------
 _Q121_N = 5  # word n-gram width
 _Q121_DF = 2  # a gram in ≥ this many docs is "common" (boilerplate)
@@ -1299,93 +1300,9 @@ def _positioned_grams(
 
 
 def _gram_table(sf_dir: str) -> str:
-    # fingerprinted identity (advisor r8, same scheme as
-    # _q02_bucket_tables): absolute-path + source-fingerprint hash, so
-    # fixtures never collide and a layout over rewritten documents
-    # stops matching instead of serving stale grams. The gram width is
-    # also part of the identity: a layout built under a different
-    # _Q121_N must never be silently served. "pos" marks the r11
-    # positioned schema — a pre-r11 distinct-pair table can never be
-    # mistaken for it.
-    from dask_cuml_spark.operators.layout import layout_tag
+    from dask_cuml_spark.layouts import layout_tables
 
-    tag = layout_tag(sf_dir, "documents.parquet")
-    return f"dcs_grams{_Q121_N}pos_{tag}"
-
-
-def gram_layout_refresh(spark: SparkSession, sf_dir: str) -> float | None:
-    """Append-only incremental refresh of the positioned-gram layout
-    (r13 verdict task 4 — the q112 Θ(|new batch|) posture generalized
-    to the layout with the most consumers: q119/q121/q134/q136/q148).
-
-    A daily-ingest corpus appends part files; rebuilding the whole
-    inverted index per ingest is Θ(corpus) when the new work is
-    Θ(batch). Detection/rename/manifest mechanics live in
-    operators/layout.incremental_refresh (shared with the signs
-    layout): strictly conservative (any existing-file mutation falls
-    back to the full rebuild), appends survive the bucket spec
-    (spike-verified + pytest-pinned), and the rename moves the table
-    to the new source-fingerprint tag so every catalog-gated consumer
-    picks it up unchanged. Returns write seconds on a refresh, None
-    when not applicable."""
-    from dask_cuml_spark.operators.layout import incremental_refresh
-
-    def append(spark_, new_files, old_tbl):
-        batch = spark_.read.parquet(*new_files).select("doc_id", "text")
-        (
-            _positioned_grams(spark_, sf_dir, d=batch)
-            .repartition(_Q121_BUCKETS, F.col("_h"))
-            .write.mode("append")
-            .bucketBy(_Q121_BUCKETS, "_h")
-            .sortBy("_h")
-            .saveAsTable(old_tbl)
-        )
-
-    return incremental_refresh(
-        spark,
-        sf_dir,
-        "documents.parquet",
-        f"dcs_grams{_Q121_N}pos_",
-        _gram_table(sf_dir),
-        append,
-    )
-
-
-def gram_layout(
-    spark: SparkSession, sf_dir: str, n_buckets: int = _Q121_BUCKETS
-) -> float:
-    """One-time POSITIONED inverted-index layout (r10 verdict task 3):
-    (doc_id, pos, _h) occurrences written bucketBy(n_buckets, _h),
-    sorted within buckets, one file per bucket (repartition on _h with
-    Spark's own hash so write tasks align 1:1 with buckets — the q02
-    layout mechanism). Returns wall seconds spent writing.
-
-    Three consumers amortize the one write: q121 boilerplate and q119
-    contamination dedup to distinct pairs IN-PARTITION (hash
-    partitioning on _h satisfies clustering on the superset key
-    (_h, doc_id) — no exchange), and q134 substring dedup gets its
-    occurrence counts and dup back-join bucket-local, erasing its one
-    corpus-wide shuffle entirely."""
-    import time as _time
-
-    t0 = _time.perf_counter()
-    from dask_cuml_spark.operators.layout import drop_table_and_location
-
-    tbl = _gram_table(sf_dir)
-    drop_table_and_location(spark, tbl)
-    (
-        _positioned_grams(spark, sf_dir)
-        .repartition(n_buckets, F.col("_h"))
-        .write.mode("overwrite")
-        .bucketBy(n_buckets, "_h")
-        .sortBy("_h")
-        .saveAsTable(tbl)
-    )
-    # the append-only detector's baseline for gram_layout_refresh
-    from dask_cuml_spark.operators.layout import write_layout_manifest
-
-    write_layout_manifest(spark, sf_dir, "documents.parquet", tbl)
-    return _time.perf_counter() - t0
+    return layout_tables("grams", sf_dir)[0]
 
 
 def _gram_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1445,7 +1362,7 @@ def q121_boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one doc_id aggregate. The oracle stays on STRINGS, so the
     # hash-of-slice shortcut is re-proven against string truth every
     # driver run. When the bucketed gram layout exists (catalog-gated,
-    # q121_gram_layout), read it instead: construction AND the wide
+    # the 'grams' layout), read it instead: construction AND the wide
     # (doc_id,_h) exchange both vanish — the window's hash requirement
     # is satisfied by the bucketing, its sort by the bucket sortBy.
     hashed = _gram_pairs(spark, sf_dir)
@@ -1696,7 +1613,7 @@ def _placements_plain(
     # ``d``/``base`` serve the incremental manifest refresh: ONLY the
     # appended docs run the prefix sum, with every stream offset
     # shifted by the tokens already packed (the suffix-extension case
-    # pack_layout_refresh gates on)
+    # the 'pack' layout's refresh gates on)
     if d is None:
         d = load_table(spark, sf_dir, "documents")
     per_doc = d.select(
@@ -2881,72 +2798,9 @@ def q144_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 # consumer invocation. Plain table: consumers read it whole.
 # ---------------------------------------------------------------------------
 def _pack_tables(sf_dir: str) -> tuple[str]:
-    from dask_cuml_spark.operators.layout import layout_tag
+    from dask_cuml_spark.layouts import layout_tables
 
-    tag = layout_tag(sf_dir, "documents.parquet")
-    return (f"dcs_pack{_Q126_BLOCK}_{tag}",)
-
-
-def pack_layout(spark: SparkSession, sf_dir: str) -> float:
-    """One-time packing-manifest build. Returns write seconds."""
-    import time as _time
-
-    from dask_cuml_spark.operators.layout import (
-        drop_table_and_location,
-        write_layout_manifest,
-    )
-
-    t0 = _time.perf_counter()
-    (tbl,) = _pack_tables(sf_dir)
-    drop_table_and_location(spark, tbl)
-    _placements_plain(spark, sf_dir).write.mode("overwrite").saveAsTable(
-        tbl
-    )
-    write_layout_manifest(spark, sf_dir, "documents.parquet", tbl)
-    return _time.perf_counter() - t0
-
-
-def pack_layout_refresh(spark: SparkSession, sf_dir: str) -> float | None:
-    """Append-only incremental refresh of the packing manifest (r13 —
-    the fifth incremental layout). The manifest is a GLOBAL prefix sum
-    in doc_id order, so appends are suffix-stable ONLY when every new
-    doc_id sorts strictly after every packed one — then old placements
-    are untouched by construction and the new docs' placements are the
-    batch's own prefix sum shifted by the tokens already packed. The
-    id condition is CHECKED FIRST (IncrementalNotApplicable → full
-    rebuild) so interleaved ingests can never corrupt offsets; the
-    gate re-proves stored ≡ plain on every driver run regardless."""
-    from dask_cuml_spark.operators.layout import (
-        IncrementalNotApplicable,
-        incremental_refresh,
-    )
-
-    (tbl,) = _pack_tables(sf_dir)
-
-    def append(spark_, new_files, old_tbl):
-        batch = spark_.read.parquet(*new_files).select("doc_id", "text")
-        old = spark_.table(old_tbl).agg(
-            F.max("doc_id").alias("max_id"),
-            F.max(F.col("seq_start") + F.col("n_tokens")).alias("total"),
-        ).collect()[0]
-        new_min = batch.agg(F.min("doc_id")).collect()[0][0]
-        if new_min is None or old.max_id is None or new_min <= old.max_id:
-            raise IncrementalNotApplicable(
-                f"appended ids start at {new_min}, packed ids reach "
-                f"{old.max_id} — stream order is not suffix-stable"
-            )
-        _placements_plain(
-            spark_, sf_dir, d=batch, base=int(old.total)
-        ).write.mode("append").saveAsTable(old_tbl)
-
-    return incremental_refresh(
-        spark,
-        sf_dir,
-        "documents.parquet",
-        f"dcs_pack{_Q126_BLOCK}_",
-        tbl,
-        append,
-    )
+    return layout_tables("pack", sf_dir)
 
 
 # ---------------------------------------------------------------------------
@@ -3961,18 +3815,16 @@ def q159_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 # serves from the layout with VALUE-identical arithmetic (same tf/dl
 # rows, N/avgdl from the summed deltas — long sums, double division,
 # bit-equal to F.avg's sum/count), so the same full-value oracle
-# proves the layout. Incremental refresh is the grams/signs shared
-# mechanism (operators/layout.incremental_refresh) with the stats
-# sidecar riding sibling_renames.
+# proves the layout. The stats sidecar is the layout's second table
+# (layouts.py), so a refresh appends one delta row to it.
 # ---------------------------------------------------------------------------
 _POSTINGS_BUCKETS = 16
 
 
 def _postings_tables(sf_dir: str) -> tuple[str, str]:
-    from dask_cuml_spark.operators.layout import layout_tag
+    from dask_cuml_spark.layouts import layout_tables
 
-    tag = layout_tag(sf_dir, "documents.parquet")
-    return (f"dcs_postings_{tag}", f"dcs_poststats_{tag}")
+    return layout_tables("postings", sf_dir)
 
 
 def _postings_frame(
@@ -4002,80 +3854,6 @@ def _postings_stats_delta(d: DataFrame) -> DataFrame:
     return d.agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.sum(F.size(tokens())).cast("long").alias("sum_dl"),
-    )
-
-
-def postings_layout(spark: SparkSession, sf_dir: str) -> float:
-    """One-time inverted-index write + stats sidecar + manifest.
-    Returns wall seconds spent writing."""
-    import time as _time
-
-    from dask_cuml_spark.operators.layout import (
-        drop_table_and_location,
-        write_layout_manifest,
-    )
-
-    t0 = _time.perf_counter()
-    ptbl, stbl = _postings_tables(sf_dir)
-    drop_table_and_location(spark, ptbl)
-    drop_table_and_location(spark, stbl)
-    (
-        _postings_frame(spark, sf_dir)
-        .repartition(_POSTINGS_BUCKETS, F.col("_t"))
-        .write.mode("overwrite")
-        .bucketBy(_POSTINGS_BUCKETS, "_t")
-        .sortBy("_t")
-        .saveAsTable(ptbl)
-    )
-    _postings_stats_delta(
-        load_table(spark, sf_dir, "documents")
-    ).write.mode("overwrite").saveAsTable(stbl)
-    write_layout_manifest(spark, sf_dir, "documents.parquet", ptbl)
-    return _time.perf_counter() - t0
-
-
-def postings_layout_refresh(spark: SparkSession, sf_dir: str) -> float | None:
-    """Append-only incremental refresh: the batch's postings append
-    into the bucketed table (bucket spec preserved), ONE stats delta
-    row appends to the sidecar (additivity is the whole design), both
-    tables rename to the new source fingerprint. Θ(|batch|), never
-    Θ(corpus)."""
-    from dask_cuml_spark.operators.layout import incremental_refresh
-
-    ptbl, _stbl = _postings_tables(sf_dir)
-
-    def append(spark_, new_files, old_tbl):
-        batch = spark_.read.parquet(*new_files).select("doc_id", "text")
-        n_buckets = int(
-            next(
-                r.data_type
-                for r in spark_.sql(
-                    f"DESCRIBE EXTENDED {old_tbl}"
-                ).collect()
-                if r.col_name == "Num Buckets"
-            )
-        )
-        (
-            _postings_frame(spark_, sf_dir, d=batch)
-            .repartition(n_buckets, F.col("_t"))
-            .write.mode("append")
-            .bucketBy(n_buckets, "_t")
-            .sortBy("_t")
-            .saveAsTable(old_tbl)
-        )
-        old_tag = old_tbl.rsplit("_", 1)[1]
-        _postings_stats_delta(batch).write.mode("append").saveAsTable(
-            f"dcs_poststats_{old_tag}"
-        )
-
-    return incremental_refresh(
-        spark,
-        sf_dir,
-        "documents.parquet",
-        "dcs_postings_",
-        ptbl,
-        append,
-        sibling_renames=("dcs_poststats_",),
     )
 
 
@@ -4178,10 +3956,9 @@ _CMS_PREFIX = f"dcs_cmssketch{_Q158_D}x{_Q158_W}_"
 
 
 def _cms_tables(sf_dir: str) -> tuple[str]:
-    from dask_cuml_spark.operators.layout import layout_tag
+    from dask_cuml_spark.layouts import layout_tables
 
-    tag = layout_tag(sf_dir, "documents.parquet")
-    return (f"{_CMS_PREFIX}{tag}",)
+    return layout_tables("cms", sf_dir)
 
 
 def _cms_counters(
@@ -4200,42 +3977,6 @@ def _cms_counters(
         .select("r", _cms_bucket(F.col("x")).alias("bucket"))
         .groupBy("r", "bucket")
         .agg(F.count(F.lit(1)).alias("c"))
-    )
-
-
-def cms_layout(spark: SparkSession, sf_dir: str) -> float:
-    """One-time sketch write (d×w ≤ 244 rows) + manifest."""
-    import time as _time
-
-    from dask_cuml_spark.operators.layout import (
-        drop_table_and_location,
-        write_layout_manifest,
-    )
-
-    t0 = _time.perf_counter()
-    (tbl,) = _cms_tables(sf_dir)
-    drop_table_and_location(spark, tbl)
-    _cms_counters(spark, sf_dir).write.mode("overwrite").saveAsTable(tbl)
-    write_layout_manifest(spark, sf_dir, "documents.parquet", tbl)
-    return _time.perf_counter() - t0
-
-
-def cms_layout_refresh(spark: SparkSession, sf_dir: str) -> float | None:
-    """Append-only refresh: ONE batch-sized delta set (≤ d×w rows)
-    appends; readers SUM. The mergeable-summary property IS the
-    incremental path — no rename-time arithmetic at all."""
-    from dask_cuml_spark.operators.layout import incremental_refresh
-
-    (tbl,) = _cms_tables(sf_dir)
-
-    def append(spark_, new_files, old_tbl):
-        batch = spark_.read.parquet(*new_files).select("doc_id", "text")
-        _cms_counters(spark_, sf_dir, d=batch).write.mode(
-            "append"
-        ).saveAsTable(old_tbl)
-
-    return incremental_refresh(
-        spark, sf_dir, "documents.parquet", _CMS_PREFIX, tbl, append
     )
 
 

@@ -1238,9 +1238,7 @@ def q138_pq_adc_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     # from the bucketed table FAISS-style instead of re-encoding the
     # corpus per invocation); otherwise the session-memoized fit+encode
     # (the oracle path — bit-identical codes, pytest-pinned)
-    codebooks, _centers, coded, from_layout = _pq_serving(
-        spark, sf_dir, 8, 16
-    )
+    codebooks, _centers, coded, from_layout = _pq_serving(spark, sf_dir)
     # fresh path is session-memoized + checkpointed inside _pq_serving;
     # layout path is a plain table scan — no extra materialization here
     codes = coded.select("vec_id", "codes")
@@ -1358,7 +1356,7 @@ def _ann_invariants(topk, exact, min_hits: int):
 
 
 # ---------------------------------------------------------------------------
-# PQ serving layout (r12, the fourth ensure_layouts entry): the posture
+# PQ serving layout (layouts 'pq'): the posture
 # FAISS calls "build the index" — a real serving stack encodes the
 # corpus ONCE at ingest and every search reads 8-byte codes from a
 # stored table; q138/q141 re-encoding the corpus per invocation was the
@@ -1379,175 +1377,45 @@ def _ann_invariants(topk, exact, min_hits: int):
 # fit+encode path; both fits are deterministic, so stored codes equal
 # freshly-encoded ones bit-for-bit (pytest-pinned).
 # ---------------------------------------------------------------------------
-def _pq_tables(sf_dir: str, m: int = 8, k: int = 16) -> tuple[str, str]:
-    from dask_cuml_spark.operators.layout import layout_tag
+def _pq_tables(sf_dir: str) -> tuple[str, str]:
+    from dask_cuml_spark.layouts import layout_tables
 
-    tag = layout_tag(sf_dir, "embeddings.parquet")
-    return (f"dcs_pqcodes{m}x{k}_{tag}", f"dcs_pqmodel{m}x{k}_{tag}")
+    return layout_tables("pq", sf_dir)
 
 
-def pq_layout(
-    spark: SparkSession, sf_dir: str, m: int = 8, k: int = 16
-) -> float:
-    """One-time PQ index build. Returns wall seconds spent writing."""
-    import time as _time
+def _pq_model(rows):
+    """(codebooks, coarse_centers) from the stored model rows."""
+    import numpy as np
 
-    from dask_cuml_spark.operators.layout import drop_table_and_location
-    from dask_cuml_spark.operators.quantize import (
-        _assignment_expr_on,
-        pq_encode,
-    )
-
-    t0 = _time.perf_counter()
-    codes_tbl, model_tbl = _pq_tables(sf_dir, m, k)
-    for t in (codes_tbl, model_tbl):
-        drop_table_and_location(spark, t)
-    codebooks, _models = _fitted_pq(spark, sf_dir, m, k)
-    idx = _fitted_ivf(spark, sf_dir)
-    e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    # ONE zero-shuffle projection: m PQ argmins + the coarse-cell argmin
-    # side by side, straight into the bucketed write (no join against
-    # idx.cells_ — the assignment expression is the same one the index
-    # used, so labels agree by construction)
-    coded = pq_encode(e, codebooks).select(
-        "vec_id",
-        _assignment_expr_on(F.col("embedding"), idx.centers_).alias(
-            "cell_id"
-        ),
-        "codes",
-    )
-    n_buckets = max(8, idx.n_cells_)
-    (
-        coded.repartition(n_buckets, F.col("cell_id"))
-        .write.mode("overwrite")
-        .bucketBy(n_buckets, "cell_id")
-        .sortBy("cell_id")
-        .saveAsTable(codes_tbl)
-    )
-    rows = [
-        ("pq", s, j, [float(x) for x in codebooks[s][j]])
-        for s in range(len(codebooks))
-        for j in range(codebooks[s].shape[0])
-    ] + [
-        ("ivf", 0, j, [float(x) for x in idx.centers_[j]])
-        for j in range(len(idx.centers_))
+    pq = sorted((r for r in rows if r.kind == "pq"), key=lambda r: (r.s, r.j))
+    iv = sorted((r for r in rows if r.kind == "ivf"), key=lambda r: r.j)
+    codebooks = [
+        np.array([r.center for r in pq if r.s == s])
+        for s in range(max(r.s for r in pq) + 1)
     ]
-    rows_lit(
-        spark, rows, "kind string, s int, j int, center array<double>"
-    ).write.mode("overwrite").saveAsTable(model_tbl)
-    # the append-only detector's baseline for pq_layout_refresh
-    from dask_cuml_spark.operators.layout import write_layout_manifest
-
-    write_layout_manifest(spark, sf_dir, "embeddings.parquet", codes_tbl)
-    return _time.perf_counter() - t0
+    return codebooks, np.array([r.center for r in iv])
 
 
-def pq_layout_refresh(
-    spark: SparkSession, sf_dir: str, m: int = 8, k: int = 16
-) -> float | None:
-    """Append-only incremental refresh of the PQ serving index — the
-    literal FAISS ``IndexIVFPQ.add()`` semantics: NEW vectors are
-    encoded with the EXISTING codebooks and coarse centroids (read
-    from the stored model sidecar — add() never retrains) and appended
-    into the bucketed codes table; the model sidecar rides along to
-    the new fingerprint tag unchanged. The pin is therefore
-    incremental-codes ≡ same-model encode of the new rows (pytest),
-    NOT ≡ a from-scratch rebuild — a rebuild refits on the grown
-    corpus, which is retraining, not adding. Returns write seconds on
-    a refresh, None when not applicable."""
-    from dask_cuml_spark.operators.layout import incremental_refresh
-
-    codes_tbl, _model_tbl = _pq_tables(sf_dir, m, k)
-    model_prefix = f"dcs_pqmodel{m}x{k}_"
-
-    def append(spark_, new_files, old_codes_tbl):
-        import numpy as np
-
-        from dask_cuml_spark.operators.quantize import (
-            _assignment_expr_on,
-            pq_encode,
-        )
-
-        old_tag = old_codes_tbl.rsplit("_", 1)[1]
-        mr = spark_.table(f"{model_prefix}{old_tag}").collect()
-        pq = sorted(
-            (r for r in mr if r.kind == "pq"), key=lambda r: (r.s, r.j)
-        )
-        iv = sorted((r for r in mr if r.kind == "ivf"), key=lambda r: r.j)
-        codebooks = [
-            np.array([r.center for r in pq if r.s == s])
-            for s in range(max(r.s for r in pq) + 1)
-        ]
-        centers = np.array([r.center for r in iv])
-        n_buckets = int(
-            next(
-                r.data_type
-                for r in spark_.sql(
-                    f"DESCRIBE EXTENDED {old_codes_tbl}"
-                ).collect()
-                if r.col_name == "Num Buckets"
-            )
-        )
-        batch = spark_.read.parquet(*new_files).select(
-            "vec_id", "embedding"
-        )
-        coded = pq_encode(_par(batch), codebooks).select(
-            "vec_id",
-            _assignment_expr_on(F.col("embedding"), centers).alias(
-                "cell_id"
-            ),
-            "codes",
-        )
-        (
-            coded.repartition(n_buckets, F.col("cell_id"))
-            .write.mode("append")
-            .bucketBy(n_buckets, "cell_id")
-            .sortBy("cell_id")
-            .saveAsTable(old_codes_tbl)
-        )
-
-    return incremental_refresh(
-        spark,
-        sf_dir,
-        "embeddings.parquet",
-        f"dcs_pqcodes{m}x{k}_",
-        codes_tbl,
-        append,
-        sibling_renames=(model_prefix,),
-    )
-
-
-def _pq_serving(spark: SparkSession, sf_dir: str, m: int = 8, k: int = 16):
+def _pq_serving(spark: SparkSession, sf_dir: str):
     """(codebooks, coarse_centers, codes_df, from_layout) — the serving
     inputs, from the stored index when provisioned (model sidecar is a
     few hundred collected rows; codes are a bucketed table scan),
     otherwise the deterministic in-session fit+encode (the oracle
     path; bit-identical outputs, pytest-pinned)."""
-    import numpy as np
-
-    codes_tbl, model_tbl = _pq_tables(sf_dir, m, k)
+    codes_tbl, model_tbl = _pq_tables(sf_dir)
     if spark.catalog.tableExists(codes_tbl) and spark.catalog.tableExists(
         model_tbl
     ):
-        mr = spark.table(model_tbl).collect()
-        pq = sorted(
-            (r for r in mr if r.kind == "pq"), key=lambda r: (r.s, r.j)
-        )
-        iv = sorted((r for r in mr if r.kind == "ivf"), key=lambda r: r.j)
-        codebooks = [
-            np.array([r.center for r in pq if r.s == s])
-            for s in range(max(r.s for r in pq) + 1)
-        ]
-        centers = np.array([r.center for r in iv])
+        codebooks, centers = _pq_model(spark.table(model_tbl).collect())
         return codebooks, centers, spark.table(codes_tbl), True
-    codebooks, _models = _fitted_pq(spark, sf_dir, m, k)
+    codebooks, _models = _fitted_pq(spark, sf_dir)
     idx = _fitted_ivf(spark, sf_dir)
     # the in-session encode is memoized + checkpointed per
     # (session, fixture) — the _fitted_ivf convention: a PQ index is
     # encoded ONCE and searched many times, so repeat invocations
     # (bench steady-state) time the SEARCH, not a re-encode; a fresh
     # driver session still pays and proves the full encode path
-    ck = (spark.sparkContext.applicationId, sf_dir, m, k, "codes")
+    ck = (spark.sparkContext.applicationId, sf_dir, "codes")
     coded = _PQ_FIT_CACHE.get(ck)
     if coded is None:
         from dask_cuml_spark.operators.quantize import (
@@ -1602,7 +1470,7 @@ def _pq_luts(qrows, cb) -> list:
 #   - probe selection + LUTs are model-state, built driver-side from
 #     the serving sidecar (20 queries x n_cells distances in numpy);
 #   - the candidate scan is a LITERAL cell_id IN (probed) filter — on
-#     the stored layout (pq_layout: codes bucketBy(cell_id)) parquet
+#     the stored layout (layouts 'pq': codes bucketBy(cell_id)) parquet
 #     bucket pruning means non-probed buckets are never READ
 #     (SelectedBucketsCount < total, plan-pinned) — followed by a
 #     broadcast join of the (query, cell, LUT) probe rows: the corpus
@@ -1766,8 +1634,7 @@ def q145_signhash_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         key=lambda r: r.vec_id,
     )
     Q = np.stack([np.asarray(r.embedding, dtype=np.float64) for r in qrows])
-    _seed = 7  # carried alongside planes into _sig_serving (advisor r12)
-    planes = hyperplanes(_Q145_NBITS, Q.shape[1], _seed)
+    planes = hyperplanes(_Q145_NBITS, Q.shape[1], _SIG_SEED)
     # query signatures driver-side through the SAME function the kernel
     # runs, so query and database bits share one code path
     qsigs = signatures_of(Q, planes)
@@ -1782,7 +1649,7 @@ def q145_signhash_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     # session-memoized kernel hash (the oracle path, bit-identical —
     # planes are seed-derived so the stored and fresh bits share one
     # derivation, pytest-pinned)
-    sigs, _from_layout = _sig_serving(spark, sf_dir, planes, _seed)
+    sigs, _from_layout = _sig_serving(spark, sf_dir, planes, _SIG_SEED)
     big = source_size_bytes(sf_dir, "embeddings") > GATE_BYTES
     scored = hamming_candidates(
         sigs,
@@ -1828,8 +1695,8 @@ def q145_signhash_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# stored binary signature index (the fifth ensure_layouts entry) —
-# FAISS IndexBinaryFlat's add/search split: signature_layout() is the
+# stored binary signature index (layouts 'signs') — FAISS
+# IndexBinaryFlat's add/search split: the layout build is the
 # one-time "add" (GEMM-hash the corpus, persist 16 bytes/row);
 # _sig_serving() routes q145 to the stored table when provisioned,
 # else to the session-memoized fresh hash (the driver's oracle path).
@@ -1841,109 +1708,32 @@ def q145_signhash_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
 # and fresh signatures share one derivation — no model sidecar needed,
 # the (nbits, seed) pair is part of the table name.
 # ---------------------------------------------------------------------------
-def _sig_tables(
-    sf_dir: str, nbits: int = 128, seed: int = 7
-) -> tuple[str]:
-    from dask_cuml_spark.operators.layout import layout_tag
-
-    tag = layout_tag(sf_dir, "embeddings.parquet")
-    return (f"dcs_signs{nbits}s{seed}_{tag}",)
+_SIG_SEED = 7  # the stored signature index's plane seed
 
 
-def signature_layout(
-    spark: SparkSession, sf_dir: str, nbits: int = 128, seed: int = 7
-) -> float:
-    """One-time binary signature index build. Returns write seconds."""
-    import time as _time
+def _sig_tables(sf_dir: str) -> tuple[str]:
+    from dask_cuml_spark.layouts import layout_tables
 
-    from dask_cuml_spark.operators.binhash import (
-        hyperplanes,
-        sign_signatures,
-    )
-    from dask_cuml_spark.operators.layout import drop_table_and_location
-
-    t0 = _time.perf_counter()
-    (tbl,) = _sig_tables(sf_dir, nbits, seed)
-    drop_table_and_location(spark, tbl)
-    e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    # dim probe from a NON-NULL row (advisor r12): the first row of a
-    # dirty corpus may carry a NULL embedding, the exact case
-    # sign_signatures handles downstream
-    dim = len(
-        e.filter(F.col("embedding").isNotNull()).first()["embedding"]
-    )
-    planes = hyperplanes(nbits, dim, seed)
-    sign_signatures(_par(e), "vec_id", "embedding", planes).write.mode(
-        "overwrite"
-    ).saveAsTable(tbl)
-    # the append-only detector's baseline for signature_layout_refresh
-    from dask_cuml_spark.operators.layout import write_layout_manifest
-
-    write_layout_manifest(spark, sf_dir, "embeddings.parquet", tbl)
-    return _time.perf_counter() - t0
+    return layout_tables("signs", sf_dir)
 
 
-def signature_layout_refresh(
-    spark: SparkSession, sf_dir: str, nbits: int = 128, seed: int = 7
-) -> float | None:
-    """Append-only incremental refresh of the binary signature index
-    (r13 — the grams mechanism generalized via
-    operators/layout.incremental_refresh): a vector-ingest pipeline
-    appends embeddings part files; only the NEW vectors are GEMM-
-    hashed and appended (planes are seed-derived model-state, so old
-    and new signatures share one derivation by construction — no
-    model sidecar to reconcile). Returns write seconds on a refresh,
-    None when not applicable (caller falls back to the full build)."""
-    from dask_cuml_spark.operators.layout import incremental_refresh
-
-    (tbl,) = _sig_tables(sf_dir, nbits, seed)
-
-    def append(spark_, new_files, old_tbl):
-        from dask_cuml_spark.operators.binhash import (
-            hyperplanes,
-            sign_signatures,
-        )
-
-        batch = spark_.read.parquet(*new_files).select(
-            "vec_id", "embedding"
-        )
-        # dim probe from the FULL source (the original rows are always
-        # present and non-null there) — an all-null appended batch
-        # still appends its rows (null sigs), the dirty-input class
-        e = load_table(spark_, sf_dir, "embeddings")
-        dim = len(
-            e.filter(F.col("embedding").isNotNull()).first()["embedding"]
-        )
-        planes = hyperplanes(nbits, dim, seed)
-        sign_signatures(_par(batch), "vec_id", "embedding", planes).write.mode(
-            "append"
-        ).saveAsTable(old_tbl)
-
-    return incremental_refresh(
-        spark,
-        sf_dir,
-        "embeddings.parquet",
-        f"dcs_signs{nbits}s{seed}_",
-        tbl,
-        append,
-    )
-
-
-def _sig_serving(spark: SparkSession, sf_dir: str, planes, seed: int = 7):
+def _sig_serving(
+    spark: SparkSession, sf_dir: str, planes, seed: int = _SIG_SEED
+):
     """(signatures_df, from_layout) — stored table when provisioned,
     else the session-memoized kernel hash (the _fitted_ivf convention:
     build once, search many; a fresh driver session pays and proves
     the full kernel path).
 
-    ``seed`` MUST be the seed the passed planes were derived with
-    (advisor r12): the stored-table name and the memo key both carry
-    it, so planes from a non-default seed can never silently serve
-    another seed's bits."""
+    ``seed`` MUST be the seed the passed planes were derived with: the
+    stored table holds only the (_Q145_NBITS, _SIG_SEED) bits and the
+    memo key carries both, so other planes never serve those bits."""
     from dask_cuml_spark.operators.binhash import sign_signatures
 
     nbits = planes.shape[0]
-    (tbl,) = _sig_tables(sf_dir, nbits, seed)
-    if spark.catalog.tableExists(tbl):
+    (tbl,) = _sig_tables(sf_dir)
+    stored = (nbits, seed) == (_Q145_NBITS, _SIG_SEED)
+    if stored and spark.catalog.tableExists(tbl):
         return spark.table(tbl), True
     ck = (spark.sparkContext.applicationId, sf_dir, nbits, seed, "sigs")
     sigs = _SIG_CACHE.get(ck)
@@ -2139,14 +1929,13 @@ def signhash_serving_topk(
         key=lambda r: r.vec_id,
     )
     Q = np.stack([np.asarray(r.embedding, dtype=np.float64) for r in qrows])
-    seed = 7
-    planes = hyperplanes(_Q145_NBITS, Q.shape[1], seed)
+    planes = hyperplanes(_Q145_NBITS, Q.shape[1], _SIG_SEED)
     qsigs = signatures_of(Q, planes)
     queries = [
         (int(r.vec_id), [int(w) for w in qsigs[i]])
         for i, r in enumerate(qrows)
     ]
-    sigs, _from_layout = _sig_serving(spark, sf_dir, planes, seed)
+    sigs, _from_layout = _sig_serving(spark, sf_dir, planes, _SIG_SEED)
     n = _Q145_SHORTLIST if shortlist is None else shortlist
     big = source_size_bytes(sf_dir, "embeddings") > GATE_BYTES
     scored = hamming_candidates(
@@ -2565,7 +2354,7 @@ def _q162_dense_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     qf = e.filter(F.col("vec_id") == _Q162_QV).select(
         F.col("embedding").alias("qv")
     )
-    (sig_tbl,) = _sig_tables(sf_dir, _Q145_NBITS, 7)
+    (sig_tbl,) = _sig_tables(sf_dir)
     if spark.catalog.tableExists(sig_tbl):
         # signs-served: hamming shortlist off the 16-byte/row stored
         # signatures, then exact re-rank over candidate rows only

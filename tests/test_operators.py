@@ -924,11 +924,12 @@ def test_q121_gram_layout_branch(spark):
     GONE — the only remaining exchange is the unavoidable doc_id
     aggregate."""
     import dask_cuml_spark.queries.text as T
+    from dask_cuml_spark.layouts import build_layout
 
     plain = {
         tuple(r) for r in T.q121_boilerplate_ngrams(spark, SF).collect()
     }
-    T.gram_layout(spark, SF, n_buckets=4)
+    build_layout(spark, SF, "grams")
     try:
         d = T.q121_boilerplate_ngrams(spark, SF)
         got = {tuple(r) for r in d.collect()}
@@ -955,9 +956,10 @@ def test_q02_bucketed_layout_branch(spark, monkeypatch):
     layout with the eager-agg shape ('bucketed-eager') instead — same
     values, orderkey rollup/join still off the bucketed scans."""
     import dask_cuml_spark.queries.relational as rel
+    from dask_cuml_spark.layouts import build_layout
 
     plain = {tuple(r) for r in rel.q02_revenue_by_nation(spark, SF).collect()}
-    rel.q02_bucketed_layout(spark, SF, n_buckets=4)
+    build_layout(spark, SF, "q02")
     try:
         assert rel.q02_plan_branch(spark, SF) == "bucketed"
         d = rel.q02_revenue_by_nation(spark, SF)
@@ -1003,11 +1005,12 @@ def test_q119_gram_layout_branch(spark):
     a bucketed scan + broadcast semi-overlap + one doc_id aggregate,
     value-identical to the construction branch."""
     import dask_cuml_spark.queries.text as T
+    from dask_cuml_spark.layouts import build_layout
 
     plain = {
         tuple(r) for r in T.q119_contamination_check(spark, SF).collect()
     }
-    T.gram_layout(spark, SF, n_buckets=4)
+    build_layout(spark, SF, "grams")
     try:
         d = T.q119_contamination_check(spark, SF)
         got = {tuple(r) for r in d.collect()}
@@ -1023,16 +1026,17 @@ def test_q119_gram_layout_branch(spark):
 
 def test_q112_stored_index_branch(spark):
     """r9 (verdict task 3): with the corpus LSH index provisioned
-    (q112_index_layout), q112 signs ONLY the new batch and probes the
+    (layouts 'q112'), q112 signs ONLY the new batch and probes the
     stored band/shingle tables — value-identical to the
     derive-in-query branch (signatures are deterministic; shingle-set
     array order never matters downstream)."""
     import dask_cuml_spark.queries.pandas_udfs as P
+    from dask_cuml_spark.layouts import build_layout
 
     plain = {
         tuple(r) for r in P.q112_incremental_dedup(spark, SF).collect()
     }
-    P.q112_index_layout(spark, SF, n_buckets=4)
+    build_layout(spark, SF, "q112")
     bt, st = P._q112_index_tables(SF)
     try:
         got = {
@@ -1088,25 +1092,34 @@ def test_ensure_layouts_steady_state_launches_no_jobs(spark, tmp_path):
     detector read the catalog with SHOW TABLES (not listTables, which
     collects a DataFrame: one job plus one per partition, per call), and
     each layout's manifest is a table property read with SHOW
-    TBLPROPERTIES (not a sidecar table collected back)."""
+    TBLPROPERTIES (not a sidecar table collected back). After one
+    appended part, each refresh reads the batch once with its schema
+    taken from the part's footer, so no schema-inference job runs."""
     import os
     import shutil
 
+    import pyarrow.parquet as pq_mod
     from conftest import SF_SMOKE
 
     import dask_cuml_spark.queries.text as T
     import dask_cuml_spark.queries.vector as V
     from dask_cuml_spark.benchlib import max_job_id
-    from dask_cuml_spark.layouts import ensure_layouts
+    from dask_cuml_spark.layouts import (
+        ensure_layouts,
+        layout_tables,
+        refresh_layout,
+    )
     from dask_cuml_spark.operators.layout import (
         read_layout_manifest,
         source_files,
     )
 
     sf = str(tmp_path / "sf")
-    os.makedirs(sf)
     for t in ("documents", "embeddings"):
-        shutil.copy(f"{SF_SMOKE}/{t}.parquet", f"{sf}/{t}.parquet")
+        os.makedirs(f"{sf}/{t}.parquet")
+        shutil.copy(
+            f"{SF_SMOKE}/{t}.parquet", f"{sf}/{t}.parquet/part-0.parquet"
+        )
     three = ("grams", "signs", "cms")
     first = ensure_layouts(spark, sf, layouts=three)
     assert all(first[n] > 0.0 for n in three)
@@ -1130,8 +1143,20 @@ def test_ensure_layouts_steady_state_launches_no_jobs(spark, tmp_path):
     for src, ts in tables.items():
         for t in ts:
             assert got[t] == source_files(sf, src), t
-    for ts in tables.values():
-        for t in ts:
+
+    for t in ("documents", "embeddings"):
+        part = pq_mod.read_table(f"{SF_SMOKE}/{t}.parquet").slice(0, 100)
+        pq_mod.write_table(part, f"{sf}/{t}.parquet/part-1.parquet")
+    # grams, signs and cms refreshes ran 4, 5 and 3 jobs when the batch
+    # schema was inferred; signs also probes the embedding width
+    for name, most in (("grams", 3), ("signs", 4), ("cms", 2)):
+        j0 = max_job_id(spark)
+        inc = refresh_layout(spark, sf, name)
+        jobs = max_job_id(spark) - j0
+        assert inc is not None and inc > 0.0 and jobs <= most, (name, jobs)
+        assert ensure_layouts(spark, sf, layouts=(name,)) == {name: 0.0}
+        for t in layout_tables(name, sf):
+            assert spark.catalog.tableExists(t), t
             spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
@@ -1146,8 +1171,9 @@ def test_layout_manifest_property_round_trip(spark, tmp_path):
     import pyarrow.parquet as pq_mod
     from conftest import SF_SMOKE
 
+    import dask_cuml_spark.layouts as L
     import dask_cuml_spark.queries.text as T
-    from dask_cuml_spark.layouts import ensure_layouts
+    from dask_cuml_spark.layouts import ensure_layouts, refresh_layout
     from dask_cuml_spark.operators.layout import (
         MANIFEST_PROPERTY,
         drop_table_and_location,
@@ -1184,19 +1210,19 @@ def test_layout_manifest_property_round_trip(spark, tmp_path):
     )
     assert read_layout_manifest(spark, tbl2) is None
     pq_mod.write_table(t.slice(400), os.path.join(ddir, "part-2.parquet"))
-    assert T.gram_layout_refresh(spark, sf) is None
+    assert refresh_layout(spark, sf, "grams") is None
     calls = []
-    real = T.gram_layout
+    real = L.build_layout
 
-    def _spy(sp, sd):
+    def _spy(sp, sd, name):
         calls.append(sd)
-        return real(sp, sd)
+        return real(sp, sd, name)
 
-    T.gram_layout = _spy
+    L.build_layout = _spy
     try:
         assert ensure_layouts(spark, sf, layouts=("grams",))["grams"] > 0.0
     finally:
-        T.gram_layout = real
+        L.build_layout = real
     assert calls == [sf]
     tbl3 = T._gram_table(sf)
     assert read_layout_manifest(spark, tbl3) == source_files(
@@ -1439,7 +1465,7 @@ def test_incremental_refresh_unknown_append_rebuilds(spark, tmp_path):
     import pyarrow.parquet as pq_mod
 
     import dask_cuml_spark.queries.text as T
-    from dask_cuml_spark.layouts import ensure_layouts
+    from dask_cuml_spark.layouts import ensure_layouts, refresh_layout
 
     sf = str(tmp_path / "sf")
     ddir = os.path.join(sf, "documents.parquet")
@@ -1452,7 +1478,7 @@ def test_incremental_refresh_unknown_append_rebuilds(spark, tmp_path):
     # marker-only append: the incremental path still applies (no data)
     open(os.path.join(ddir, "_SUCCESS"), "w").close()
     tbl_m = T._gram_table(sf)
-    inc = T.gram_layout_refresh(spark, sf)
+    inc = refresh_layout(spark, sf, "grams")
     assert inc is not None  # markers tolerated, not rebuild territory
     assert spark.catalog.tableExists(tbl_m)
 
@@ -1464,7 +1490,7 @@ def test_incremental_refresh_unknown_append_rebuilds(spark, tmp_path):
         t.slice(0, 5), os.path.join(ddir, ".hidden.parquet")
     )
     tbl_h = T._gram_table(sf)
-    assert T.gram_layout_refresh(spark, sf) is not None
+    assert refresh_layout(spark, sf, "grams") is not None
     assert spark.catalog.tableExists(tbl_h)
     stored_h = sorted(map(tuple, spark.table(tbl_h).collect()))
     fresh_h = sorted(map(tuple, T._positioned_grams(spark, sf).collect()))
@@ -1474,7 +1500,7 @@ def test_incremental_refresh_unknown_append_rebuilds(spark, tmp_path):
     # read, invisible to the suffix-filtered append list → must refuse
     # the fast path so the rebuild picks the rows up
     pq_mod.write_table(t.slice(300, 100), os.path.join(ddir, "part-1.data"))
-    assert T.gram_layout_refresh(spark, sf) is None
+    assert refresh_layout(spark, sf, "grams") is None
     rebuilt = ensure_layouts(spark, sf, layouts=("grams",))
     assert rebuilt["grams"] > 0.0
     tbl2 = T._gram_table(sf)
@@ -2810,11 +2836,12 @@ def test_q134_gram_layout_branch(spark):
     (only the per-doc window exchange remains) and values are
     identical to the construction branch."""
     import dask_cuml_spark.queries.text as T
+    from dask_cuml_spark.layouts import build_layout
 
     plain = {
         tuple(r) for r in T.q134_exact_substring_dedup(spark, SF).collect()
     }
-    T.gram_layout(spark, SF, n_buckets=4)
+    build_layout(spark, SF, "grams")
     try:
         d = T.q134_exact_substring_dedup(spark, SF)
         got = {tuple(r) for r in d.collect()}
@@ -3054,6 +3081,7 @@ def test_pq_layout_branch(spark):
     from pyspark.sql import functions as F
 
     import dask_cuml_spark.queries.vector as V
+    from dask_cuml_spark.layouts import build_layout
 
     plain138 = {
         tuple(r) for r in V.q138_pq_adc_search(spark, SF).collect()
@@ -3062,7 +3090,7 @@ def test_pq_layout_branch(spark):
     cb, centers, fresh, from_layout = V._pq_serving(spark, SF)
     assert not from_layout
     fresh_codes = {r.vec_id: (r.cell_id, list(r.codes)) for r in fresh.collect()}
-    V.pq_layout(spark, SF)
+    build_layout(spark, SF, "pq")
     old_conf = spark.conf.get(
         "spark.sql.sources.bucketing.autoBucketedScan.enabled"
     )
@@ -3397,6 +3425,7 @@ def test_signature_layout_branch(spark):
     import numpy as np
 
     import dask_cuml_spark.queries.vector as V
+    from dask_cuml_spark.layouts import build_layout
     from dask_cuml_spark.operators.binhash import hyperplanes
 
     plain = {tuple(r) for r in V.q145_signhash_ann(spark, SF).collect()}
@@ -3404,7 +3433,7 @@ def test_signature_layout_branch(spark):
     fresh, from_layout = V._sig_serving(spark, SF, planes)
     assert not from_layout
     fresh_sigs = {r.vec_id: list(r.sig) for r in fresh.collect()}
-    V.signature_layout(spark, SF)
+    build_layout(spark, SF, "signs")
     try:
         stored, from_layout2 = V._sig_serving(spark, SF, planes)
         assert from_layout2
@@ -3450,6 +3479,7 @@ def test_pack_layout_branch(spark):
     prefix-sum computation, and q142 (which consumes q126's frame)
     must return the same audit on either branch."""
     import dask_cuml_spark.queries.text as T
+    from dask_cuml_spark.layouts import build_layout
 
     plain126 = sorted(
         tuple(r) for r in T.q126_sequence_packing(spark, SF).collect()
@@ -3457,7 +3487,7 @@ def test_pack_layout_branch(spark):
     plain142 = sorted(
         tuple(r) for r in T.q142_packing_audit(spark, SF).collect()
     )
-    T.pack_layout(spark, SF)
+    build_layout(spark, SF, "pack")
     try:
         assert spark.catalog.tableExists(T._pack_tables(SF)[0])
         stored126 = sorted(
@@ -3479,9 +3509,10 @@ def test_q148_gram_layout_branch(spark):
     are bucket-local — no corpus-wide gram-hash exchange survives —
     and values are identical to the construction branch."""
     import dask_cuml_spark.queries.text as T
+    from dask_cuml_spark.layouts import build_layout
 
     plain = {tuple(r) for r in T.q148_ngram_novelty(spark, SF).collect()}
-    T.gram_layout(spark, SF, n_buckets=4)
+    build_layout(spark, SF, "grams")
     try:
         d = T.q148_ngram_novelty(spark, SF)
         got = {tuple(r) for r in d.collect()}
@@ -3953,7 +3984,7 @@ def test_ingest_stream_end_to_end(spark, tmp_path):
 
     import pyarrow.parquet as pq_mod
 
-    import dask_cuml_spark.queries.relational as R
+    import dask_cuml_spark.layouts as L
     import dask_cuml_spark.queries.text as T
     import dask_cuml_spark.queries.vector as V
     from dask_cuml_spark.io import load_table as lt
@@ -3991,17 +4022,14 @@ def test_ingest_stream_end_to_end(spark, tmp_path):
     def _boom(*_a, **_k):
         raise AssertionError("full rebuild ran during the ingest stream")
 
-    saved = (T.gram_layout, V.signature_layout, V.pq_layout,
-             T.pack_layout, T.postings_layout)
-    T.gram_layout = V.signature_layout = V.pq_layout = _boom
-    T.pack_layout = T.postings_layout = _boom
+    saved = L.build_layout
+    L.build_layout = _boom
     try:
         stats = run_ingest_stream(
             spark, sf, staging, str(tmp_path / "ckpt"), layouts=layouts
         )
     finally:
-        (T.gram_layout, V.signature_layout, V.pq_layout,
-         T.pack_layout, T.postings_layout) = saved
+        L.build_layout = saved
 
     assert [s["rows"] for s in stats] == [40, 40, 40]
     for s in stats:
@@ -4604,6 +4632,7 @@ def test_postings_layout_serving_and_incremental_refresh(spark, tmp_path):
 
     import pyarrow.parquet as pq_mod
 
+    import dask_cuml_spark.layouts as L
     import dask_cuml_spark.queries.text as T
     from dask_cuml_spark.io import load_table as lt
     from dask_cuml_spark.layouts import ensure_layouts
@@ -4641,13 +4670,12 @@ def test_postings_layout_serving_and_incremental_refresh(spark, tmp_path):
     def _boom(*_a, **_k):
         raise AssertionError("full postings rebuild ran during refresh")
 
-    saved = T.postings_layout
-    T.postings_layout = _boom
-    import dask_cuml_spark.layouts  # noqa: F401 — spec resolves lazily
+    saved = L.build_layout
+    L.build_layout = _boom
     try:
         again = ensure_layouts(spark, sf, layouts=("postings",))
     finally:
-        T.postings_layout = saved
+        L.build_layout = saved
     assert again["postings"] > 0.0  # refresh ran, not 0.0, not rebuild
 
     ptbl2, stbl2 = T._postings_tables(sf)
@@ -4698,6 +4726,7 @@ def test_cms_layout_additive_refresh(spark, tmp_path):
 
     import pyarrow.parquet as pq_mod
 
+    import dask_cuml_spark.layouts as L
     import dask_cuml_spark.queries.text as T
     from dask_cuml_spark.layouts import ensure_layouts
     from dask_cuml_spark.streaming.ingest import synth_staging_files
@@ -4739,12 +4768,12 @@ def test_cms_layout_additive_refresh(spark, tmp_path):
     def _boom(*_a, **_k):
         raise AssertionError("full cms rebuild ran during refresh")
 
-    saved = T.cms_layout
-    T.cms_layout = _boom
+    saved = L.build_layout
+    L.build_layout = _boom
     try:
         again = ensure_layouts(spark, sf, layouts=("cms",))
     finally:
-        T.cms_layout = saved
+        L.build_layout = saved
     assert again["cms"] > 0.0
 
     (tbl,) = T._cms_tables(sf)
@@ -4896,7 +4925,7 @@ def test_q162_multi_layout_serving_identity(spark, tmp_path):
     assert built["postings"] > 0.0 and built["signs"] > 0.0
     # both gates really open — the query takes both stored paths
     ptbl, stbl = _postings_tables(sf)
-    (sig,) = V._sig_tables(sf, V._Q145_NBITS, 7)
+    (sig,) = V._sig_tables(sf)
     assert spark.catalog.tableExists(ptbl)
     assert spark.catalog.tableExists(stbl)
     assert spark.catalog.tableExists(sig)
@@ -4972,6 +5001,7 @@ def test_ingest_stream_all_eight_layouts_chaos(spark, tmp_path):
 
     import pyarrow.parquet as pq_mod
 
+    import dask_cuml_spark.layouts as L
     import dask_cuml_spark.queries.pandas_udfs as P
     import dask_cuml_spark.queries.relational as R
     import dask_cuml_spark.queries.text as T
@@ -5039,37 +5069,26 @@ def test_ingest_stream_all_eight_layouts_chaos(spark, tmp_path):
     # stream B: postings MUST take its full writer (spied), every
     # other corpus layout MUST stay incremental (poisoned)
     calls = {"postings": 0}
-    real_postings = T.postings_layout
+    real_build = L.build_layout
 
-    def _spy(sp, sd):
+    def _spy(sp, sd, name):
+        if name != "postings":
+            raise AssertionError("poisoned full writer ran during stream B")
         calls["postings"] += 1
-        return real_postings(sp, sd)
-
-    def _boom(*_a, **_k):
-        raise AssertionError("poisoned full writer ran during stream B")
+        return real_build(sp, sd, name)
 
     synth_staging_files(
         str(tmp_path / "stageB"), n_batches=1, rows_per_batch=40,
         start_doc_id=start + 40,
     )
-    saved = (
-        T.gram_layout, V.signature_layout, V.pq_layout, T.pack_layout,
-        T.cms_layout, P.q112_index_layout, R.q02_bucketed_layout,
-        T.postings_layout,
-    )
-    T.gram_layout = V.signature_layout = V.pq_layout = _boom
-    T.pack_layout = T.cms_layout = _boom
-    P.q112_index_layout = R.q02_bucketed_layout = _boom
-    T.postings_layout = _spy
+    L.build_layout = _spy
     try:
         stats_b = run_ingest_stream(
             spark, sf, str(tmp_path / "stageB"),
             str(tmp_path / "ckptB"), layouts=eight,
         )
     finally:
-        (T.gram_layout, V.signature_layout, V.pq_layout, T.pack_layout,
-         T.cms_layout, P.q112_index_layout, R.q02_bucketed_layout,
-         T.postings_layout) = saved
+        L.build_layout = real_build
     assert [s["rows"] for s in stats_b] == [40]
     assert calls["postings"] >= 1  # the fallback full rebuild ran
 
