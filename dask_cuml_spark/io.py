@@ -13,6 +13,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+from dask_cuml_spark.plans.cost import release_session_state, session_state
 
 TABLES = (
     "region",
@@ -33,12 +36,11 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
-# Opt-in scan cache (bench protocol): fixtures are immutable, so the
-# suite can share one cached DataFrame per table instead of re-creating
-# (and re-analyzing) the scan per query — measured ~17% off repeated-
-# query wall time at sf0.1. Keyed by (sessionId, sf_dir, name) so a new
-# driver session never sees another session's plans.
-_TABLE_CACHE: dict[tuple, DataFrame] = {}
+# Opt-in scan cache (bench protocol): the suite shares one cached
+# DataFrame per table instead of re-creating (and re-analyzing) the scan
+# per query, measured ~17% off repeated-query wall time at sf0.1. Each
+# table is session state (plans/cost.session_state): a source that
+# changes is cached afresh, and the stale entry is unpersisted first.
 _CACHE_ENABLED = False
 
 
@@ -46,29 +48,32 @@ def enable_table_cache(enabled: bool = True) -> None:
     global _CACHE_ENABLED
     _CACHE_ENABLED = enabled
     if not enabled:
-        _TABLE_CACHE.clear()
+        # unpersist, not just forget: Spark's CacheManager would keep
+        # answering every later scan of the same paths from the old rows
+        release_session_state("table")
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    if _CACHE_ENABLED:
-        # applicationId, not id(spark): id() can be reused after the old
-        # session is GC'd, which would serve plans bound to a dead session
-        key = (spark.sparkContext.applicationId, sf_dir, name)
-        if key not in _TABLE_CACHE:
-            # NOTE (round 5): the fixture files are ONE row group each,
-            # so this cached frame is 1-2 partitions and narrow stages
-            # run near-serial. A suite-wide repartition-to-cores here
-            # was tried and MEASURED A NET LOSS at sf0.1 (+0.3-0.5 s on
-            # nearly every query: 32-way task overhead dwarfs the CPU
-            # gain when a stage's work is sub-100 ms; suite 39.4 →
-            # 69.0 s). Only explode-heavy passes win, and those
-            # repartition inside the query (q110, q114). At deployment
-            # scale the scan has many splits and none of this applies.
-            df = _load_table_uncached(spark, sf_dir, name).cache()
-            df.count()  # materialize once
-            _TABLE_CACHE[key] = df
-        return _TABLE_CACHE[key]
-    return _load_table_uncached(spark, sf_dir, name)
+    if not _CACHE_ENABLED:
+        return _load_table_uncached(spark, sf_dir, name)
+
+    def build():
+        # NOTE (round 5): the fixture files are ONE row group each, so
+        # this cached frame is 1-2 partitions and narrow stages run
+        # near-serial. A suite-wide repartition-to-cores here was tried
+        # and MEASURED A NET LOSS at sf0.1 (+0.3-0.5 s on nearly every
+        # query: 32-way task overhead dwarfs the CPU gain when a stage's
+        # work is sub-100 ms; suite 39.4 → 69.0 s). Only explode-heavy
+        # passes win, and those repartition inside the query (q110,
+        # q114). At deployment scale the scan has many splits and none
+        # of this applies.
+        df = _load_table_uncached(spark, sf_dir, name).cache()
+        df.count()  # materialize once
+        return df
+
+    return session_state(
+        spark, ("table", name), sf_dir, (f"{name}.parquet",), build
+    )
 
 
 def source_size_bytes(sf_dir: str, name: str) -> int:
@@ -79,17 +84,15 @@ def source_size_bytes(sf_dir: str, name: str) -> int:
     (a cached table substitutes its uncompressed InMemoryRelation into
     every matching plan), while file bytes measure the data itself.
     At 100 TB this is one namenode/object-store stat, not a scan."""
+    from dask_cuml_spark.operators.layout import source_files
+
     path = table_path(sf_dir, name)
-    if os.path.isfile(path):
-        return os.path.getsize(path)
-    if not os.path.isdir(path):
+    if not os.path.exists(path):
         # a typo'd fixture dir must surface, not silently read as
         # "0 bytes" and send every size gate down the small-input branch
         raise FileNotFoundError(f"no parquet at {path}")
-    total = 0
-    for dirpath, _dirs, files in os.walk(path):
-        total += sum(os.path.getsize(os.path.join(dirpath, f)) for f in files)
-    return total
+    files = source_files(sf_dir, os.path.basename(path))
+    return sum(size for size, _ in files.values())
 
 
 def with_event_time(df: DataFrame) -> DataFrame:
@@ -129,18 +132,70 @@ def with_event_time(df: DataFrame) -> DataFrame:
     )
 
 
-def _load_table_uncached(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+def first_part(path: str) -> str:
+    """The parquet file ``path`` or, for a part directory, its first
+    part file by name; write markers (``_SUCCESS``, ``.crc``) sort first
+    and hold no footer."""
+    while os.path.isdir(path):
+        names = os.listdir(path)
+        parts = sorted(f for f in names if not f.startswith(("_", ".")))
+        if not parts:
+            raise ValueError(f"{path} holds no data part files")
+        path = os.path.join(path, parts[0])
+    return path
+
+
+def footer_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema Spark infers for the parquet file or part directory
+    ``path``, read from the footer of its first part on the driver: no
+    schema-inference job (a parquet dataset's parts share one schema)."""
+    import json
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    # INT96 reads as timestamp[us], so only TIMESTAMP(NANOS) reads as ns
+    pf = pq.ParquetFile(first_part(path), coerce_int96_timestamp_unit="us")
+    arrow = pf.schema_arrow
+    # a Spark-written part records its schema (INT96 timestamps among
+    # it), and inference returns that as is
+    written = (arrow.metadata or {}).get(
+        b"org.apache.spark.sql.parquet.row.metadata"
+    )
+    if written is not None:
+        return StructType.fromJson(json.loads(written))
+    if spark.conf.get(_NANOS_AS_LONG, "false") == "true":
+        arrow = pa.schema(
+            f.with_type(pa.int64())
+            if pa.types.is_timestamp(f.type) and f.type.unit == "ns"
+            else f
+            for f in arrow
+        )
+    ntz = spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled")
+    return from_arrow_schema(arrow, prefer_timestamp_ntz=ntz == "true")
+
+
+_NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
+
+
+def source_schema(spark: SparkSession, sf_dir: str, name: str) -> StructType:
+    """The schema of table ``name``'s source parquet, from a footer."""
     if name == "events":
         # Older fixtures wrote events.ts as parquet TIMESTAMP(NANOS),
         # which Spark rejects unless read as int64 nanoseconds; the conf
         # is harmless under the current micros encoding. It must be set
         # here (the driver owns the session, we can't pre-configure it);
         # guarded so concurrent loads don't thrash an already-set value.
-        key = "spark.sql.legacy.parquet.nanosAsLong"
-        if spark.conf.get(key, "false") != "true":
-            spark.conf.set(key, "true")
-        return with_event_time(spark.read.parquet(table_path(sf_dir, name)))
-    return spark.read.parquet(table_path(sf_dir, name))
+        if spark.conf.get(_NANOS_AS_LONG, "false") != "true":
+            spark.conf.set(_NANOS_AS_LONG, "true")
+    return footer_schema(spark, table_path(sf_dir, name))
+
+
+def _load_table_uncached(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    schema = source_schema(spark, sf_dir, name)
+    df = spark.read.schema(schema).parquet(table_path(sf_dir, name))
+    return with_event_time(df) if name == "events" else df
 
 
 def load_tables(
@@ -148,9 +203,3 @@ def load_tables(
 ) -> dict[str, DataFrame]:
     """Load fixture tables as a dict of DataFrames (lazy scans)."""
     return {name: load_table(spark, sf_dir, name) for name in names}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every fixture table as a temp view for spark.sql use."""
-    for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

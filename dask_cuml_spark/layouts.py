@@ -85,10 +85,9 @@ from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
 from dask_cuml_spark.functions.vector import rows_lit
-from dask_cuml_spark.io import load_table, source_size_bytes
+from dask_cuml_spark.io import footer_schema, load_table, source_size_bytes
 from dask_cuml_spark.operators.layout import (
     IncrementalNotApplicable,
     drop_stale_layouts,
@@ -132,18 +131,14 @@ def _grams(spark, sf_dir, src, old):
 
 
 def _signs(spark, sf_dir, src, old):
-    from dask_cuml_spark.operators.binhash import (
-        hyperplanes,
-        sign_signatures,
-    )
+    from dask_cuml_spark.operators.binhash import hyperplanes
 
     # the width of a non-null embedding of the whole source: a batch
     # may hold only NULL embeddings (they get NULL signatures)
     e = src[0] if old is None else load_table(spark, sf_dir, "embeddings")
     dim = len(e.filter(F.col("embedding").isNotNull()).first()["embedding"])
     planes = hyperplanes(V._Q145_NBITS, dim, V._SIG_SEED)
-    e = V._par(src[0].select("vec_id", "embedding"))
-    return [sign_signatures(e, "vec_id", "embedding", planes)]
+    return [V._signatures(src[0], planes)]
 
 
 def _cms(spark, sf_dir, src, old):
@@ -177,23 +172,13 @@ def _pack(spark, sf_dir, src, old):
 
 
 def _pq(spark, sf_dir, src, old):
-    from dask_cuml_spark.operators.quantize import (
-        _assignment_expr_on,
-        pq_encode,
-    )
-
     if old is None:
         codebooks, _models = V._fitted_pq(spark, sf_dir)
         centers = V._fitted_ivf(spark, sf_dir).centers_
     else:
         codebooks, centers = V._pq_model(spark.table(old[1]).collect())
     e = V._par(src[0].select("vec_id", "embedding"))
-    coded = pq_encode(e, codebooks).select(
-        "vec_id",
-        _assignment_expr_on(F.col("embedding"), centers).alias("cell_id"),
-        "codes",
-    )
-    yield Rows(coded, max(8, len(centers)))
+    yield Rows(V._pq_codes(e, codebooks, centers), max(8, len(centers)))
     if old is None:
         rows = [
             ("pq", s, j, [float(x) for x in cb[j]])
@@ -332,26 +317,6 @@ def _write_all(lay: Layout, frames, tables, mode: str) -> None:
             _write(rows, table, spec, mode)
 
 
-def _footer_schema(spark, part: str) -> StructType:
-    """The schema Spark infers for the parquet file ``part``, read from
-    its footer on the driver: no schema-inference job."""
-    import json
-
-    import pyarrow.parquet as pq
-    from pyspark.sql.pandas.types import from_arrow_schema
-
-    arrow = pq.read_schema(part)
-    # a Spark-written part records its schema (INT96 timestamps among
-    # it), and inference returns that as is
-    written = (arrow.metadata or {}).get(
-        b"org.apache.spark.sql.parquet.row.metadata"
-    )
-    if written is not None:
-        return StructType.fromJson(json.loads(written))
-    ntz = spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled")
-    return from_arrow_schema(arrow, prefer_timestamp_ntz=ntz == "true")
-
-
 def _read_appended(spark, sf_dir: str, source: str, new_files):
     files = [
         f
@@ -360,8 +325,7 @@ def _read_appended(spark, sf_dir: str, source: str, new_files):
     ]
     if not files:
         return None
-    schema = _footer_schema(spark, files[0])
-    return spark.read.schema(schema).parquet(*files)
+    return spark.read.schema(footer_schema(spark, files[0])).parquet(*files)
 
 
 def build_layout(spark: SparkSession, sf_dir: str, name: str) -> float:

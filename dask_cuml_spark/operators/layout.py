@@ -27,11 +27,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql.column import Column
 
 
-def layout_tag(sf_dir: str, *source_files: str) -> str:
+def layout_tag(sf_dir: str, *sources: str) -> str:
     """Collision-free catalog identity for a layout derived from
     ``sf_dir``: a short sha1 over the ABSOLUTE fixture path plus each
-    source file's content fingerprint (file count, total bytes, newest
-    mtime_ns — works for single parquet files and Spark-written dirs).
+    source's content fingerprint (file count, total bytes, newest
+    mtime_ns of its source_files — works for single parquet files and
+    Spark-written dirs).
 
     Two properties the advisor-r8 finding requires: (a) distinct
     fixture dirs can never collide onto one table name (the old
@@ -44,21 +45,11 @@ def layout_tag(sf_dir: str, *source_files: str) -> str:
     import os
 
     h = hashlib.sha1(os.path.abspath(sf_dir).encode())
-    for name in source_files:
-        p = os.path.join(sf_dir, name)
-        if os.path.isfile(p):
-            st = os.stat(p)
-            fp = (1, st.st_size, st.st_mtime_ns)
-        else:
-            n = total = mt = 0
-            for dirpath, _dirs, files in os.walk(p):
-                for fn in files:
-                    s = os.stat(os.path.join(dirpath, fn))
-                    n, total, mt = n + 1, total + s.st_size, max(
-                        mt, s.st_mtime_ns
-                    )
-            fp = (n, total, mt)
-        h.update(f"|{name}:{fp[0]}:{fp[1]}:{fp[2]}".encode())
+    for name in sources:
+        stats = source_files(sf_dir, name).values()
+        total = sum(size for size, _ in stats)
+        newest = max((mtime for _, mtime in stats), default=0)
+        h.update(f"|{name}:{len(stats)}:{total}:{newest}".encode())
     return h.hexdigest()[:12]
 
 

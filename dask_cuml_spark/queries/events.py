@@ -20,7 +20,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from dask_cuml_spark.io import load_table
+from dask_cuml_spark.io import footer_schema, load_table
+from dask_cuml_spark.plans.cost import session_state
 from dask_cuml_spark.registry import register
 
 GAP_US = 30 * 60 * 1_000_000  # 30-minute session gap in microseconds
@@ -182,21 +183,15 @@ def q22_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 # production pipeline runs on landing), so the steady-state cost this
 # query measures is the typed scan + agg. Same result set as q22.
 # ---------------------------------------------------------------------------
-_TYPED_EVENTS_CACHE: dict[tuple, str] = {}
-
-
 def ingest_events_typed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-time ELT: from_json the props column into typed columns and
-    land them as parquet; return the typed scan. Cached per (session,
-    fixture) — exactly like a real ingest job writing a silver table."""
-    import os
+    land them as parquet in a temp directory; return the typed scan. The
+    directory is session state — exactly like a real ingest job writing
+    a silver table — and is deleted once the events change."""
     import tempfile
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _TYPED_EVENTS_CACHE:
-        out = os.path.join(
-            tempfile.mkdtemp(prefix="dcs_typed_events_"), "events_typed"
-        )
+    def land():
+        out = tempfile.mkdtemp(prefix="dcs_typed_events_")
         e = load_table(spark, sf_dir, "events")
         (
             e.select(
@@ -210,8 +205,11 @@ def ingest_events_typed(spark: SparkSession, sf_dir: str) -> DataFrame:
             .write.mode("overwrite")
             .parquet(out)
         )
-        _TYPED_EVENTS_CACHE[key] = out
-    return spark.read.parquet(_TYPED_EVENTS_CACHE[key])
+        return out
+
+    kind = ("typed_events",)
+    out = session_state(spark, kind, sf_dir, ("events.parquet",), land)
+    return spark.read.schema(footer_schema(spark, out)).parquet(out)
 
 
 @register(

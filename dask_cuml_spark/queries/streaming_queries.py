@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dask_cuml_spark.io import load_table, source_schema
 from dask_cuml_spark.registry import register
 from dask_cuml_spark.streaming.sessionize import (
     stream_hourly_counts,
@@ -163,14 +164,13 @@ def q117_stream_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame
         auto_state_partitions,
     )
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    schema = source_schema(spark, sf_dir, "events")
     stream = (
         spark.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir)
     )
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
+    cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", F.col("c_mktsegment").alias("segment")
     )
     enriched = stream.join(

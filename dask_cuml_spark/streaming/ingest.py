@@ -203,6 +203,7 @@ def run_ingest_stream(
     """
     import pyarrow.parquet as pq
 
+    from dask_cuml_spark.io import first_part
     from dask_cuml_spark.layouts import ensure_layouts
 
     docs_dir = os.path.join(corpus_dir, "documents.parquet")
@@ -213,16 +214,8 @@ def run_ingest_stream(
                 f"{d} must be a directory of part files — the "
                 "append-only ingest contract"
             )
-    def _first_part(d: str) -> str:
-        # skip write markers (_SUCCESS, .crc) — a Spark-written corpus
-        # dir sorts them first and they are not parquet footers
-        for f in sorted(os.listdir(d)):
-            if not f.startswith(("_", ".")):
-                return os.path.join(d, f)
-        raise ValueError(f"{d} holds no data part files")
-
-    doc_schema = pq.read_schema(_first_part(docs_dir))
-    emb_schema = pq.read_schema(_first_part(embs_dir))
+    doc_schema = pq.read_schema(first_part(docs_dir))
+    emb_schema = pq.read_schema(first_part(embs_dir))
     nonce = _stream_nonce(checkpoint_dir)
     stats: list[dict] = []
 

@@ -17,7 +17,7 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from dask_cuml_spark.io import with_event_time
+from dask_cuml_spark.io import source_schema, with_event_time
 from dask_cuml_spark.streaming import _state_partitions, auto_state_partitions
 
 
@@ -30,8 +30,7 @@ def stream_sessionize(
     """Run the streaming session aggregation to completion over the
     events fixture; return the result as a batch DataFrame
     (user_id, session_start_us, n_events, duration_us)."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    schema = source_schema(spark, sf_dir, "events")
     # FileStreamSource requires a directory: stream the fixture dir,
     # glob-filtered to the events file.
     stream = with_event_time(
@@ -68,8 +67,7 @@ def stream_hourly_counts(
 ) -> DataFrame:
     """Tumbling event-time window aggregation with watermark — the
     canonical late-data pattern (C-checklist)."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    schema = source_schema(spark, sf_dir, "events")
     # FileStreamSource requires a directory: stream the fixture dir,
     # glob-filtered to the events file.
     stream = with_event_time(

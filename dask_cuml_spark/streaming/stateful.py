@@ -26,6 +26,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from dask_cuml_spark.io import source_schema
 from dask_cuml_spark.streaming import _state_partitions, auto_state_partitions
 
 _STATE_SCHEMA = StructType(
@@ -58,8 +59,7 @@ def _update_user_totals(
 def stream_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Run the stateful per-user totals stream to completion; return the
     final (user_id, n_events, sum_value) frame."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    schema = source_schema(spark, sf_dir, "events")
     stream = (
         spark.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet")

@@ -15,15 +15,14 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dask_cuml_spark.io import with_event_time
+from dask_cuml_spark.io import source_schema, with_event_time
 from dask_cuml_spark.streaming import _state_partitions, auto_state_partitions
 
 
 def stream_purchase_error_join(
     spark: SparkSession, sf_dir: str, band: str = "5 minutes"
 ) -> DataFrame:
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    schema = source_schema(spark, sf_dir, "events")
 
     def side(event_type: str, prefix: str) -> DataFrame:
         return (

@@ -52,6 +52,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dask_cuml_spark.functions.vector import rows_lit
+from dask_cuml_spark.io import source_schema
 from dask_cuml_spark.operators.merge import merge_upsert
 from dask_cuml_spark.streaming import _state_partitions, auto_state_partitions
 
@@ -305,11 +306,9 @@ def merge_batch(
 
 def version_bytes(root: str, version: str) -> int:
     """Bytes on disk under one version dir (write-amplification probe)."""
-    total = 0
-    vdir = os.path.join(root, version)
-    for dirpath, _dirs, files in os.walk(vdir):
-        total += sum(os.path.getsize(os.path.join(dirpath, f)) for f in files)
-    return total
+    from dask_cuml_spark.operators.layout import source_files
+
+    return sum(size for size, _ in source_files(root, version).values())
 
 
 def stream_upsert_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -321,12 +320,11 @@ def stream_upsert_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     run: matched keys are UPDATED (updates win), unseen keys INSERTED —
     and the final table still equals the plain batch GROUP BY, which is
     the full-value oracle."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    schema = source_schema(spark, sf_dir, "events")
     root = tempfile.mkdtemp(prefix="dcs_upsert_")
     try:
         seed = (
-            spark.read.parquet(f"{sf_dir}/events.parquet")
+            spark.read.schema(schema).parquet(f"{sf_dir}/events.parquet")
             .filter(F.col("user_id") < 50)
             .select("user_id")
             .distinct()

@@ -1,6 +1,7 @@
 """The stored layouts have one lifecycle (``dask_cuml_spark/layouts.py``):
 no other module writes, drops or refreshes a layout table, and a
-refresh reads its appended parts with the schema from their footers."""
+refresh reads its appended parts with the schema from their footers
+(``io.footer_schema``, which uncached table loads use too)."""
 
 from __future__ import annotations
 
@@ -56,23 +57,52 @@ def test_layout_tables_are_written_only_by_the_lifecycle():
     assert found == LIFECYCLE_CALLS, found
 
 
-@pytest.mark.parametrize(
-    "table", ["documents", "embeddings", "orders", "lineitem"]
-)
-def test_footer_schema_equals_inferred(spark, tmp_path, table):
-    """A refresh reads appended parts with the schema of the first
-    part's footer; it must be the schema Spark infers for them."""
+def _footer_cases():
+    from conftest import SF_CORRECT, SF_SMOKE
+
+    from dask_cuml_spark.io import TABLES
+
+    return (
+        [pytest.param(SF_SMOKE, t, id=t) for t in TABLES]
+        + [pytest.param(SF_CORRECT, t, id=f"sf0.01-{t}") for t in TABLES]
+        # an older fixture encoding: events.ts as TIMESTAMP(NANOS)
+        + [pytest.param(None, "events", id="events-nanos")]
+    )
+
+
+@pytest.mark.parametrize("fixture, table", _footer_cases())
+def test_footer_schema_equals_inferred(spark, tmp_path, fixture, table):
+    """A refresh reads appended parts, and an uncached load reads a
+    table, with the schema of one footer; it must be the schema Spark
+    infers for them, and the load launches no job."""
+    import pyarrow as pa
     import pyarrow.parquet as pq
 
     from conftest import SF_SMOKE
 
+    from dask_cuml_spark.benchlib import max_job_id
+    from dask_cuml_spark.io import load_table, with_event_time
     from dask_cuml_spark.layouts import _read_appended
 
     sf = str(tmp_path / "sf")
     src = f"{table}.parquet"
     os.makedirs(os.path.join(sf, src))
     part = os.path.join(sf, src, "part-1.parquet")
-    shutil.copy(os.path.join(SF_SMOKE, src), part)
+    if fixture is None:
+        t = pq.read_table(os.path.join(SF_SMOKE, src))
+        i = t.schema.get_field_index("ts")
+        ts = t.column(i).cast(pa.timestamp("ns"))
+        pq.write_table(t.set_column(i, "ts", ts), part)
+    else:
+        shutil.copy(os.path.join(fixture, src), part)
+    j0 = max_job_id(spark)
+    # events: sets the nanosAsLong conf that inference needs for NANOS
+    loaded = load_table(spark, sf, table)
+    assert max_job_id(spark) == j0
+    inferred = spark.read.parquet(os.path.join(sf, src))
+    if table == "events":
+        inferred = with_event_time(inferred)
+    assert loaded.schema == inferred.schema
     got = _read_appended(spark, sf, src, [part])
     want = spark.read.parquet(part)
     assert got.schema == want.schema
