@@ -44,6 +44,7 @@ import dask_cuml_spark.queries  # noqa: F401 — populate registry
 import dask_cuml_spark.queries.relational as rel
 from dask_cuml_spark.io import enable_table_cache
 from dask_cuml_spark.layouts import ensure_layouts, layout_tables
+from dask_cuml_spark.plans import cost
 from dask_cuml_spark.registry import ORACLES, QUERIES
 from dask_cuml_spark.session import get_spark
 
@@ -202,13 +203,13 @@ def bench_consumers(spark, sf, layout, consumers, out, factor=1):
             # road-not-taken over the SAME bucketed scans, so the
             # gate's choice is measured against its alternative under
             # identical load, cache, and fixture state.
-            saved = rel._Q02_BCAST_CMAP_MAX_CUSTOMER_BYTES
+            saved = cost.Q02_BCAST_MAX_CUSTOMER_BYTES
             try:
                 if branch == "bucketed":
-                    rel._Q02_BCAST_CMAP_MAX_CUSTOMER_BYTES = 0
+                    cost.Q02_BCAST_MAX_CUSTOMER_BYTES = 0
                     alt = ("bucketed-eager",)
                 else:
-                    rel._Q02_BCAST_CMAP_MAX_CUSTOMER_BYTES = 1 << 60
+                    cost.Q02_BCAST_MAX_CUSTOMER_BYTES = 1 << 60
                     alt = ("bucketed",)
                 try:
                     t_alt, rows_alt = timed3(
@@ -224,7 +225,7 @@ def bench_consumers(spark, sf, layout, consumers, out, factor=1):
                     # primary rows
                     alt = (alt[0], f"DNF: {type(e).__name__}: {str(e)[:200]}")
             finally:
-                rel._Q02_BCAST_CMAP_MAX_CUSTOMER_BYTES = saved
+                cost.Q02_BCAST_MAX_CUSTOMER_BYTES = saved
         duck_note = None
         if factor > SKIP_DUCK_ABOVE.get(name, 10**9):
             d = None

@@ -826,6 +826,7 @@ def main() -> None:
         # not asserted.
         if "q02_revenue_by_nation" in spark_names:
             import dask_cuml_spark.queries.relational as rel
+            from dask_cuml_spark.plans import cost
 
             row = results[label]["q02_revenue_by_nation"]
             row["branch"] = rel.q02_plan_branch(spark, d)
@@ -833,27 +834,27 @@ def main() -> None:
                 # time the roads not taken so the gate's choice is
                 # measured, not asserted (r4 task 6; extended r7 for
                 # the three-branch gate)
-                saved_e = rel._Q02_EAGER_AGG_MIN_ORDERS_BYTES
-                saved_b = rel._Q02_BCAST_CMAP_MAX_CUSTOMER_BYTES
+                saved_e = cost.Q02_DIRECT_MAX_ORDERS_BYTES
+                saved_b = cost.Q02_BCAST_MAX_CUSTOMER_BYTES
                 try:
-                    rel._Q02_EAGER_AGG_MIN_ORDERS_BYTES = 1 << 60
+                    cost.Q02_DIRECT_MAX_ORDERS_BYTES = 1 << 60
                     row["direct_branch_spark_sec"] = time_spark(
                         spark, d, ["q02_revenue_by_nation"]
                     )["q02_revenue_by_nation"]
-                    rel._Q02_EAGER_AGG_MIN_ORDERS_BYTES = 1
+                    cost.Q02_DIRECT_MAX_ORDERS_BYTES = 1
                     if row["branch"] == "bcast-cmap":
-                        rel._Q02_BCAST_CMAP_MAX_CUSTOMER_BYTES = 0
+                        cost.Q02_BCAST_MAX_CUSTOMER_BYTES = 0
                         row["eager_agg_branch_spark_sec"] = time_spark(
                             spark, d, ["q02_revenue_by_nation"]
                         )["q02_revenue_by_nation"]
                     else:
-                        rel._Q02_BCAST_CMAP_MAX_CUSTOMER_BYTES = 1 << 60
+                        cost.Q02_BCAST_MAX_CUSTOMER_BYTES = 1 << 60
                         row["bcast_cmap_branch_spark_sec"] = time_spark(
                             spark, d, ["q02_revenue_by_nation"]
                         )["q02_revenue_by_nation"]
                 finally:
-                    rel._Q02_EAGER_AGG_MIN_ORDERS_BYTES = saved_e
-                    rel._Q02_BCAST_CMAP_MAX_CUSTOMER_BYTES = saved_b
+                    cost.Q02_DIRECT_MAX_ORDERS_BYTES = saved_e
+                    cost.Q02_BCAST_MAX_CUSTOMER_BYTES = saved_b
         # q120 exact road-not-taken: ATTEMPTED and recorded as a
         # finding instead of a number. strategy='exact' routes the same
         # blob data through _eps_pairs' all-pairs blocked GEMM, whose

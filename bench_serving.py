@@ -88,7 +88,7 @@ def _exact_baseline(spark, dst, nq: int, k: int):
     )
     cv = e.selectExpr("vec_id AS neighbor_id", "embedding AS cv")
     return brute_force_knn(
-        qf, _par(cv), k=k, strategy="auto", exclude_same_id=True
+        qf, _par(cv), k=k, exclude_same_id=True
     ).localCheckpoint()
 
 

@@ -11,8 +11,8 @@ costs at a state size the box can still hold in memory (the honest
 local measurement: RocksDB pays JNI + compaction overhead and should be
 somewhat SLOWER here — its win only appears when state exceeds heap,
 which a 128 GiB box with fixture streams cannot reach), and (b) that
-auto_state_partitions' sizing (8 partitions at ≥64 MB input) behaves the
-same under both providers.
+plans/cost.state_partitions' sizing (8 partitions at ≥64 MB input)
+behaves the same under both providers.
 
 Results are merged into SCALEBENCH.json under "streaming_state_100x".
 Usage: python bench_streaming_state.py [factor]
@@ -80,7 +80,7 @@ def main() -> None:
         "rocksdb_provider_sec": rocksdb,
         "note": (
             "fresh checkpoints per run, so each run re-decides the "
-            "provider; auto_state_partitions picks 8 partitions at this "
+            "provider; plans/cost.state_partitions picks 8 partitions at this "
             "factor for both providers (the heuristic keys on input "
             "size, not provider). At in-memory-feasible state sizes "
             "RocksDB's JNI/compaction overhead is the expected cost; "

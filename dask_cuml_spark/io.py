@@ -76,25 +76,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     )
 
 
-def source_size_bytes(sf_dir: str, name: str) -> int:
-    """On-disk size of a table's source parquet (file or directory).
-
-    The stable input for size-based plan gates: Catalyst's
-    ``sizeInBytes`` for the same scan swings with session cache state
-    (a cached table substitutes its uncompressed InMemoryRelation into
-    every matching plan), while file bytes measure the data itself.
-    At 100 TB this is one namenode/object-store stat, not a scan."""
-    from dask_cuml_spark.operators.layout import source_files
-
-    path = table_path(sf_dir, name)
-    if not os.path.exists(path):
-        # a typo'd fixture dir must surface, not silently read as
-        # "0 bytes" and send every size gate down the small-input branch
-        raise FileNotFoundError(f"no parquet at {path}")
-    files = source_files(sf_dir, os.path.basename(path))
-    return sum(size for size, _ in files.values())
-
-
 def with_event_time(df: DataFrame) -> DataFrame:
     """Attach the canonical event-time columns to an events frame.
 

@@ -25,7 +25,7 @@ Invariants every layout keeps:
   overwrites, a refresh appends. A bucketed table is repartitioned on
   its bucket column and written ``bucketBy``/``sortBy`` that column; a
   derivation yields ``Rows`` where the count or the repartition
-  depends on the data (pq's cell count, q02's 4 GiB rule).
+  depends on the data (pq's cell count, q02's shuffle-free build).
 - A refresh applies only when the primary's manifest is a strict
   subset of the current source files, no old file changed, only
   ``.parquet`` parts (or write markers) were added and every table
@@ -46,9 +46,10 @@ The tables (tag omitted):
   documents' occurrences.
 - ``signs``: ``dcs_signs128s7_`` holds (vec_id, sig), the 128-bit sign
   hash of each embedding under the seed-7 planes, unbucketed (q145 and
-  q162 scan it whole). The planes' width is read from a non-null
-  embedding of the whole source, so an all-null batch still appends
-  its (null) signatures.
+  q162 scan it whole). A full build reads the planes' width from a
+  non-null embedding and stores it as a property of the table; a
+  refresh reads it back from the catalog, so an all-null batch still
+  appends its (null) signatures.
 - ``cms``: ``dcs_cmssketch<d>x<w>_`` holds (r, bucket, c) Count-Min
   counter deltas; readers (q158, q160) SUM per (r, bucket). A refresh
   appends the batch's delta set, at most d×w rows.
@@ -86,16 +87,18 @@ from typing import NamedTuple
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dask_cuml_spark.functions.vector import rows_lit
-from dask_cuml_spark.io import footer_schema, load_table, source_size_bytes
+from dask_cuml_spark.functions.vector import rows_lit, sql_lit
+from dask_cuml_spark.io import footer_schema, load_table
 from dask_cuml_spark.operators.layout import (
     IncrementalNotApplicable,
     drop_stale_layouts,
     drop_table_and_location,
     incremental_refresh,
     layout_tag,
+    table_properties,
     write_layout_manifest,
 )
+from dask_cuml_spark.plans.cost import layout_write_shuffles
 from dask_cuml_spark.queries import pandas_udfs as P
 from dask_cuml_spark.queries import relational as R
 from dask_cuml_spark.queries import text as T
@@ -130,15 +133,27 @@ def _grams(spark, sf_dir, src, old):
     return [T._positioned_grams(spark, sf_dir, d=src[0])]
 
 
+_SIGNS_WIDTH = "dcs.embedding_width"
+
+
 def _signs(spark, sf_dir, src, old):
     from dask_cuml_spark.operators.binhash import hyperplanes
 
-    # the width of a non-null embedding of the whole source: a batch
-    # may hold only NULL embeddings (they get NULL signatures)
-    e = src[0] if old is None else load_table(spark, sf_dir, "embeddings")
-    dim = len(e.filter(F.col("embedding").isNotNull()).first()["embedding"])
-    planes = hyperplanes(V._Q145_NBITS, dim, V._SIG_SEED)
-    return [V._signatures(src[0], planes)]
+    if old is None:
+        e = src[0].filter(F.col("embedding").isNotNull())
+        dim = len(e.first()["embedding"])
+    else:
+        dim = table_properties(spark, old[0]).get(_SIGNS_WIDTH)
+        if dim is None:
+            raise IncrementalNotApplicable(f"{old[0]} records no width")
+    planes = hyperplanes(V._Q145_NBITS, int(dim), V._SIG_SEED)
+    yield V._signatures(src[0], planes)
+    if old is None:
+        (table,) = layout_tables("signs", sf_dir)
+        spark.sql(
+            f"ALTER TABLE {table} SET TBLPROPERTIES "
+            f"({sql_lit(_SIGNS_WIDTH)} = {sql_lit(str(dim))})"
+        )
 
 
 def _cms(spark, sf_dir, src, old):
@@ -224,12 +239,10 @@ def _q02(spark, sf_dir, src, old):
         # bucketBy needs no pre-shuffle: every write task hashes its
         # rows into local per-bucket files. The repartition only gives a
         # small layout one file per bucket; on a big table it stages a
-        # full extra copy of the input as shuffle files, which once ran
-        # a 600M-row lineitem write out of disk. Past 4 GiB the build
-        # writes shuffle-free and accepts (input tasks × buckets) files;
-        # bucketed reads co-group all files of a bucket, so the join
-        # plan is the same.
-        if old is None and source_size_bytes(sf_dir, name) > 4 << 30:
+        # full extra copy of the input as shuffle files. A shuffle-free
+        # build writes (input tasks × buckets) files; bucketed reads
+        # co-group all files of a bucket, so the join plan is the same.
+        if old is None and not layout_write_shuffles(sf_dir, name):
             frame = Rows(frame, R._Q02_BUCKETS, shuffle=False)
         yield frame
 
@@ -311,8 +324,10 @@ def _write(rows, table: str, spec: Table, mode: str) -> None:
 
 
 def _write_all(lay: Layout, frames, tables, mode: str) -> None:
-    # zip pulls each frame after the previous table is written
-    for table, spec, rows in zip(tables, lay.tables, frames):
+    # zip pulls each frame after the previous table is written, and
+    # pulls once more after the last: a derivation's code after its
+    # last yield runs with every table written
+    for rows, table, spec in zip(frames, tables, lay.tables):
         if rows is not None:
             _write(rows, table, spec, mode)
 

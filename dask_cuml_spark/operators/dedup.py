@@ -277,9 +277,9 @@ def minhash_near_dup(
     of the Jaccard verify join); without a cache the shingle expression
     recomputes three times (measured 10.4 s vs ~3 s at sf0.1 — round-1
     bench regression). persist_for_reuse makes the cluster-scale swap
-    cost-based: above 64 MB estimated input the frame is
-    localCheckpoint'd (lineage truncated, disk-spillable blocks) instead
-    of memory-pinned (dask_cuml_spark.plans.cost)."""
+    cost-based: a large frame is localCheckpoint'd (lineage truncated,
+    disk-spillable blocks) instead of memory-pinned
+    (dask_cuml_spark.plans.cost)."""
     from dask_cuml_spark.plans.cost import persist_for_reuse
 
     sh = persist_for_reuse(
@@ -380,8 +380,8 @@ def simhash_near_dup(
     # Both sides of the bucket self-join descend from the signature
     # aggregate; without a cache the tokenize+agg (the only heavy stage
     # — everything downstream is signature-sized) computes TWICE.
-    # persist_for_reuse swaps cache for localCheckpoint above 64 MB of
-    # estimated input (dask_cuml_spark.plans.cost).
+    # persist_for_reuse swaps cache for localCheckpoint on a large
+    # frame (dask_cuml_spark.plans.cost).
     from dask_cuml_spark.plans.cost import persist_for_reuse
 
     sigs = persist_for_reuse(

@@ -119,18 +119,15 @@ def pairwise_similarity_above(
     """All pairs (id_a, id_b, sim=dot) with sim >= threshold between df
     (A side) and `other` (B side; defaults to df for the self-join case).
 
-    broadcast_b='auto' (r16) picks the strategy with the repo's standard
-    cost gate — the knn.classwise_nearest pattern: a B side whose
-    Catalyst size estimate is under 64 MB is model-state-sized, so it
-    broadcasts and A streams through ONE mapInPandas (no replicate
-    exchange, no cogroup shuffle — measured q45 1.26 s → 0.33 s at
-    sf0.1); anything larger takes the blocked cogroup GEMM (no driver
-    collect — the r2 anti-pattern fix). Belt-and-braces: if the estimate
-    lied and the collect exceeds max_broadcast_rows, auto FALLS BACK to
-    blocked instead of raising (broadcast_b=True keeps the hard raise
-    for callers that assert model-state-sized B). Pair values are
-    identical either way — each (a, b) dot is one contiguous inner
-    product in both layouts.
+    broadcast_b='auto' takes plans/cost.broadcast_b's side: a
+    model-state-sized B broadcasts and A streams through ONE
+    mapInPandas (no replicate exchange, no cogroup shuffle); anything
+    larger takes the blocked cogroup GEMM (no driver collect).
+    Belt-and-braces: if the estimate lied and the collect exceeds
+    max_broadcast_rows, auto FALLS BACK to blocked instead of raising
+    (broadcast_b=True keeps the hard raise for callers that assert
+    model-state-sized B). Pair values are identical either way — each
+    (a, b) dot is one contiguous inner product in both layouts.
     """
     spark = df.sparkSession
     # float32 mode narrows the vector column BEFORE the replicate+shuffle
@@ -148,9 +145,9 @@ def pairwise_similarity_above(
     )
 
     if broadcast_b == "auto":
-        from dask_cuml_spark.plans.cost import plan_size_bytes
+        from dask_cuml_spark.plans.cost import broadcast_b as small_b
 
-        if plan_size_bytes(b) <= (64 << 20):
+        if small_b(b):
             try:
                 return _broadcast_b_path(
                     a, b, threshold, upper_triangle, dtype,

@@ -31,13 +31,7 @@ from dask_cuml_spark.operators.kmeans import (
     _assignment_expr,
     nearest_centers,
 )
-
-
-def _assign_use_gemm(df: DataFrame, k: int) -> bool:
-    """Same bytes×k fold-work gate as kmeans.nearest_centers 'auto'."""
-    from dask_cuml_spark.plans.cost import plan_size_bytes
-
-    return plan_size_bytes(df) * k >= (256 << 20)
+from dask_cuml_spark.plans.cost import centers_strategy, ivf_search_strategy
 
 
 @dataclass
@@ -59,7 +53,7 @@ class IVFIndex:
     cells_: DataFrame | None = field(default=None, init=False)
     id_col_: str = field(default="vec_id", init=False)
     vec_col_: str = field(default="embedding", init=False)
-    big_: bool = field(default=False, init=False)
+    search_strategy_: str = field(default="expr", init=False)
 
     def fit(
         self,
@@ -89,12 +83,10 @@ class IVFIndex:
             candidates, vec_col=vec_col, id_col=id_col, final_inertia=False
         )
         self.centers_ = km.cluster_centers_
-        # assignment via the gated primitive: the expr fold at fixture
-        # scale (oracle-mirroring, plan unchanged from r6), the Arrow
-        # GEMM kernel once rows×n_cells work is large — with cells held
-        # constant-size (n_cells ∝ n) the fold is Θ(n²·dim/cell) and
-        # would dominate the whole index build (kmeans.nearest_centers)
-        if _assign_use_gemm(candidates, self.n_cells_):
+        # assignment on nearest_centers' gate: with cells held
+        # constant-size (n_cells ∝ n) the expr fold is Θ(n²·dim/cell)
+        # and would dominate the whole index build
+        if centers_strategy(candidates, self.n_cells_) == "gemm":
             self.cells_ = (
                 nearest_centers(
                     candidates, vec_col, self.centers_, 1, "_cells", "gemm"
@@ -108,15 +100,8 @@ class IVFIndex:
                 "cell_id", _assignment_expr(vec_col, self.centers_)
             ).cache()
         self.id_col_, self.vec_col_ = id_col, vec_col
-        # cost-gate decision (expr vs gemm) is a property of the INDEX,
-        # not of a search — decide once here instead of paying a
-        # plan_size_bytes estimate per search call
-        from dask_cuml_spark.plans.cost import (
-            REUSE_CHECKPOINT_MIN_BYTES,
-            plan_size_bytes,
-        )
-
-        self.big_ = plan_size_bytes(candidates) >= REUSE_CHECKPOINT_MIN_BYTES
+        # the search strategy is a property of the index, decided once
+        self.search_strategy_ = ivf_search_strategy(candidates)
         return self
 
     def probes(
@@ -135,13 +120,8 @@ class IVFIndex:
         all-vector self-search at n_cells ∝ n would otherwise spend
         Θ(n²·dim/cell) in the fold before the search proper starts)."""
         assert self.centers_ is not None, "call fit() first"
-        strategy = (
-            "gemm" if _assign_use_gemm(queries, self.n_cells_) else "expr"
-        )
         return (
-            nearest_centers(
-                queries, query_vec, self.centers_, nprobe, "_cells", strategy
-            )
+            nearest_centers(queries, query_vec, self.centers_, nprobe)
             .select("*", F.explode("_cells").alias("cell_id"))
             .drop("_cells")
         )
@@ -157,12 +137,10 @@ class IVFIndex:
     ) -> DataFrame:
         """(query_id, neighbor_id, dist, rk) — exact within probed cells.
 
-        strategy='auto' picks by the index size with the repo's standard
-        64 MB cost gate (plans/cost.py): 'expr' below it (Arrow cogroup
-        startup dominates tiny cells — measured equal-or-slower at
-        fixture scale), 'gemm' above (measured 3.0 → 2.1 s at 100×,
-        and the gap is the point: BLAS vs interpreted fold grows with
-        cell size).
+        strategy='auto' takes the index's side of
+        plans/cost.ivf_search_strategy, decided at fit: Arrow cogroup
+        startup dominates tiny cells, and BLAS beats the interpreted
+        fold by more as cells grow.
 
         strategy='gemm': the probed (query, cell) pairs
         cogroup with the cell's members on cell_id and each cell runs
@@ -182,7 +160,7 @@ class IVFIndex:
         assert self.cells_ is not None, "call fit() first"
         probes = self.probes(queries, nprobe, query_vec)
         if strategy == "auto":
-            strategy = "gemm" if self.big_ else "expr"
+            strategy = self.search_strategy_
         if strategy == "gemm":
             import pandas as pd
 
@@ -228,8 +206,8 @@ class IVFIndex:
                 return pd.concat(frames, ignore_index=True)
 
             # id dtypes come from the INPUT frames so strategy='auto'
-            # flipping expr→gemm at the 64 MB gate never changes the
-            # output schema for non-long id columns (advisor r5)
+            # flipping expr→gemm never changes the output schema for
+            # non-long id columns
             qid_t = dict(probes.dtypes)[query_id]
             cid_t = dict(self.cells_.dtypes)[self.id_col_]
             pairs = (

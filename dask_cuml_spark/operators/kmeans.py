@@ -75,33 +75,18 @@ def nearest_centers(
     same kernel family as IVFIndex.search's cogrouped GEMM) and top-n
     selects with the identical (dist², cid) tie-break.
 
-    'auto' gates on estimated fold work: rows_bytes × k, using the
-    repo's standard plan-size estimate — the same crossover class as
-    brute_force_knn's 16 MB candidate gate (BLAS wins once the fold
-    stops fitting noise); expr keeps every oracle-pinned fixture path
-    bit-identical to round 6.
+    'auto' takes plans/cost.centers_strategy's side, gated on the fold
+    work rows_bytes × k; expr keeps every oracle-pinned fixture path on
+    the fold the SQL oracles mirror.
     """
     from collections.abc import Iterator
 
     import pandas as pd
 
     if strategy == "auto":
-        from dask_cuml_spark.plans.cost import plan_size_bytes
+        from dask_cuml_spark.plans.cost import centers_strategy
 
-        # bytes×k proxy for fold ops. Crossover re-measured r16 on the
-        # sf0.1 semantic-dedup assignment (2 010 rows × 64 dims, k=80,
-        # bytes×k = 73 MB): expr 1.76 s/evaluation (interpreted
-        # CodegenFallback fold) vs gemm 0.35 s, identical assignments
-        # row-for-row — the old 256 MB gate left a 5× regression band
-        # between the k≤16 oracle-mirrored fixture paths (≤15 MB here)
-        # and where gemm used to kick in. 32 MB keeps every SQL-replay
-        # path (q108 k=16: 14.6 MB; IVF cell fits k=8: 7.3 MB) on the
-        # bit-identical expr plan and flips auto-k/large-k work to BLAS.
-        strategy = (
-            "gemm"
-            if plan_size_bytes(df) * centers.shape[0] >= (32 << 20)
-            else "expr"
-        )
+        strategy = centers_strategy(df, centers.shape[0])
     if strategy == "expr":
         from dask_cuml_spark.functions.vector import matrix_lit
 

@@ -28,11 +28,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from dask_cuml_spark.functions.vector import l2_sq, rows_lit
-
-# expr/gemm crossover for dense-kernel candidates (see brute_force_knn
-# docstring for the bracketing measurements) — deliberately lower than
-# plans.cost.REUSE_CHECKPOINT_MIN_BYTES
-KNN_GEMM_MIN_BYTES = 16 << 20
+from dask_cuml_spark.plans.cost import (
+    CLASSWISE_BROADCAST_MAX_BYTES,
+    knn_strategy,
+)
 
 
 def brute_force_knn(
@@ -50,15 +49,10 @@ def brute_force_knn(
     """Exact kNN: (query_id, neighbor_id, dist, rk), deterministic
     (dist, id) tie-break.
 
-    strategy='auto' (default, round 6): a 16 MB cost gate on the
-    candidate side — 'expr' below it (the Arrow round trip + Python
-    worker pass costs more than the interpreted fold on small candidate
-    sets: 0.67 vs 0.56 s at sf0.1, ~5 MB of vectors), 'gemm' above
-    (BLAS wins as batches grow: measured 0.94 s gemm vs 1.96 s expr on
-    48 MB of vectors at 100× — which is why this operator's gate is
-    LOWER than the repo's 64 MB checkpoint gate: the crossover is
-    bracketed by those two measurements, and the dense-kernel advantage
-    kicks in well before a frame is worth checkpointing).
+    strategy='auto' (default) takes plans/cost.knn_strategy's side for
+    the candidates: 'expr' on small candidate sets, where the Arrow
+    round trip and Python worker pass cost more than the interpreted
+    fold, 'gemm' once BLAS wins.
 
     strategy='gemm' (round 5): the query block is task-broadcast
     and each candidate Arrow batch computes ALL query distances as one
@@ -71,10 +65,7 @@ def brute_force_knn(
     pure-expression plan (the SQL-oracle-shaped fallback; also the
     reference for the numpy parity test)."""
     if strategy == "auto":
-        from dask_cuml_spark.plans.cost import plan_size_bytes
-
-        big = plan_size_bytes(candidates) >= KNN_GEMM_MIN_BYTES
-        strategy = "gemm" if big else "expr"
+        strategy = knn_strategy(candidates)
     if strategy == "gemm":
         rows = queries.select(query_id, query_vec).limit(
             max_broadcast_queries + 1
@@ -461,7 +452,7 @@ def classwise_nearest(
     label_col: str = "label",
     vec_col: str = "embedding",
     strategy: str = "auto",
-    max_broadcast_bytes: int = 128 << 20,
+    max_broadcast_bytes: int = CLASSWISE_BROADCAST_MAX_BYTES,
     anchor_blocks: int | None = None,
     cand_blocks: int | None = None,
     candidates: DataFrame | None = None,

@@ -212,17 +212,19 @@ def write_layout_manifest(
     )
 
 
+def table_properties(spark, table: str) -> dict[str, str]:
+    """The table's properties. Catalog-only read (no Spark job)."""
+    rows = spark.sql(f"SHOW TBLPROPERTIES {table}").collect()
+    return {r.key: r.value for r in rows}
+
+
 def read_layout_manifest(spark, table: str) -> dict | None:
     """relpath -> (size, mtime_ns) as stored by write_layout_manifest,
     or None when ``table`` carries no manifest. Catalog-only read (no
     Spark job)."""
     import json
 
-    props = {
-        r.key: r.value
-        for r in spark.sql(f"SHOW TBLPROPERTIES {table}").collect()
-    }
-    raw = props.get(MANIFEST_PROPERTY)
+    raw = table_properties(spark, table).get(MANIFEST_PROPERTY)
     if raw is None:
         return None
     return {f: (s, m) for f, (s, m) in json.loads(raw).items()}

@@ -22,9 +22,7 @@ expr_raw / kernel — same outputs UNROUNDED (rounding is applied by the
          exact below 2^53 — asserted by tests/test_operators.py's
          strategy-agreement test.
 
-strategy='auto' picks kernel above ``gate_bytes`` of source parquet
-(default 16 MB, knn.py's expr/gemm crossover idiom); callers with no
-file-size signal can pass the strategy explicitly.
+Callers pick the strategy with plans/cost.embeddings_strategy.
 """
 
 from __future__ import annotations
@@ -43,9 +41,6 @@ from pyspark.sql.types import (
 )
 
 from dask_cuml_spark.functions.vector import matrix_lit, rows_lit
-
-#: expr/kernel crossover (bytes of source parquet) — knn.py's 16 MB idiom
-GATE_BYTES = 16 * 1024 * 1024
 
 _Q_SCHEMA = StructType(
     [
@@ -112,8 +107,8 @@ def _kernel(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
                 continue
             # null vectors propagate as all-null output rows — the expr
             # strategy's behavior (transform/aggregate over NULL is
-            # NULL), so 'auto' flipping expr->kernel at GATE_BYTES never
-            # changes dirty-input semantics (advisor r11)
+            # NULL), so the size gate flipping expr->kernel never
+            # changes dirty-input semantics
             null_mask = pdf[vec_col].isna()
             if null_mask.any():
                 nulls = pdf[null_mask]
@@ -182,20 +177,15 @@ def int8_quantize(
     df: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    strategy: str = "auto",
-    source_bytes: int | None = None,
+    strategy: str = "expr",
 ) -> DataFrame:
     """(vec_id, scale, q_sum, q_abs_sum, max_err) — UNROUNDED.
 
-    strategy: 'expr' (interpreted HOFs, oracle-exact), 'kernel'
-    (vectorized Arrow batches, the 100-TB path), or 'auto' (kernel when
-    ``source_bytes`` exceeds GATE_BYTES; expr when small or unknown).
-    Callers needing round-6 presentation apply F.round on top — one
-    rounding site keeps branch parity trivially true.
+    strategy: 'expr' (interpreted HOFs, oracle-exact) or 'kernel'
+    (vectorized Arrow batches, the 100-TB path). Callers needing
+    rounded presentation apply F.round on top — one rounding site keeps
+    branch parity trivially true.
     """
-    if strategy == "auto":
-        big = source_bytes is not None and source_bytes > GATE_BYTES
-        strategy = "kernel" if big else "expr"
     if strategy == "kernel":
         return _kernel(df, id_col, vec_col)
     if strategy == "expr":

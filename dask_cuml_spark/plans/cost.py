@@ -1,15 +1,81 @@
-"""Cost-based physical choices shared across queries.
+"""Cost-based physical choices, and the lifecycles of what a query
+caches and of what a session reuses across queries (scoped_caches,
+session_state).
 
-Catalyst exposes its optimizer size estimate per plan node; these
-helpers make the same size-threshold decisions Spark itself makes for
-broadcast joins, applied to rewrites Catalyst has no rule for (eager
-pre-aggregation, cache-vs-checkpoint for multi-consumer frames). The
-lifecycles of what a query caches and of what a session reuses across
-queries live here too (scoped_caches, session_state).
+Every size gate of the engine lives here: one threshold constant and
+one function per decision. The function takes what its gate measures
+and returns the side; callers ask it and never compare bytes
+themselves. A gate measures one of:
+
+- plan: ``plan_size_bytes(df)``, Catalyst's size estimate for the frame
+  the choice applies to (no job runs);
+- source: ``source_size_bytes(sf_dir, table)``, the bytes of the
+  table's source parquet files. A gate asked before the query's frames
+  exist reads file bytes because they do not move with session cache
+  state: once a table is cached, Catalyst substitutes the cached
+  InMemoryRelation into every plan over the same source, and its
+  uncompressed statistics (customer at 100×: 78 MB cached, 29 MB on
+  disk) would flip a plan-fed gate on whichever query cached it first.
+
+The gates (name, threshold constant; what it measures; the side; the
+measurement that placed the threshold):
+
+persist_for_reuse, REUSE_CHECKPOINT_MIN_BYTES
+    plan of the reused frame; localCheckpoint at >= 64 MB, else cache().
+    No crossover measured: far below any cluster input, far above
+    every fixture.
+one_aggregate_percentile, PERCENTILE_AGG_MAX_BYTES
+    plan of the column; one percentile aggregate below 64 MB, else the
+    range-sorted rank path. q12: 1.44 s / 10 jobs -> 0.48 s / 3 jobs.
+knn_strategy, KNN_KERNEL_MIN_BYTES
+    plan of the candidates; gemm at >= 16 MB, else expr. ~5 MB at
+    sf0.1: expr 0.56 s, gemm 0.67 s; 48 MB at 100x: gemm 0.94 s, expr
+    1.96 s.
+centers_strategy, CENTERS_GEMM_MIN_BYTES
+    plan of the rows x k centroids; gemm at >= 32 MB, else expr. The
+    k=80 assignment at sf0.1 (73 MB): expr 1.76 s, gemm 0.35 s; k <= 16
+    (q108: 14.6 MB, IVF k=8: 7.3 MB) stays on the expr fold.
+ivf_search_strategy, IVF_SEARCH_GEMM_MIN_BYTES
+    plan of the indexed candidates; gemm at >= 64 MB, else expr. 100x:
+    3.0 -> 2.1 s; equal or slower on the fixtures.
+broadcast_b, BROADCAST_B_MAX_BYTES
+    plan of the B side; broadcast at <= 64 MB, else the blocked
+    cogroup. q45 at sf0.1: blocked 1.26 s, broadcast 0.33 s.
+embeddings_strategy, EMBEDDINGS_KERNEL_MIN_BYTES
+    source of embeddings; kernel above 16 MB, else expr. q131's fold
+    ran 8.04x DuckDB at 100x; q145's Hamming scan at 1000x: expr
+    7.72 s, kernel 1.10 s.
+pin_exploded_documents, DOCUMENTS_PIN_MAX_BYTES
+    source of documents; persist at <= 256 MB, else recompute. 1000x
+    (585 MB of source, 125 M bigram rows) OOMs the pinned frame under
+    a 24 g driver.
+q02_direct_join, Q02_DIRECT_MAX_ORDERS_BYTES
+    source of orders; the all-broadcast direct join below 64 MB
+    (~15 M orders rows).
+q02_broadcast_customer, Q02_BCAST_MAX_CUSTOMER_BYTES
+    source of customer; bcast-cmap at <= 48 MB, else eager-agg. 100x
+    (29 MB) builds and runs in 1.66 s; 300x (90 MB) fails the broadcast
+    build under an 8 g driver.
+layout_write_shuffles, LAYOUT_SHUFFLE_MAX_BYTES
+    source of the layout's table; repartition at <= 4 GiB, else write
+    shuffle-free. A 600 M-row lineitem write ran out of disk staging
+    the repartition's shuffle copy.
+state_partitions, STATE_SMALL_MAX_BYTES
+    source of the replayed table; 4 state partitions below 64 MB, else
+    8. q93 at sf0.1: 8 -> 2.75 s, 4 -> 2.14 s; 100x: 10 M events in
+    5.9 s at 8.
+operators/knn.classwise_nearest, CLASSWISE_BROADCAST_MAX_BYTES
+    counted anchor bytes (rows x dim x 8); broadcast at <= 128 MB, else
+    blocked. A driver and broadcast memory bound.
+suggest_shuffle_partitions, SHUFFLE_PARTITION_BYTES
+    source of the fact tables; one shuffle partition per 32 MB. q02 at
+    300x: 32 partitions over 4.2 GB ran out of aggregate memory, 128 =
+    ceil(4.2 GB / 32 MB) works.
 """
 
 from __future__ import annotations
 
+import atexit as _atexit
 import shutil as _shutil
 import threading as _threading
 import weakref as _weakref
@@ -17,16 +83,20 @@ from contextlib import contextmanager as _contextmanager
 
 from pyspark.sql import DataFrame
 
-# Above this estimated input size, a multi-consumer frame switches from
-# cache() to a lazy localCheckpoint(): lineage is truncated (each
-# consumer re-reads materialized partitions instead of re-running the
-# producing stages on cache miss) and the blocks live in the executors'
-# block store with disk spill instead of pinning unified memory the
-# downstream shuffles want. 64 MB matches the q02 eager-agg gate — far
-# below any cluster-scale input, far above every local fixture. On a
-# real cluster with executor churn, swap localCheckpoint for a reliable
-# checkpoint() to the cluster FS; the decision shape is identical.
 REUSE_CHECKPOINT_MIN_BYTES = 64 << 20
+PERCENTILE_AGG_MAX_BYTES = 64 << 20
+KNN_KERNEL_MIN_BYTES = 16 << 20
+CENTERS_GEMM_MIN_BYTES = 32 << 20
+IVF_SEARCH_GEMM_MIN_BYTES = 64 << 20
+BROADCAST_B_MAX_BYTES = 64 << 20
+EMBEDDINGS_KERNEL_MIN_BYTES = 16 << 20
+DOCUMENTS_PIN_MAX_BYTES = 256 << 20
+Q02_DIRECT_MAX_ORDERS_BYTES = 64 << 20
+Q02_BCAST_MAX_CUSTOMER_BYTES = 48 << 20
+LAYOUT_SHUFFLE_MAX_BYTES = 4 << 30
+STATE_SMALL_MAX_BYTES = 64 << 20
+CLASSWISE_BROADCAST_MAX_BYTES = 128 << 20
+SHUFFLE_PARTITION_BYTES = 32 << 20
 
 
 def plan_size_bytes(df: DataFrame) -> int:
@@ -34,14 +104,107 @@ def plan_size_bytes(df: DataFrame) -> int:
     return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
 
 
-def persist_for_reuse(
-    df: DataFrame, threshold: int = REUSE_CHECKPOINT_MIN_BYTES
-) -> DataFrame:
-    """Persist a frame that feeds multiple consumers: cache() at fixture
-    scale, lazy localCheckpoint() above the size threshold."""
-    if plan_size_bytes(df) >= threshold:
+def source_size_bytes(sf_dir: str, name: str) -> int:
+    """Bytes of a table's source parquet (file or part directory). At
+    100 TB this is one namenode/object-store listing, not a scan."""
+    import os
+
+    from dask_cuml_spark.io import table_path
+    from dask_cuml_spark.operators.layout import source_files
+
+    path = table_path(sf_dir, name)
+    if not os.path.exists(path):
+        # a typo'd fixture dir must surface, not silently read as
+        # "0 bytes" and send every size gate down the small-input branch
+        raise FileNotFoundError(f"no parquet at {path}")
+    files = source_files(sf_dir, os.path.basename(path))
+    return sum(size for size, _ in files.values())
+
+
+def persist_for_reuse(df: DataFrame) -> DataFrame:
+    """Persist a frame that feeds multiple consumers: cache() when small,
+    else a lazy localCheckpoint(). The checkpoint truncates lineage (a
+    consumer re-reads materialized partitions instead of re-running the
+    producing stages) and its blocks spill to disk instead of pinning
+    the unified memory the downstream shuffles want. On a cluster with
+    executor churn, a reliable checkpoint() takes its place."""
+    if plan_size_bytes(df) >= REUSE_CHECKPOINT_MIN_BYTES:
         return df.localCheckpoint(eager=False)
     return scoped_cache(df)
+
+
+def one_aggregate_percentile(col: DataFrame) -> bool:
+    """Whether an exact percentile of ``col`` runs as one percentile
+    aggregate (buffers the column per task) rather than the range-sorted
+    rank path."""
+    return plan_size_bytes(col) < PERCENTILE_AGG_MAX_BYTES
+
+
+def knn_strategy(candidates: DataFrame) -> str:
+    """Exact kNN over ``candidates``: 'gemm' (per-batch BLAS) or 'expr'."""
+    big = plan_size_bytes(candidates) >= KNN_KERNEL_MIN_BYTES
+    return "gemm" if big else "expr"
+
+
+def centers_strategy(df: DataFrame, k: int) -> str:
+    """Nearest-of-``k``-centroids over ``df`` (kmeans.nearest_centers,
+    IVF cell assignment and probes): 'gemm' or 'expr', by fold work
+    rows_bytes × k."""
+    big = plan_size_bytes(df) * k >= CENTERS_GEMM_MIN_BYTES
+    return "gemm" if big else "expr"
+
+
+def ivf_search_strategy(cells: DataFrame) -> str:
+    """IVF in-cell distances: 'gemm' (cogrouped BLAS) or 'expr'."""
+    big = plan_size_bytes(cells) >= IVF_SEARCH_GEMM_MIN_BYTES
+    return "gemm" if big else "expr"
+
+
+def broadcast_b(b: DataFrame) -> bool:
+    """Whether pairwise similarity broadcasts its B side."""
+    return plan_size_bytes(b) <= BROADCAST_B_MAX_BYTES
+
+
+def embeddings_strategy(sf_dir: str) -> str:
+    """Vector scans over the embeddings (int8 quantization, ADC and
+    Hamming shortlists): 'kernel' (Arrow batches) or 'expr' (the
+    interpreted, oracle-mirroring fold)."""
+    big = source_size_bytes(sf_dir, "embeddings") > EMBEDDINGS_KERNEL_MIN_BYTES
+    return "kernel" if big else "expr"
+
+
+def pin_exploded_documents(sf_dir: str) -> bool:
+    """Whether a frame exploded from the documents (bigrams, positioned
+    grams) is persisted for its consumers. At scale the pinned blocks
+    starve the count aggregations while the narrow explode recomputes
+    at scan speed; duplicated text compresses so well on disk that
+    source bytes understate the exploded working set about 4×."""
+    return source_size_bytes(sf_dir, "documents") <= DOCUMENTS_PIN_MAX_BYTES
+
+
+def q02_direct_join(sf_dir: str) -> bool:
+    """Whether q02 runs the all-broadcast direct join."""
+    return source_size_bytes(sf_dir, "orders") < Q02_DIRECT_MAX_ORDERS_BYTES
+
+
+def q02_broadcast_customer(sf_dir: str) -> bool:
+    """Whether q02 broadcasts its pruned (custkey, nation) map. The
+    broadcast hash relation is ~30 B/row, ~10× the compressed bytes."""
+    size = source_size_bytes(sf_dir, "customer")
+    return size <= Q02_BCAST_MAX_CUSTOMER_BYTES
+
+
+def layout_write_shuffles(sf_dir: str, table: str) -> bool:
+    """Whether a bucketed layout build repartitions ``table`` on its
+    bucket key first (one file per bucket) or writes shuffle-free
+    (input tasks × buckets files; the bucketed join plan is the same)."""
+    return source_size_bytes(sf_dir, table) <= LAYOUT_SHUFFLE_MAX_BYTES
+
+
+def state_partitions(sf_dir: str, table: str = "events") -> int:
+    """State-store partitions for a stream replaying ``table``: each
+    costs a fixed store init + commit + task every micro-batch."""
+    return 4 if source_size_bytes(sf_dir, table) < STATE_SMALL_MAX_BYTES else 8
 
 
 # Query-scoped caches. Every cache() whose useful life is one query
@@ -185,6 +348,16 @@ def release_session_state(name: str) -> None:
             _release(_STATE.pop(slot)[1])
 
 
+@_atexit.register
+def _release_directories_at_exit() -> None:
+    """A session_state temp directory would outlive its process; cached
+    frames need no release, they go with the JVM."""
+    with _STATE_LOCK:
+        for _key, value in _STATE.values():
+            if isinstance(value, str):
+                _release(value)
+
+
 def _release(value) -> None:
     """Free what a session_state entry holds: a path is a temp directory
     and is deleted; the cache()d frames among the value and its
@@ -201,24 +374,13 @@ def _release(value) -> None:
                 pass  # session gone — nothing to free
 
 
-# One shuffle partition per this many bytes of COMPRESSED fact input
-# (≈128–256 MB decompressed in memory — the standard cluster guidance
-# of partitions sized to fit an executor's task memory). Calibrated on
-# the measured q02 300× point: 32 default partitions over ~4.2 GB of
-# parquet hit AGGREGATE_OUT_OF_MEMORY; the hand-found 128 works and
-# equals ceil(4.2 GB / 32 MB) — so the rule reproduces the proven
-# setting instead of hand-tuning each scale.
-SHUFFLE_PARTITION_BYTES = 32 << 20
-
-
 def suggest_shuffle_partitions(*paths: str, floor: int | None = None) -> int:
-    """Partitions sized to the DATA, not the cores (the q02 300×
-    lesson, r8): max(cores, total compressed input / 32 MB). ``paths``
-    are the fact files/dirs a workload actually reads — dimensions are
-    noise. Deployments pass the rule's output to
-    spark.sql.shuffle.partitions (or let AQE coalesce down from it);
-    the bench harnesses use it for factor ≥ 300 fixtures so big-factor
-    rows are produced by the rule, not per-run knob fiddling."""
+    """Shuffle partitions sized to the data, not the cores: max(cores,
+    total source bytes / SHUFFLE_PARTITION_BYTES). ``paths`` are the
+    fact files/dirs a workload reads; dimensions are noise. Deployments
+    pass the result to spark.sql.shuffle.partitions (or let AQE coalesce
+    down from it); the bench harnesses use it for factor >= 300
+    fixtures."""
     import os
 
     from dask_cuml_spark.operators.layout import source_files

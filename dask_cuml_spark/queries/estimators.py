@@ -252,7 +252,7 @@ GROUP BY lang
 """,
 )
 def q98_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dask_cuml_spark.streaming import _state_partitions, auto_state_partitions
+    from dask_cuml_spark.streaming import _state_partitions
 
     schema = source_schema(spark, sf_dir, "documents")
     stream = (
@@ -268,7 +268,7 @@ def q98_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     name = f"dedup_{abs(hash(sf_dir)) % 10_000_000}"
     with tempfile.TemporaryDirectory() as ckpt, _state_partitions(
-        spark, auto_state_partitions(sf_dir, table="documents")
+        spark, sf_dir, "documents"
     ):
         q = (
             deduped.writeStream.format("memory")

@@ -70,8 +70,8 @@ def q01_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 # per-order agg 2.3 s, orders⋈bcast-customer 0.9 s — the 15M-group
 # order rollup and the SMJ sorts were the gap, not the scan):
 #
-#   'direct' (orders below 64 MB): plain join chain; Catalyst
-#     broadcasts everything at fixture scale. Unchanged from r4.
+#   'direct' (small orders, plans/cost.q02_direct_join): plain join
+#     chain; Catalyst broadcasts everything at fixture scale.
 #   'bcast-cmap' (orders large, customer map broadcastable): the
 #     DuckDB-shaped pipeline — broadcast the pruned (custkey →
 #     nationkey) map into orders (narrow), then ONE shuffled HASH join
@@ -103,9 +103,6 @@ def q01_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 # All shapes are result-identical (test_q02_eager_agg_both_shapes_agree
 # pins all three at fixture scale).
 # ---------------------------------------------------------------------------
-# Above this size the direct join's all-broadcast plan stops being free;
-# 64 MB ≈ 15 M orders rows — far below any cluster-scale input.
-_Q02_EAGER_AGG_MIN_ORDERS_BYTES = 64 << 20
 # Co-located bucketed layout (r8, the owed A/B — it WON): orders and
 # lineitem bucketBy(orderkey) make the one mandatory wide join
 # Exchange-free on BOTH inputs (ShuffledHashJoin straight off the
@@ -127,22 +124,6 @@ def _q02_bucket_tables(sf_dir: str) -> tuple[str, str]:
     return layout_tables("q02", sf_dir)
 
 
-# The pruned 2-column customer map is ~1/10 of the full-table estimate;
-# 1 GiB of customer ≈ a ~100 MB broadcast build — the upper end of
-# routine Spark broadcast practice. Past it, fall back to all-shuffle.
-# MEASURED boundary, not a guess (r8): at 100× the pruned 2-col map of
-# a 29 MB-plan / 1.5 M-row customer builds and wins (1.66 s bucketed);
-# at 300× the ~90 MB-plan / 4.5 M-row map FAILS the broadcast build
-# outright (notEnoughMemoryToBuildAndBroadcastTableError under the 8 g
-# driver) — the in-memory hashed relation is ~30 B/row, ~10× the
-# parquet-compressed plan estimate the gate sees. 48 MB keeps a 1.5×
-# margin over the proven-good point while staying far under the
-# measured failure; past it the eager-agg all-shuffle shape is the
-# answer (and composes with the bucketed layout, see below).
-_Q02_BCAST_CMAP_MAX_CUSTOMER_BYTES = 48 << 20
-
-
-
 def q02_plan_branch(spark: SparkSession, sf_dir: str) -> str:
     """Which join shape q02's cost gate picks for this dataset —
     'direct', 'bcast-cmap', 'eager-agg', or their bucketed-layout
@@ -157,33 +138,18 @@ def q02_plan_branch(spark: SparkSession, sf_dir: str) -> str:
     # bucketed scans (customer too big to broadcast — the rollup and
     # the wide join are both on orderkey, so they run Exchange-free
     # off the layout too; only the custkey exchange remains).
-    # size gates read the source parquet FILE size, never plan stats:
-    # once a session caches a table, Catalyst substitutes the cached
-    # InMemoryRelation into ANY plan over the same source (CacheManager
-    # matches by logical plan, so even a fresh spark.read.parquet picks
-    # it up), and in-memory stats are uncompressed — customer at 100x
-    # reads 78 MB cached vs 29 MB on disk. A stats-fed gate therefore
-    # flips branches depending on whether the suite happened to cache
-    # the table first (the r9 regression: q02 at 100x fell to
-    # bucketed-eager under the bench protocol's cache and lost 0.8 s).
-    # The caps below were calibrated against parquet sizes — file bytes
-    # ARE that unit, and they're invariant to session cache state.
-    from dask_cuml_spark.io import source_size_bytes
+    from dask_cuml_spark.plans.cost import (
+        q02_broadcast_customer,
+        q02_direct_join,
+    )
 
     bo, bl = _q02_bucket_tables(sf_dir)
     has_layout = spark.catalog.tableExists(bo) and spark.catalog.tableExists(
         bl
     )
-    if (
-        not has_layout
-        and source_size_bytes(sf_dir, "orders")
-        < _Q02_EAGER_AGG_MIN_ORDERS_BYTES
-    ):
+    if not has_layout and q02_direct_join(sf_dir):
         return "direct"
-    if (
-        source_size_bytes(sf_dir, "customer")
-        <= _Q02_BCAST_CMAP_MAX_CUSTOMER_BYTES
-    ):
+    if q02_broadcast_customer(sf_dir):
         return "bucketed" if has_layout else "bcast-cmap"
     return "bucketed-eager" if has_layout else "eager-agg"
 @register(
@@ -596,24 +562,18 @@ GROUP BY 1
 """,
 )
 def q12_quantiles_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dask_cuml_spark.plans.cost import (
-        REUSE_CHECKPOINT_MIN_BYTES,
-        plan_size_bytes,
-    )
+    from dask_cuml_spark.plans.cost import one_aggregate_percentile
 
     o = load_table(spark, sf_dir, "orders")
     col = o.select("o_totalprice")
-    if plan_size_bytes(col) < REUSE_CHECKPOINT_MIN_BYTES:
-        # r16: below the repo's standard 64 MB gate the exact continuous
-        # median is ONE JVM percentile aggregate (same 1 + 0.5·(N−1)
-        # position + lower + frac·(upper−lower) interpolation as the
-        # rank path and both engines' QUANTILE_CONT — guide §2.4 "remove
-        # shuffles outright"): no range repartition, no checkpoint, no
+    if one_aggregate_percentile(col):
+        # the exact continuous median is ONE JVM percentile aggregate
+        # (same 1 + 0.5·(N−1) position + lower + frac·(upper−lower)
+        # interpolation as the rank path and both engines'
+        # QUANTILE_CONT): no range repartition, no checkpoint, no
         # per-partition-counts collect, no bracketing-rows collect. The
         # rank path below stays the plan once the column outgrows task
-        # memory (the exact-percentile aggregate buffers values
-        # per-partition, then merges — fine exactly when the column is
-        # task-memory-sized). Measured: 1.44 s/10 jobs → 0.48 s/3 jobs.
+        # memory (the aggregate buffers values per partition).
         p50 = float(
             col.agg(F.percentile("o_totalprice", F.lit(0.5))).collect()[0][0]
         )

@@ -159,10 +159,7 @@ def q117_stream_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame
     is the (segment, event_type) aggregate — tiny keyspace."""
     import tempfile
 
-    from dask_cuml_spark.streaming import (
-        _state_partitions,
-        auto_state_partitions,
-    )
+    from dask_cuml_spark.streaming import _state_partitions
 
     schema = source_schema(spark, sf_dir, "events")
     stream = (
@@ -182,7 +179,7 @@ def q117_stream_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame
     )
     name = f"enrich_{abs(hash(sf_dir)) % 10_000_000}"
     with tempfile.TemporaryDirectory() as ckpt, _state_partitions(
-        spark, auto_state_partitions(sf_dir)
+        spark, sf_dir
     ):
         q = (
             agg.writeStream.format("memory")

@@ -778,9 +778,8 @@ def q105_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     quality = base.filter((F.col("nt") >= 30) & (F.col("ttr") >= 0.3))
     # survivors feed the near-dup operator, the final join and the tail
-    # aggregate; cache at fixture scale, lazy localCheckpoint above
-    # 64 MB estimated input (verdict r4 task 8 — the composite's scale
-    # posture now matches its components; see dask_cuml_spark.plans.cost)
+    # aggregate; cache at fixture scale, lazy localCheckpoint at scale
+    # (dask_cuml_spark.plans.cost.persist_for_reuse)
     from dask_cuml_spark.plans.cost import persist_for_reuse
 
     surv = persist_for_reuse(exact_dedup(quality))
@@ -1297,6 +1296,23 @@ def _positioned_grams(
     return d.select("doc_id", F.explode(grams).alias("g")).select(
         "doc_id", F.col("g.pos").alias("pos"), F.col("g._h").alias("_h")
     )
+
+
+def _gram_occurrences(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, pos, _h) for a query with several consumers: the stored
+    grams layout when provisioned, else the positioned explode, persisted
+    where plans/cost.pin_exploded_documents allows and otherwise
+    recomputed per consumer at scan speed."""
+    from dask_cuml_spark.plans.cost import (
+        persist_for_reuse,
+        pin_exploded_documents,
+    )
+
+    tbl = _gram_table(sf_dir)
+    if spark.catalog.tableExists(tbl):
+        return spark.table(tbl)
+    g = _positioned_grams(spark, sf_dir)
+    return persist_for_reuse(g) if pin_exploded_documents(sf_dir) else g
 
 
 def _gram_table(sf_dir: str) -> str:
@@ -2076,21 +2092,13 @@ def q133_bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.xxhash64(F.col("bg.w1")).alias("h1"),
         )
     )
-    # one exploded pass feeds training and scoring. Persist it only at
-    # small/medium inputs: at large scale the pinned blocks starve the
-    # count aggregations, while re-running the narrow split+slice
-    # explode is scan-speed — the scale-correct trade. Gate on SOURCE
-    # bytes, not plan stats (the r10 cache-substitution lesson). The
-    # gate is 256 MB, NOT the 1 GB the r10 draft used: duplicated text
-    # compresses ~2x better on disk than the rows it explodes to (the
-    # 1000x fixture is 585 MB of parquet but 125 M bigram rows), and
-    # the r11 re-run proved 585 MB of source still OOMs the persisted
-    # shape under a 24 g driver — on-disk bytes understate exploded
-    # working set, so the gate errs low.
-    from dask_cuml_spark.io import source_size_bytes
-    from dask_cuml_spark.plans.cost import persist_for_reuse
+    # one exploded pass feeds training and scoring
+    from dask_cuml_spark.plans.cost import (
+        persist_for_reuse,
+        pin_exploded_documents,
+    )
 
-    if source_size_bytes(sf_dir, "documents") <= (256 << 20):
+    if pin_exploded_documents(sf_dir):
         big = persist_for_reuse(big)
     c12 = big.groupBy("h12").agg(F.count(F.lit(1)).alias("c12"))
     c1 = big.groupBy("h1").agg(F.count(F.lit(1)).alias("c1"))
@@ -2182,22 +2190,7 @@ def q134_exact_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # occurrence counts AND the dup back-join are bucket-local — the
     # query's one corpus-wide shuffle vanishes along with construction;
     # only the per-doc window exchange remains.
-    tbl = _gram_table(sf_dir)
-    if spark.catalog.tableExists(tbl):
-        g = spark.table(tbl)
-    else:
-        g = _positioned_grams(spark, sf_dir)
-        # persist only at small/medium inputs (the q133 rule: at scale
-        # the pinned blocks starve the count aggregation; the narrow
-        # positioned explode recomputes at scan speed). 256 MB gate —
-        # see q133: on-disk bytes understate the exploded working set
-        # ~4x on duplicated text, so 1 GB let the 1000x fixture
-        # (585 MB parquet -> 650 M positioned rows) slip through.
-        from dask_cuml_spark.io import source_size_bytes
-        from dask_cuml_spark.plans.cost import persist_for_reuse
-
-        if source_size_bytes(sf_dir, "documents") <= (256 << 20):
-            g = persist_for_reuse(g)
+    g = _gram_occurrences(spark, sf_dir)
     dup = (
         g.groupBy("_h")
         .agg(F.count(F.lit(1)).alias("_c"))
@@ -2401,16 +2394,7 @@ GROUP BY doc_id, gid
 """,
 )
 def q139_decontaminate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tbl = _gram_table(sf_dir)
-    if spark.catalog.tableExists(tbl):
-        g = spark.table(tbl)
-    else:
-        g = _positioned_grams(spark, sf_dir)
-        from dask_cuml_spark.io import source_size_bytes
-        from dask_cuml_spark.plans.cost import persist_for_reuse
-
-        if source_size_bytes(sf_dir, "documents") <= (256 << 20):
-            g = persist_for_reuse(g)
+    g = _gram_occurrences(spark, sf_dir)
     eval_g = (
         g.filter(F.col("doc_id") % 97 == 0).select("_h").distinct()
     )
@@ -2687,10 +2671,10 @@ def q143_seq_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (partial-agg; B=8192 keys, no skew: bucket counts are the model) →
 # broadcast log-ratio map → per-doc avg keyed by doc_id. The two
 # passes over the exploded rows re-run the narrow split+explode at
-# scan speed rather than persisting corpus-sized state (q133's 256 MB
-# lesson — at fixture scale recompute costs ~nothing, at 100 TB the
-# pinned blocks would starve the aggregation). Doubles: per-doc AVG of
-# logs rounded to 6 (the q133 convention).
+# scan speed rather than persisting corpus-sized state (the
+# pin_exploded_documents lesson — at fixture scale recompute costs
+# ~nothing, at 100 TB the pinned blocks would starve the aggregation).
+# Doubles: per-doc AVG of logs rounded to 6 (the q133 convention).
 # ---------------------------------------------------------------------------
 _Q144_B = 8192  # hashed feature buckets (DSIR §3.2 uses 10^4)
 _Q144_MOD = 1000003  # prime fold modulus, keeps the fold < 2^25 exact
@@ -2748,7 +2732,7 @@ def q144_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     # localCheckpoint pins the VOCAB-sized map (31 rows at any fixture
     # scale; bounded by |vocab| always) so the two consumers below do
     # not each re-scan the corpus to rebuild it — this is model-state,
-    # not the corpus-sized persist the 256 MB rule forbids. Empty
+    # not a corpus-sized persist pin_exploded_documents guards. Empty
     # tokens (double spaces in dirty input) are safe cross-engine by
     # construction: both engines emit the '' token from the split and
     # both fold it to bucket 0 (Spark folds an EMPTY char array to the
@@ -2889,8 +2873,8 @@ def q147_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pipeline (explode + two count aggs + joins) re-evaluates per
     # consumer (the q144 duplicated-subtree class; measured 18.7 s vs
     # q133's own 12.9 s at 100x). This is NOT a corpus-sized persist
-    # the 256 MB rule forbids: three narrow columns PER DOC (~30 B/doc,
-    # ~0.03% of source text bytes at any scale), the same
+    # pin_exploded_documents guards: three narrow columns PER DOC
+    # (~30 B/doc, ~0.03% of source text bytes at any scale), the same
     # output-manifest class as q126's placements.
     from dask_cuml_spark.plans.cost import persist_for_reuse
 
@@ -2990,19 +2974,7 @@ GROUP BY g.doc_id
 """,
 )
 def q148_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tbl = _gram_table(sf_dir)
-    if spark.catalog.tableExists(tbl):
-        g = spark.table(tbl)
-    else:
-        g = _positioned_grams(spark, sf_dir)
-        # same persist economics as q134: reuse across the two
-        # consumers below only when the exploded frame is small enough
-        # to pin (256 MB source-bytes rule)
-        from dask_cuml_spark.io import source_size_bytes
-        from dask_cuml_spark.plans.cost import persist_for_reuse
-
-        if source_size_bytes(sf_dir, "documents") <= (256 << 20):
-            g = persist_for_reuse(g)
+    g = _gram_occurrences(spark, sf_dir)
     firsts = g.groupBy("_h").agg(F.min("doc_id").alias("_first"))
     novel = (F.col("_first") == F.col("doc_id")).cast("bigint")
     return (

@@ -25,8 +25,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from dask_cuml_spark.functions.vector import dot, l2_sq, rows_lit
-from dask_cuml_spark.io import load_table, source_size_bytes
-from dask_cuml_spark.plans.cost import session_state
+from dask_cuml_spark.io import load_table
+from dask_cuml_spark.plans.cost import embeddings_strategy, session_state
 from dask_cuml_spark.registry import register
 
 #: the source of every embeddings-derived session state
@@ -999,30 +999,23 @@ ORDER BY vec_id
 """,
 )
 def q131_int8_quantization(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # size-gated strategy (r10 verdict's one weak shape, fixed r11):
-    # below GATE_BYTES the interpreted-but-oracle-exact expression form
-    # runs (the driver's sf0.01 gate always lands here, so parity is
-    # proved on the expression fold); above it the Arrow/numpy kernel
-    # takes over — same plan (one narrow pass, zero shuffles), compiled
-    # per-element math instead of CodegenFallback lambdas. Branch value
-    # parity is asserted by tests/test_operators.py's strategy-agreement
-    # test; the gate reads source FILE bytes (cache-proof, the q02 rule).
-    from dask_cuml_spark.operators.quantize import GATE_BYTES, int8_quantize
+    # size-gated strategy: the interpreted-but-oracle-exact expression
+    # form at fixture scale (so parity is proved on the expression
+    # fold), the Arrow/numpy kernel above — same plan (one narrow pass,
+    # zero shuffles), compiled per-element math instead of
+    # CodegenFallback lambdas. Branch value parity is asserted by
+    # tests/test_operators.py's strategy-agreement test.
+    from dask_cuml_spark.operators.quantize import int8_quantize
 
-    big = source_size_bytes(sf_dir, "embeddings") > GATE_BYTES
+    strategy = embeddings_strategy(sf_dir)
     e = load_table(spark, sf_dir, "embeddings")
-    if not big:
+    if strategy == "expr":
         # spread the interpreted lambdas across cores (the one-row-group
         # fixture note); at scale the scan already has many splits and a
         # round-robin reshuffle of the vectors was a measured 0.25 s
         # LOSS at 100x (0.74 s vs 0.48 s)
         e = _par(e)
-    raw = int8_quantize(
-        e,
-        id_col="vec_id",
-        vec_col="embedding",
-        strategy="kernel" if big else "expr",
-    )
+    raw = int8_quantize(e, "vec_id", "embedding", strategy)
     return raw.select(
         "vec_id",
         F.round("scale", 6).alias("scale"),
@@ -1250,13 +1243,11 @@ def q138_pq_adc_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # ADC scan: m LUT lookups per code row (the embedding column never
     # loads). Size-gated like q131: the expr fold (oracle-mirroring)
-    # at fixture scale; above GATE_BYTES the Arrow kernel — r12: the
-    # fold is 320M interpreted lookups at 1000x — emitting per-batch
+    # at fixture scale, else the Arrow kernel emitting per-batch
     # top-shortlist only (bit-identical adist, strategy-agreement
     # pytest), so the window exchange carries batches x nq x 50 rows.
-    from dask_cuml_spark.operators.quantize import GATE_BYTES, adc_candidates
+    from dask_cuml_spark.operators.quantize import adc_candidates
 
-    big = source_size_bytes(sf_dir, "embeddings") > GATE_BYTES
     # shortlist+1 at the kernel: each batch emits its top-(n+1), so the
     # union provably contains the global top-50 NON-SELF candidates
     # even when the query's own row (adist≈0, always rank 1) occupies a
@@ -1265,7 +1256,7 @@ def q138_pq_adc_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         codes,
         [(qid, lut, None) for qid, lut in _pq_luts(qrows, cb)],
         shortlist=_Q138_SHORTLIST + 1,
-        strategy="kernel" if big else "expr",
+        strategy=embeddings_strategy(sf_dir),
     )
     w = Window.partitionBy("query_id").orderBy("adist", "neighbor_id")
     # self-match dropped BEFORE the rank cut (r14 — the advisor-r12
@@ -1532,11 +1523,10 @@ def q141_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cell-local ADC scan: the literal IN prunes buckets on the stored
     # layout (row groups otherwise); the codes side never shuffles.
     # Same size gate as q138: expr fold (oracle-mirroring) at fixture
-    # scale, per-batch-top-shortlist Arrow kernel above GATE_BYTES
-    # (each query scores only its probed cells in both strategies)
-    from dask_cuml_spark.operators.quantize import GATE_BYTES, adc_candidates
+    # scale, else the per-batch-top-shortlist Arrow kernel (each query
+    # scores only its probed cells in both strategies)
+    from dask_cuml_spark.operators.quantize import adc_candidates
 
-    big = source_size_bytes(sf_dir, "embeddings") > GATE_BYTES
     # shortlist+1 at the kernel — q138's union argument: the self row
     # can occupy one per-batch slot, the spare keeps the global
     # non-self top-50 provably inside the emitted union
@@ -1545,7 +1535,7 @@ def q141_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         lut_rows,
         shortlist=_Q141_SHORTLIST + 1,
         cell_col="cell_id",
-        strategy="kernel" if big else "expr",
+        strategy=embeddings_strategy(sf_dir),
     )
     w = Window.partitionBy("query_id").orderBy("adist", "neighbor_id")
     # self-match dropped BEFORE the rank cut (r14, the q145 fix) so the
@@ -1593,8 +1583,8 @@ def q141_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 # 0.44 at 64 bits, against the 0.35 invariant floor (near-orthogonal
 # unit fixtures — the same hard case q138 documents). Size-gated like
 # q138: the expr XOR+POPCNT explode at fixture scale (whole-stage
-# codegen), the per-batch-top-shortlist Arrow kernel above GATE_BYTES so
-# the window exchange carries batches x nq x 50 rows, never n x nq.
+# codegen), else the per-batch-top-shortlist Arrow kernel so the window
+# exchange carries batches x nq x 50 rows, never n x nq.
 # Oracle: the q82/q138 invariant pattern (planes are model-state, bits
 # pytest-pinned via numpy replay + partitioning invariance).
 # ---------------------------------------------------------------------------
@@ -1625,7 +1615,6 @@ def q145_signhash_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         signatures_of,
     )
     from dask_cuml_spark.operators.knn import brute_force_knn
-    from dask_cuml_spark.operators.quantize import GATE_BYTES
 
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     qrows = sorted(
@@ -1649,14 +1638,13 @@ def q145_signhash_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     # planes are seed-derived so the stored and fresh bits share one
     # derivation, pytest-pinned)
     sigs, _from_layout = _sig_serving(spark, sf_dir, planes, _SIG_SEED)
-    big = source_size_bytes(sf_dir, "embeddings") > GATE_BYTES
     scored = hamming_candidates(
         sigs,
         queries,
         # +1: the self row can hold one per-batch kernel slot — the
         # spare keeps the global non-self top-50 inside the union
         shortlist=_Q145_SHORTLIST + 1,
-        strategy="kernel" if big else "expr",
+        strategy=embeddings_strategy(sf_dir),
     )
     w = Window.partitionBy("query_id").orderBy("ham", "neighbor_id")
     # self-match dropped BEFORE the rank cut (advisor r12): the query's
@@ -1835,7 +1823,7 @@ def pq_adc_serving_topk(
     the way a production index does."""
     import numpy as np
 
-    from dask_cuml_spark.operators.quantize import GATE_BYTES, adc_candidates
+    from dask_cuml_spark.operators.quantize import adc_candidates
 
     n = _Q138_SHORTLIST if shortlist is None else shortlist
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
@@ -1845,14 +1833,13 @@ def pq_adc_serving_topk(
         key=lambda r: r.vec_id,
     )
     cb = np.stack(codebooks)
-    big = source_size_bytes(sf_dir, "embeddings") > GATE_BYTES
     scored = adc_candidates(
         coded.select("vec_id", "codes"),
         [(qid, lut, None) for qid, lut in _pq_luts(qrows, cb)],
         # +1: q138's kernel-union argument — the self row may hold one
         # per-batch slot; _serving_shortlist filters it pre-cut
         shortlist=n + 1,
-        strategy="kernel" if big else "expr",
+        strategy=embeddings_strategy(sf_dir),
     )
     short = _serving_shortlist(scored, "adist", n)
     return _serving_rerank(e, short, _Q138_NQ, _Q138_K)
@@ -1872,7 +1859,7 @@ def ivfpq_serving_topk(
     does."""
     import numpy as np
 
-    from dask_cuml_spark.operators.quantize import GATE_BYTES, adc_candidates
+    from dask_cuml_spark.operators.quantize import adc_candidates
 
     n = _Q141_SHORTLIST if shortlist is None else shortlist
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
@@ -1895,14 +1882,13 @@ def ivfpq_serving_topk(
             (int(r.vec_id), lut_by_id[r.vec_id], [int(c) for c in order])
         )
     probed_cells = sorted({c for _q, _l, cells in lut_rows for c in cells})
-    big = source_size_bytes(sf_dir, "embeddings") > GATE_BYTES
     scored = adc_candidates(
         coded.filter(F.col("cell_id").isin(probed_cells)),
         lut_rows,
         # +1: same kernel-union spare as the query body
         shortlist=n + 1,
         cell_col="cell_id",
-        strategy="kernel" if big else "expr",
+        strategy=embeddings_strategy(sf_dir),
     )
     short = _serving_shortlist(scored, "adist", n)
     return _serving_rerank(e, short, _Q141_NQ, _Q141_K)
@@ -1923,7 +1909,6 @@ def signhash_serving_topk(
         hyperplanes,
         signatures_of,
     )
-    from dask_cuml_spark.operators.quantize import GATE_BYTES
 
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     qrows = sorted(
@@ -1939,13 +1924,12 @@ def signhash_serving_topk(
     ]
     sigs, _from_layout = _sig_serving(spark, sf_dir, planes, _SIG_SEED)
     n = _Q145_SHORTLIST if shortlist is None else shortlist
-    big = source_size_bytes(sf_dir, "embeddings") > GATE_BYTES
     scored = hamming_candidates(
         sigs,
         queries,
         # +1: same kernel-union spare as the query body
         shortlist=n + 1,
-        strategy="kernel" if big else "expr",
+        strategy=embeddings_strategy(sf_dir),
     )
     short = _serving_shortlist(scored, "ham", n)
     return _serving_rerank(e, short, _Q145_NQ, _Q145_K)
@@ -2367,18 +2351,16 @@ def _q162_dense_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
             hyperplanes,
             signatures_of,
         )
-        from dask_cuml_spark.operators.quantize import GATE_BYTES
 
         qrow = e.filter(F.col("vec_id") == _Q162_QV).first()
         Q = np.asarray(qrow["embedding"], dtype=np.float64)[None, :]
         planes = hyperplanes(_Q145_NBITS, Q.shape[1], 7)
         qsig = [int(w) for w in signatures_of(Q, planes)[0]]
-        big = source_size_bytes(sf_dir, "embeddings") > GATE_BYTES
         scored = hamming_candidates(
             spark.table(sig_tbl),
             [(int(_Q162_QV), qsig)],
             shortlist=_Q162_SHORTLIST,
-            strategy="kernel" if big else "expr",
+            strategy=embeddings_strategy(sf_dir),
         )
         wsh = Window.partitionBy("query_id").orderBy("ham", "neighbor_id")
         short = (

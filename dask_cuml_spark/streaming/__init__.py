@@ -4,36 +4,18 @@ from contextlib import contextmanager
 
 
 @contextmanager
-def _state_partitions(spark, n: int):
+def _state_partitions(spark, sf_dir: str, table: str = "events"):
     """Scope the state-store partition count (= shuffle partitions at the
-    stream's FIRST run) to `n`. Local micro-batches pay a fixed cost per
-    state partition (~0.5 s saved at n=8 vs 32 on the fixture streams);
-    a real cluster sizes this to keyspace/executors instead — the
-    checkpoint pins it, so new runs here always use fresh checkpoints."""
+    stream's FIRST run) to plans/cost.state_partitions for the replayed
+    ``table``. A real cluster sizes this to keyspace/executors instead —
+    the checkpoint pins it, so new runs here always use fresh
+    checkpoints."""
+    from dask_cuml_spark.plans.cost import state_partitions
+
+    n = state_partitions(sf_dir, table)
     old = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(n))
     try:
         yield
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
-
-
-def auto_state_partitions(sf_dir: str, table: str = "events") -> int:
-    """Size the state-store partition count to the stream's input.
-
-    Local micro-batches pay a fixed per-state-partition cost every
-    batch (store init + commit + task), so a small replayed fixture
-    wants few partitions (measured on q93 at sf0.1: 8 → 2.75 s,
-    4 → 2.14 s), while the scaled streams keep the measured 8 (10M
-    events in 5.9 s at 100×). The 64 MB threshold is the repo's
-    standard cost gate (plans/cost.py). A real cluster sizes this to
-    keyspace/executors; the checkpoint pins whatever the first run
-    chose, so fresh-checkpoint runs here can re-decide per run.
-    """
-    import os
-
-    try:
-        size = os.path.getsize(os.path.join(sf_dir, f"{table}.parquet"))
-    except OSError:
-        return 8
-    return 4 if size < (64 << 20) else 8

@@ -18,7 +18,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from dask_cuml_spark.io import source_schema, with_event_time
-from dask_cuml_spark.streaming import _state_partitions, auto_state_partitions
+from dask_cuml_spark.streaming import _state_partitions
 
 
 def stream_sessionize(
@@ -49,7 +49,7 @@ def stream_sessionize(
         )
     )
     name = f"sessions_{abs(hash(sf_dir)) % 10_000_000}"
-    with tempfile.TemporaryDirectory() as ckpt, _state_partitions(spark, auto_state_partitions(sf_dir)):
+    with tempfile.TemporaryDirectory() as ckpt, _state_partitions(spark, sf_dir):
         q = (
             sessions.writeStream.format("memory")
             .queryName(name)
@@ -92,7 +92,7 @@ def stream_hourly_counts(
         )
     )
     name = f"hourly_{abs(hash(sf_dir)) % 10_000_000}"
-    with tempfile.TemporaryDirectory() as ckpt, _state_partitions(spark, auto_state_partitions(sf_dir)):
+    with tempfile.TemporaryDirectory() as ckpt, _state_partitions(spark, sf_dir):
         q = (
             counts.writeStream.format("memory")
             .queryName(name)

@@ -27,7 +27,7 @@ from pyspark.sql.types import (
 )
 
 from dask_cuml_spark.io import source_schema
-from dask_cuml_spark.streaming import _state_partitions, auto_state_partitions
+from dask_cuml_spark.streaming import _state_partitions
 
 _STATE_SCHEMA = StructType(
     [StructField("n", LongType()), StructField("vsum", DoubleType())]
@@ -73,7 +73,7 @@ def stream_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
     name = f"user_totals_{abs(hash(sf_dir)) % 10_000_000}"
-    with tempfile.TemporaryDirectory() as ckpt, _state_partitions(spark, auto_state_partitions(sf_dir)):
+    with tempfile.TemporaryDirectory() as ckpt, _state_partitions(spark, sf_dir):
         q = (
             totals.writeStream.format("memory")
             .queryName(name)

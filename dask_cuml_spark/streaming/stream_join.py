@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dask_cuml_spark.io import source_schema, with_event_time
-from dask_cuml_spark.streaming import _state_partitions, auto_state_partitions
+from dask_cuml_spark.streaming import _state_partitions
 
 
 def stream_purchase_error_join(
@@ -54,7 +54,7 @@ def stream_purchase_error_join(
         (F.unix_micros("e_ts") - F.unix_micros("p_ts")).alias("lag_us"),
     )
     name = f"ss_join_{abs(hash(sf_dir)) % 10_000_000}"
-    with tempfile.TemporaryDirectory() as ckpt, _state_partitions(spark, auto_state_partitions(sf_dir)):
+    with tempfile.TemporaryDirectory() as ckpt, _state_partitions(spark, sf_dir):
         q = (
             joined.writeStream.format("memory")
             .queryName(name)

@@ -54,7 +54,7 @@ from pyspark.sql import functions as F
 from dask_cuml_spark.functions.vector import rows_lit
 from dask_cuml_spark.io import source_schema
 from dask_cuml_spark.operators.merge import merge_upsert
-from dask_cuml_spark.streaming import _state_partitions, auto_state_partitions
+from dask_cuml_spark.streaming import _state_partitions
 
 _POINTER = "COMMITTED"
 # default bucket count for fixture-sized tables; real deployments size
@@ -347,7 +347,7 @@ def stream_upsert_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
         with tempfile.TemporaryDirectory() as ckpt, _state_partitions(
-            spark, auto_state_partitions(sf_dir)
+            spark, sf_dir
         ):
             # the checkpoint location IS the batch-id scope, so it is
             # the stream identity the replay guard keys on (advisor r8)

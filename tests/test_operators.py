@@ -843,15 +843,16 @@ def test_q02_eager_agg_both_shapes_agree(spark, monkeypatch):
     """q02's cost-gated join shape must be a pure physical choice:
     forcing any of the three branches yields identical results."""
     import dask_cuml_spark.queries.relational as rel
+    from dask_cuml_spark.plans import cost
 
-    monkeypatch.setattr(rel, "_Q02_EAGER_AGG_MIN_ORDERS_BYTES", 1 << 60)
+    monkeypatch.setattr(cost, "Q02_DIRECT_MAX_ORDERS_BYTES", 1 << 60)
     assert rel.q02_plan_branch(spark, SF) == "direct"
     direct = {tuple(r) for r in rel.q02_revenue_by_nation(spark, SF).collect()}
-    monkeypatch.setattr(rel, "_Q02_EAGER_AGG_MIN_ORDERS_BYTES", 0)
-    monkeypatch.setattr(rel, "_Q02_BCAST_CMAP_MAX_CUSTOMER_BYTES", 0)
+    monkeypatch.setattr(cost, "Q02_DIRECT_MAX_ORDERS_BYTES", 0)
+    monkeypatch.setattr(cost, "Q02_BCAST_MAX_CUSTOMER_BYTES", 0)
     assert rel.q02_plan_branch(spark, SF) == "eager-agg"
     eager = {tuple(r) for r in rel.q02_revenue_by_nation(spark, SF).collect()}
-    monkeypatch.setattr(rel, "_Q02_BCAST_CMAP_MAX_CUSTOMER_BYTES", 1 << 60)
+    monkeypatch.setattr(cost, "Q02_BCAST_MAX_CUSTOMER_BYTES", 1 << 60)
     assert rel.q02_plan_branch(spark, SF) == "bcast-cmap"
     bcast = {tuple(r) for r in rel.q02_revenue_by_nation(spark, SF).collect()}
     assert direct == eager == bcast and len(direct) > 0
@@ -957,6 +958,7 @@ def test_q02_bucketed_layout_branch(spark, monkeypatch):
     values, orderkey rollup/join still off the bucketed scans."""
     import dask_cuml_spark.queries.relational as rel
     from dask_cuml_spark.layouts import build_layout
+    from dask_cuml_spark.plans import cost
 
     plain = {tuple(r) for r in rel.q02_revenue_by_nation(spark, SF).collect()}
     build_layout(spark, SF, "q02")
@@ -965,7 +967,7 @@ def test_q02_bucketed_layout_branch(spark, monkeypatch):
         d = rel.q02_revenue_by_nation(spark, SF)
         got = {tuple(r) for r in d.collect()}
         assert got == plain and len(got) > 0
-        monkeypatch.setattr(rel, "_Q02_BCAST_CMAP_MAX_CUSTOMER_BYTES", 0)
+        monkeypatch.setattr(cost, "Q02_BCAST_MAX_CUSTOMER_BYTES", 0)
         assert rel.q02_plan_branch(spark, SF) == "bucketed-eager"
         dbe = rel.q02_revenue_by_nation(spark, SF)
         be = {tuple(r) for r in dbe.collect()}
@@ -979,9 +981,7 @@ def test_q02_bucketed_layout_branch(spark, monkeypatch):
         assert "Bucketed: true" in fbe, fbe[:2000]
         assert "Exchange hashpartitioning(l_orderkey" not in fbe
         assert "Exchange hashpartitioning(o_orderkey" not in fbe
-        monkeypatch.setattr(
-            rel, "_Q02_BCAST_CMAP_MAX_CUSTOMER_BYTES", 48 << 20
-        )
+        monkeypatch.undo()
         final = (
             d._jdf.queryExecution().executedPlan().toString()
             .split("== Initial Plan ==")[0]
@@ -1148,9 +1148,9 @@ def test_ensure_layouts_steady_state_launches_no_jobs(spark, tmp_path):
         part = pq_mod.read_table(f"{SF_SMOKE}/{t}.parquet").slice(0, 100)
         pq_mod.write_table(part, f"{sf}/{t}.parquet/part-1.parquet")
     # grams, signs and cms refreshes ran 4, 5 and 3 jobs when the batch
-    # schema was inferred; signs also probes the embedding width with
-    # one job over the whole source, whose load reads a footer schema
-    for name, most in (("grams", 3), ("signs", 3), ("cms", 2)):
+    # schema was inferred; signs reads the embedding width from its
+    # table's properties, not from a job over the source
+    for name, most in (("grams", 3), ("signs", 2), ("cms", 2)):
         j0 = max_job_id(spark)
         inc = refresh_layout(spark, sf, name)
         jobs = max_job_id(spark) - j0
@@ -2778,6 +2778,35 @@ def test_q134_exact_substring_spans(spark):
             assert gram_counts[" ".join(t[i : i + _Q134_L])] >= 2
 
 
+def test_nearest_centers_strategies_agree(spark):
+    """expr and gemm give identical _cells for n=1 and n=nprobe, ties
+    included: integer vectors make the equidistant centroids exact ties
+    in both the fold and the GEMM form, so only the (dist², cid)
+    tie-break can order them. IVF assignment and probes take either
+    side of one gate, so both must be the same function."""
+    from dask_cuml_spark.operators.kmeans import nearest_centers
+
+    centers = np.array([[1, 0], [0, 1], [-1, 0], [0, -1]], dtype=float)
+    pts = [[0, 0], [1, 1], [-1, -1], [2, 0], [0, -2], [3, -1], [-2, 2]]
+    df = spark.createDataFrame(
+        [(i, [float(x) for x in p]) for i, p in enumerate(pts)],
+        "id long, v array<double>",
+    )
+    for n in (1, 3):
+        got = {
+            strategy: {
+                r.id: list(r._cells)
+                for r in nearest_centers(
+                    df, "v", centers, n, "_cells", strategy
+                ).collect()
+            }
+            for strategy in ("expr", "gemm")
+        }
+        assert got["expr"] == got["gemm"], (n, got)
+    # the all-ties row keeps the lowest centroid ids, in id order
+    assert got["expr"][0] == [0, 1, 2]
+
+
 def test_int8_quantize_strategy_agreement(spark):
     """expr vs kernel must agree EXACTLY on the integer witnesses and to
     the last ulp on scale/max_err (both are the same IEEE-double op
@@ -2977,8 +3006,8 @@ def test_q135_transitive_chain_canonicalized(spark):
 def test_int8_quantize_null_vector_propagates_in_both_strategies(spark):
     """A NULL embedding yields an all-null output row in BOTH
     strategies (advisor r11: the kernel used to crash on len(None)
-    while expr propagated — 'auto' would then succeed below GATE_BYTES
-    and throw above it on the same dirty input)."""
+    while expr propagated — the size gate would then succeed below its
+    threshold and throw above it on the same dirty input)."""
     from dask_cuml_spark.operators.quantize import int8_quantize
 
     df = spark.createDataFrame(

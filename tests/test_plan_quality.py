@@ -106,6 +106,7 @@ def test_q02_eager_agg_gate_and_plan_shape(spark, monkeypatch):
     BELOW the customer join, cutting that exchange from |orders| to
     |customer| rows."""
     import dask_cuml_spark.queries.relational as rel
+    from dask_cuml_spark.plans import cost
 
     assert rel.q02_plan_branch(spark, SF) == "direct"
 
@@ -118,8 +119,8 @@ def test_q02_eager_agg_gate_and_plan_shape(spark, monkeypatch):
         )
 
     assert "Aggregate [o_custkey" not in plan()
-    monkeypatch.setattr(rel, "_Q02_EAGER_AGG_MIN_ORDERS_BYTES", 1)
-    monkeypatch.setattr(rel, "_Q02_BCAST_CMAP_MAX_CUSTOMER_BYTES", 0)
+    monkeypatch.setattr(cost, "Q02_DIRECT_MAX_ORDERS_BYTES", 1)
+    monkeypatch.setattr(cost, "Q02_BCAST_MAX_CUSTOMER_BYTES", 0)
     assert rel.q02_plan_branch(spark, SF) == "eager-agg"
     eager = plan()
     # the custkey rollup sits below the customer join ...
@@ -132,7 +133,7 @@ def test_q02_eager_agg_gate_and_plan_shape(spark, monkeypatch):
     # middle branch (r7): broadcast customer map + ONE shuffled HASH
     # join on orderkey — no order/custkey rollup, no SMJ sorts (the
     # measured 100x win: 5.15 -> 3.66 s; see q02 block comment)
-    monkeypatch.setattr(rel, "_Q02_BCAST_CMAP_MAX_CUSTOMER_BYTES", 1 << 60)
+    monkeypatch.setattr(cost, "Q02_BCAST_MAX_CUSTOMER_BYTES", 1 << 60)
     assert rel.q02_plan_branch(spark, SF) == "bcast-cmap"
     df = rel.q02_revenue_by_nation(spark, SF)
     df.collect()
@@ -143,18 +144,20 @@ def test_q02_eager_agg_gate_and_plan_shape(spark, monkeypatch):
     assert "Aggregate [l_orderkey" not in plan()
 
 
-def test_persist_for_reuse_cost_gate(spark):
-    """Multi-consumer persistence is cost-based (verdict r4 task 8):
-    cache() below the threshold, lazy localCheckpoint above it (lineage
-    truncated -> plan collapses to an RDD scan)."""
+def test_persist_for_reuse_cost_gate(spark, monkeypatch):
+    """Multi-consumer persistence is cost-based: cache() below the
+    threshold, lazy localCheckpoint above it (lineage truncated -> plan
+    collapses to an RDD scan)."""
     from dask_cuml_spark.io import load_table
+    from dask_cuml_spark.plans import cost
     from dask_cuml_spark.plans.cost import persist_for_reuse
 
     d = load_table(spark, SF, "documents").select("doc_id", "text")
     small = persist_for_reuse(d)
     assert small.is_cached
     small.unpersist()
-    big = persist_for_reuse(d, threshold=1)
+    monkeypatch.setattr(cost, "REUSE_CHECKPOINT_MIN_BYTES", 1)
+    big = persist_for_reuse(d)
     plan = big._jdf.queryExecution().optimizedPlan().toString()
     assert "ExistingRDD" in plan or "LogicalRDD" in plan, plan[:500]
     assert big.count() == d.count()

@@ -143,3 +143,32 @@ def test_q104_follows_an_in_session_append_and_deletes_its_old_typed_events(
     ok, rep = run_pair(spark, sf, "q104_json_parse_at_ingest")
     assert ok, rep
     assert not os.path.exists(old)
+
+
+def test_exit_release_deletes_the_typed_events_directory():
+    """A temp directory held as session state (q104's typed events) is
+    deleted when its process exits; no Spark session is needed."""
+    import subprocess
+    import sys
+
+    code = f"""
+import tempfile, types
+from dask_cuml_spark.plans.cost import session_state
+sc = types.SimpleNamespace(applicationId="app")
+spark = types.SimpleNamespace(sparkContext=sc)
+def land():
+    return tempfile.mkdtemp(prefix="dcs_typed_events_")
+print(session_state(
+    spark, ("typed_events",), {SF_CORRECT!r}, ("events.parquet",), land
+))
+"""
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=PACKAGE.parent,
+        capture_output=True,
+        text=True,
+        check=True,
+    )
+    held = out.stdout.strip()
+    assert os.path.basename(held).startswith("dcs_typed_events_"), held
+    assert not os.path.exists(held)
