@@ -143,6 +143,19 @@ def drop_layout(spark, layout, sf):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
+def stored_buckets(spark, layout, sf) -> dict[str, int]:
+    """{table: stored bucket count} of the layout's bucketed tables, from
+    the catalog (DESCRIBE EXTENDED): the count that ran, which follows
+    the building session's shuffle partitions."""
+    out = {}
+    for t in layout_tables(layout, sf):
+        rows = spark.sql(f"DESCRIBE EXTENDED {t}").collect()
+        n = {r.col_name: r.data_type for r in rows}.get("Num Buckets")
+        if n is not None:
+            out[t] = int(n)
+    return out
+
+
 def bench_consumers(spark, sf, layout, consumers, out, factor=1):
     """One layout, N consumer queries: plain rows first, ONE provision,
     then cold + steady rows per consumer (the amortization evidence —
@@ -167,6 +180,11 @@ def bench_consumers(spark, sf, layout, consumers, out, factor=1):
     w = sum(built[one] for one in leg_layouts)
     disp = "+".join(leg_layouts)
     print(f"{disp} layout write: {w:.1f} s", flush=True)
+    buckets = {}
+    for one in leg_layouts:
+        buckets.update(stored_buckets(spark, one, sf))
+    for t, n in buckets.items():
+        print(f"{t} stored buckets: {n}", flush=True)
     for name, tables, expect_branch, *rest in consumers:
         compare = rest[0] if rest else "exact"
         if expect_branch is not None:
@@ -252,6 +270,9 @@ def bench_consumers(spark, sf, layout, consumers, out, factor=1):
             "cold_first_query_sec": round(t_cold, 3),
             "layout_write_once_sec": round(w, 1),
             "layout_consumers_here": len(consumers),
+            "layout_buckets": {
+                t.rsplit("_", 1)[0]: n for t, n in buckets.items()
+            },
         }
         if overlap is not None:
             out[f"{name}_{suffix}_layout"]["served_topk_id_overlap"] = (
@@ -285,6 +306,9 @@ def main() -> None:
         os.environ["SPARK_GRAFT_SHUFFLE_PARTITIONS"] = str(parts)
         print(f"shuffle partitions (rule): {parts}", flush=True)
     spark = get_spark("bench-layouts")
+    # stored layouts are bucketed at this count (plans/cost.layout_buckets)
+    parts = spark.conf.get("spark.sql.shuffle.partitions")
+    print(f"shuffle partitions (session): {parts}", flush=True)
     if factor >= 300:
         global _GC_BETWEEN_RUNS
         _GC_BETWEEN_RUNS = spark

@@ -40,7 +40,7 @@ def table_path(sf_dir: str, name: str) -> str:
 # DataFrame per table instead of re-creating (and re-analyzing) the scan
 # per query, measured ~17% off repeated-query wall time at sf0.1. Each
 # table is session state (plans/cost.session_state): a source that
-# changes is cached afresh, and the stale entry is unpersisted first.
+# changes is checkpointed afresh, and the stale entry is released first.
 _CACHE_ENABLED = False
 
 
@@ -48,8 +48,8 @@ def enable_table_cache(enabled: bool = True) -> None:
     global _CACHE_ENABLED
     _CACHE_ENABLED = enabled
     if not enabled:
-        # unpersist, not just forget: Spark's CacheManager would keep
-        # answering every later scan of the same paths from the old rows
+        # release, not just stop using: a held entry pins its
+        # checkpoint blocks for the rest of the session
         release_session_state("table")
 
 
@@ -67,9 +67,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # passes win, and those repartition inside the query (q110,
         # q114). At deployment scale the scan has many splits and none
         # of this applies.
-        df = _load_table_uncached(spark, sf_dir, name).cache()
-        df.count()  # materialize once
-        return df
+        # a localCheckpoint, not cache(): see plans/cost.py on what a
+        # cached scan's InMemoryRelation does to other plans
+        return _load_table_uncached(spark, sf_dir, name).localCheckpoint()
 
     return session_state(
         spark, ("table", name), sf_dir, (f"{name}.parquet",), build

@@ -23,9 +23,14 @@ Invariants every layout keeps:
   yields one frame per table in declaration order, and each is written
   before the next is derived; a None frame writes nothing. A full build
   overwrites, a refresh appends. A bucketed table is repartitioned on
-  its bucket column and written ``bucketBy``/``sortBy`` that column; a
-  derivation yields ``Rows`` where the count or the repartition
-  depends on the data (pq's cell count, q02's shuffle-free build).
+  its bucket column and written ``bucketBy``/``sortBy`` that column,
+  in ``plans/cost.layout_buckets`` buckets (the session's shuffle
+  partition count) unless the derivation yields ``Rows`` because the
+  count or the repartition depends on the data (pq's cell count, q02's
+  shuffle-free build). A refresh appends with ``insertInto``, under the
+  bucket spec stored in the catalog: a session whose count differs from
+  the one that built the table still appends correctly (more files per
+  bucket, never a re-bucketed table).
 - A refresh applies only when the primary's manifest is a strict
   subset of the current source files, no old file changed, only
   ``.parquet`` parts (or write markers) were added and every table
@@ -40,8 +45,8 @@ Invariants every layout keeps:
 The tables (tag omitted):
 
 - ``grams``: ``dcs_grams5pos_`` holds (doc_id, pos, _h), one row per
-  word-5-gram occurrence, _h the xxhash64 of the token slice, in 32
-  buckets on _h. q119/q121 dedup it to (doc_id, _h) pairs in-bucket;
+  word-5-gram occurrence, _h the xxhash64 of the token slice, bucketed
+  on _h. q119/q121 dedup it to (doc_id, _h) pairs in-bucket;
   q134, q136 and q148 read the occurrences. A refresh appends the new
   documents' occurrences.
 - ``signs``: ``dcs_signs128s7_`` holds (vec_id, sig), the 128-bit sign
@@ -53,8 +58,8 @@ The tables (tag omitted):
 - ``cms``: ``dcs_cmssketch<d>x<w>_`` holds (r, bucket, c) Count-Min
   counter deltas; readers (q158, q160) SUM per (r, bucket). A refresh
   appends the batch's delta set, at most d×w rows.
-- ``postings``: ``dcs_postings_`` holds (term, _t, doc_id, tf, dl) in
-  16 buckets on _t; ``dcs_poststats_`` holds (n_docs, sum_dl) delta
+- ``postings``: ``dcs_postings_`` holds (term, _t, doc_id, tf, dl)
+  bucketed on _t; ``dcs_poststats_`` holds (n_docs, sum_dl) delta
   rows that q155 SUMs. A refresh appends the batch's postings and one
   delta row.
 - ``pack``: ``dcs_pack<block>_`` holds each document's sequence-packing
@@ -67,12 +72,12 @@ The tables (tag omitted):
   A full build fits the model; a refresh encodes the new vectors with
   the stored model (FAISS add(): never a refit) and leaves it unchanged.
 - ``q112``: ``dcs_q112_3_36_12_shingles_`` holds (doc_id, shingles) of
-  the even doc_ids in 16 buckets on doc_id; ``dcs_q112_3_36_12_bands_``
-  holds their LSH (doc_id, band, band_hash) rows in 16 buckets on
+  the even doc_ids bucketed on doc_id; ``dcs_q112_3_36_12_bands_``
+  holds their LSH (doc_id, band, band_hash) rows bucketed on
   band_hash. Bands derive from shingles: a full build reads the
   written shingles table back, a refresh pins the batch-sized frame.
 - ``q02``: ``dcs_q02_orders_`` and ``dcs_q02_lineitem_`` hold the source
-  rows in 32 buckets on the order key, so q02's wide join runs
+  rows bucketed on the order key, so q02's wide join runs
   Exchange-free. Each source's new rows append to its own table.
 """
 
@@ -98,9 +103,8 @@ from dask_cuml_spark.operators.layout import (
     table_properties,
     write_layout_manifest,
 )
-from dask_cuml_spark.plans.cost import layout_write_shuffles
+from dask_cuml_spark.plans.cost import layout_buckets, layout_write_shuffles
 from dask_cuml_spark.queries import pandas_udfs as P
-from dask_cuml_spark.queries import relational as R
 from dask_cuml_spark.queries import text as T
 from dask_cuml_spark.queries import vector as V
 
@@ -110,8 +114,6 @@ class Table:
     prefix: str
     #: bucketBy/sortBy column; None writes a plain table
     bucket: str | None = None
-    #: None on a bucketed table: its derivation yields Rows with a count
-    n_buckets: int | None = None
 
 
 class Rows(NamedTuple):
@@ -243,7 +245,7 @@ def _q02(spark, sf_dir, src, old):
         # build writes (input tasks × buckets) files; bucketed reads
         # co-group all files of a bucket, so the join plan is the same.
         if old is None and not layout_write_shuffles(sf_dir, name):
-            frame = Rows(frame, R._Q02_BUCKETS, shuffle=False)
+            frame = Rows(frame, layout_buckets(spark), shuffle=False)
         yield frame
 
 
@@ -253,21 +255,21 @@ LAYOUTS: dict[str, Layout] = {
     "q02": Layout(
         ("orders.parquet", "lineitem.parquet"),
         (
-            Table("dcs_q02_orders_", "o_orderkey", R._Q02_BUCKETS),
-            Table("dcs_q02_lineitem_", "l_orderkey", R._Q02_BUCKETS),
+            Table("dcs_q02_orders_", "o_orderkey"),
+            Table("dcs_q02_lineitem_", "l_orderkey"),
         ),
         _q02,
     ),
     "grams": Layout(
         ("documents.parquet",),
-        (Table(f"dcs_grams{T._Q121_N}pos_", "_h", T._Q121_BUCKETS),),
+        (Table(f"dcs_grams{T._Q121_N}pos_", "_h"),),
         _grams,
     ),
     "q112": Layout(
         ("documents.parquet",),
         (
-            Table(f"dcs_{_Q112_STEM}_shingles_", "doc_id", P._Q112_BUCKETS),
-            Table(f"dcs_{_Q112_STEM}_bands_", "band_hash", P._Q112_BUCKETS),
+            Table(f"dcs_{_Q112_STEM}_shingles_", "doc_id"),
+            Table(f"dcs_{_Q112_STEM}_bands_", "band_hash"),
         ),
         _q112,
     ),
@@ -288,7 +290,7 @@ LAYOUTS: dict[str, Layout] = {
     "postings": Layout(
         ("documents.parquet",),
         (
-            Table("dcs_postings_", "_t", T._POSTINGS_BUCKETS),
+            Table("dcs_postings_", "_t"),
             Table("dcs_poststats_"),
         ),
         _postings,
@@ -305,8 +307,8 @@ def layout_tables(name: str, sf_dir: str) -> tuple[str, ...]:
     return tuple(t.prefix + tag for t in lay.tables)
 
 
-def _write(rows, table: str, spec: Table, mode: str) -> None:
-    n, shuffle = spec.n_buckets, True
+def _write(spark, rows, table: str, spec: Table, mode: str) -> None:
+    n, shuffle = layout_buckets(spark), True
     if isinstance(rows, Rows):
         rows, n, shuffle = rows
     if spec.bucket is None:
@@ -315,6 +317,12 @@ def _write(rows, table: str, spec: Table, mode: str) -> None:
     if shuffle:
         # Spark's own hash on the bucket key: one write task per bucket
         rows = rows.repartition(n, F.col(spec.bucket))
+    if mode == "append":
+        # insertInto hashes under the table's stored bucket spec; a
+        # bucketBy append must restate it and fails when this session's
+        # count differs. It matches columns by position.
+        rows.select(*spark.table(table).columns).write.insertInto(table)
+        return
     (
         rows.write.mode(mode)
         .bucketBy(n, spec.bucket)
@@ -323,13 +331,13 @@ def _write(rows, table: str, spec: Table, mode: str) -> None:
     )
 
 
-def _write_all(lay: Layout, frames, tables, mode: str) -> None:
+def _write_all(spark, lay: Layout, frames, tables, mode: str) -> None:
     # zip pulls each frame after the previous table is written, and
     # pulls once more after the last: a derivation's code after its
     # last yield runs with every table written
     for rows, table, spec in zip(frames, tables, lay.tables):
         if rows is not None:
-            _write(rows, table, spec, mode)
+            _write(spark, rows, table, spec, mode)
 
 
 def _read_appended(spark, sf_dir: str, source: str, new_files):
@@ -356,7 +364,7 @@ def build_layout(spark: SparkSession, sf_dir: str, name: str) -> float:
         for s in lay.sources
     )
     frames = lay.derive(spark, sf_dir, src, None)
-    _write_all(lay, frames, tables, "overwrite")
+    _write_all(spark, lay, frames, tables, "overwrite")
     write_layout_manifest(spark, sf_dir, lay.sources, tables[0])
     return time.perf_counter() - t0
 
@@ -373,7 +381,8 @@ def refresh_layout(
         src = tuple(
             _read_appended(spark_, sf_dir, s, new_files) for s in lay.sources
         )
-        _write_all(lay, lay.derive(spark_, sf_dir, src, old), old, "append")
+        frames = lay.derive(spark_, sf_dir, src, old)
+        _write_all(spark_, lay, frames, old, "append")
 
     return incremental_refresh(
         spark,

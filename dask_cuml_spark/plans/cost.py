@@ -12,10 +12,14 @@ themselves. A gate measures one of:
 - source: ``source_size_bytes(sf_dir, table)``, the bytes of the
   table's source parquet files. A gate asked before the query's frames
   exist reads file bytes because they do not move with session cache
-  state: once a table is cached, Catalyst substitutes the cached
-  InMemoryRelation into every plan over the same source, and its
+  state. A ``cache()``d scan would make Catalyst substitute its
+  InMemoryRelation into every plan over the same source, with
   uncompressed statistics (customer at 100×: 78 MB cached, 29 MB on
-  disk) would flip a plan-fed gate on whichever query cached it first.
+  disk) that flip a plan-fed gate on whichever query cached it first,
+  and AQE reuses no exchange above an InMemoryRelation scan (q124's
+  self-join ran 9 jobs cached, 6 over parquet). The session table
+  cache (``io.load_table``) therefore holds a localCheckpoint, which
+  no other plan picks up and which keeps the parquet estimate.
 
 The gates (name, threshold constant; what it measures; the side; the
 measurement that placed the threshold):
@@ -60,6 +64,15 @@ layout_write_shuffles, LAYOUT_SHUFFLE_MAX_BYTES
     source of the layout's table; repartition at <= 4 GiB, else write
     shuffle-free. A 600 M-row lineitem write ran out of disk staging
     the repartition's shuffle copy.
+layout_buckets, spark.sql.shuffle.partitions
+    the session's shuffle partition count (the cores locally, the
+    suggest_shuffle_partitions rule at big factors); every stored layout
+    table whose count does not follow its data is bucketed at it. The
+    ingest_serve workload on 4 cores, grams at 32 -> 4 buckets:
+    172.3/166.5/172.4 -> 233.4/238.1/227.3 queries/min, spark.tasks
+    31.8 -> 10.4 per op, grams refresh 0.477 -> 0.239 s; every layout
+    at 4 (ten pairs, medians): 170.5 -> 234.0 queries/min. One bucket
+    ties with 4 at that scale.
 state_partitions, STATE_SMALL_MAX_BYTES
     source of the replayed table; 4 state partitions below 64 MB, else
     8. q93 at sf0.1: 8 -> 2.75 s, 4 -> 2.14 s; 100x: 10 M events in
@@ -199,6 +212,14 @@ def layout_write_shuffles(sf_dir: str, table: str) -> bool:
     bucket key first (one file per bucket) or writes shuffle-free
     (input tasks × buckets files; the bucketed join plan is the same)."""
     return source_size_bytes(sf_dir, table) <= LAYOUT_SHUFFLE_MAX_BYTES
+
+
+def layout_buckets(spark) -> int:
+    """Bucket count of a stored layout table written in this session:
+    one bucket per shuffle partition, so a bucketed scan runs as many
+    tasks as the session's shuffles and an ingest batch appends one file
+    per partition."""
+    return int(spark.conf.get("spark.sql.shuffle.partitions"))
 
 
 def state_partitions(sf_dir: str, table: str = "events") -> int:

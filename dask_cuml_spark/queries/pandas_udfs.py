@@ -700,7 +700,6 @@ def q83_logreg_predict(spark: SparkSession, sf_dir: str) -> DataFrame:
 # built under different LSH params must never be silently served.
 # ---------------------------------------------------------------------------
 _Q112_PARAMS = dict(n=3, num_hashes=36, bands=12, threshold=0.5)
-_Q112_BUCKETS = 16
 
 
 def _q112_index_tables(sf_dir: str) -> tuple[str, str]:

@@ -115,7 +115,6 @@ def q01_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 # catalog has the layout for its sf_dir (layouts.py 'q02' creates
 # it); correctness gates never have it, so the oracle path is
 # unchanged.
-_Q02_BUCKETS = 32
 
 
 def _q02_bucket_tables(sf_dir: str) -> tuple[str, str]:

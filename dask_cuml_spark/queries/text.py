@@ -26,7 +26,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from dask_cuml_spark.functions.vector import array_lit, rows_lit, sql_lit
+from dask_cuml_spark.functions.vector import array_lit, sql_lit
 from dask_cuml_spark.io import load_table
 from dask_cuml_spark.registry import register
 
@@ -1238,16 +1238,18 @@ def q119_contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 # inverted-index layout every gram consumer (boilerplate,
 # contamination, near-dup) can share — and BOTH the gram construction
 # and the wide exchange disappear from query time. The 'grams' layout
-# (layouts.py) stores it (bucketBy(_h), one file per bucket so the
-# scan reports hash distribution AND sort order); q121 picks the
-# catalog-gated branch whenever the layout exists for its sf_dir.
+# (layouts.py) stores it bucketBy(_h) in one bucket per shuffle
+# partition (plans/cost.layout_buckets), so the scan reports hash
+# distribution and runs as many tasks as the session's shuffles: at
+# 32 buckets on 4 cores, ingest_serve ran 31.8 tasks per op and q119's
+# read took 0.33 s; at 4 buckets, 10.4 tasks and 0.14 s. q121 picks
+# the catalog-gated branch whenever the layout exists for its sf_dir.
 # Correctness gates run fresh sessions without the layout → oracle
 # path untouched.
 # ---------------------------------------------------------------------------
 _Q121_N = 5  # word n-gram width
 _Q121_DF = 2  # a gram in ≥ this many docs is "common" (boilerplate)
 _Q121_FLAG = 0.5  # flag docs whose common-gram fraction ≥ this
-_Q121_BUCKETS = 32
 
 
 def _q121_hashed_grams(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3575,13 +3577,14 @@ def _cms_x(term: Column) -> Column:
     return F.pmod(code * F.lit(_Q158_SPREAD), F.lit(_Q158_P))
 
 
-def _cms_bucket(x: Column) -> Column:
-    """Sketch row r's counter for code x: ((a·x + b) mod P) mod w over
-    the (r, a, b) columns of _cms_rows."""
-    return F.pmod(
-        F.pmod(F.col("a") * x + F.col("b"), F.lit(_Q158_P)),
-        F.lit(_Q158_W),
-    )
+def _cms_bucket(
+    x: Column, a: Column | None = None, b: Column | None = None
+) -> Column:
+    """Sketch row r's counter for code x: ((a·x + b) mod P) mod w, by
+    default over the (r, a, b) columns of _cms_rows."""
+    a = F.col("a") if a is None else a
+    b = F.col("b") if b is None else b
+    return F.pmod(F.pmod(a * x + b, F.lit(_Q158_P)), F.lit(_Q158_W))
 
 
 @register(
@@ -3790,7 +3793,6 @@ def q159_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 # proves the layout. The stats sidecar is the layout's second table
 # (layouts.py), so a refresh appends one delta row to it.
 # ---------------------------------------------------------------------------
-_POSTINGS_BUCKETS = 16
 
 
 def _postings_tables(sf_dir: str) -> tuple[str, str]:
@@ -3915,13 +3917,13 @@ def _bm25_from_postings(
 #
 # q160 asks the sketch for the estimated frequencies of a fixed
 # candidate-term set (q155's query terms + two more). Spark shape:
-# the d rows per candidate term are one LocalRelation with its bucket
-# folded in-plan; the delta rows inner-join it (broadcast), one zero
-# row per (term, r) keeps untouched counters at 0, and ONE groupBy
-# term takes the least over r of the per-r sums. Catalog-gated: fresh
-# sessions feed freshly counted deltas (one delta set — the sum is the
-# identity) into the same aggregate, so one full-value oracle proves
-# both branches.
+# the d rows per candidate term are one array literal; each delta row
+# keeps the candidates whose (r, bucket) it counts (the bucket folded
+# in-plan, no join, so no broadcast job), one zero row per (term, r)
+# keeps untouched counters at 0, and ONE groupBy term takes the least
+# over r of the per-r sums. Catalog-gated: fresh sessions feed freshly
+# counted deltas (one delta set — the sum is the identity) into the
+# same aggregate, so one full-value oracle proves both branches.
 # ---------------------------------------------------------------------------
 _Q160_TERMS = ("vector", "fast", "dup", "join", "the")
 _CMS_PREFIX = f"dcs_cmssketch{_Q158_D}x{_Q158_W}_"
@@ -3995,14 +3997,24 @@ def q160_cms_point_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         if spark.catalog.tableExists(tbl)
         else _cms_counters(spark, sf_dir)
     )
-    rows = [
-        (t, r, a, b) for r, (a, b) in enumerate(_Q158_AB) for t in _Q160_TERMS
-    ]
-    cand = rows_lit(spark, rows, "term string, r int, a long, b long").select(
-        "term", "r", _cms_bucket(_cms_x(F.col("term"))).alias("bucket")
+    cand = F.expr(
+        sql_lit(
+            [
+                {"term": t, "r": r, "a": a, "b": b}
+                for r, (a, b) in enumerate(_Q158_AB)
+                for t in _Q160_TERMS
+            ]
+        )
     )
-    hits = deltas.join(F.broadcast(cand), ["r", "bucket"])
-    zeros = cand.select("term", "r", F.lit(0).cast("long").alias("c"))
+
+    def counts(s: Column) -> Column:
+        bucket = _cms_bucket(_cms_x(s["term"]), s["a"], s["b"])
+        return (s["r"] == F.col("r")) & (bucket == F.col("bucket"))
+
+    hits = deltas.select("c", F.inline(F.filter(cand, counts)))
+    zeros = spark.range(1).select(F.inline(cand)).select(
+        "term", "r", F.lit(0).cast("long").alias("c")
+    )
     per_r = [
         F.sum(F.when(F.col("r") == r, F.col("c"))) for r in range(_Q158_D)
     ]

@@ -119,3 +119,22 @@ def test_gate_sides_on_the_fixtures(spark, sf):
         plan[f"centers_strategy k={k}"] = cost.centers_strategy(e, k)
     assert plan == {**PLAN_SIDES_ALL, **PLAN_SIDES[sf]}
     assert max_job_id(spark) == j0
+
+
+def test_layout_buckets_follow_the_session_shuffle_partitions(spark):
+    """Stored layouts are bucketed at the session's shuffle partition
+    count (the cores locally, the data-sized rule at big factors), read
+    from the conf: no job, no knob of its own."""
+    from dask_cuml_spark.benchlib import max_job_id
+    from dask_cuml_spark.plans import cost
+
+    key = "spark.sql.shuffle.partitions"
+    saved = spark.conf.get(key)
+    j0 = max_job_id(spark)
+    assert cost.layout_buckets(spark) == int(saved) == 8
+    try:
+        spark.conf.set(key, "128")
+        assert cost.layout_buckets(spark) == 128
+    finally:
+        spark.conf.set(key, saved)
+    assert max_job_id(spark) == j0

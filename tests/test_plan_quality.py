@@ -409,6 +409,39 @@ def test_q158_cms_broadcast_counters_plan(spark):
     assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
 
 
+def test_q160_candidates_ride_no_broadcast(spark):
+    """q160 matches its (term, r, bucket) candidates in-plan, from an
+    array literal filtered per delta row: a broadcast LocalTableScan
+    runs one job per execution only to ship 20 rows."""
+    plan = _plan(spark, "q160_cms_point_query")
+    assert "BroadcastExchange" not in plan, plan[:2000]
+    assert "LocalTableScan" not in plan, plan[:2000]
+
+
+def test_q124_reuses_its_exchange_under_the_table_cache(spark):
+    """With the session table cache on, q124's crossJoin of the
+    distances with their threshold (both over the centroid subtree)
+    reuses one exchange. A cache()d scan's InMemoryRelation blocks that
+    reuse, and the query then runs 9 jobs."""
+    from dask_cuml_spark.benchlib import max_job_id
+    from dask_cuml_spark.io import enable_table_cache, load_table
+    from dask_cuml_spark.plans.cost import scoped_caches
+
+    enable_table_cache(True)
+    try:
+        load_table(spark, SF, "embeddings")
+        with scoped_caches():
+            df = QUERIES["q124_embedding_outliers"](spark, SF)
+            j0 = max_job_id(spark)
+            df.collect()
+            jobs = max_job_id(spark) - j0
+            plan = df._jdf.queryExecution().executedPlan().toString()
+    finally:
+        enable_table_cache(False)
+    assert jobs <= 6, jobs
+    assert "ReusedExchange" in plan, plan[:3000]
+
+
 def test_q162_rrf_fusion_plan(spark):
     """The RRF fusion must not JOIN the legs: each leg ends in a
     TakeOrderedAndProject (already one partition), the two ≤50-row

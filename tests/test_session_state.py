@@ -107,8 +107,11 @@ def test_cached_table_follows_an_in_session_append(spark, tmp_path):
 
 
 def test_disabling_the_table_cache_unpersists_it(spark, tmp_path):
-    """Spark's CacheManager answers any later scan of a cached root path
-    from the cached rows, so forgetting the cached frame is not enough."""
+    """After the table cache is disabled, a plain scan of the same root
+    path reads the parquet. A cache()d entry would break this: Spark's
+    CacheManager answers every later scan of a cached path from its
+    InMemoryRelation, and that relation also blocks AQE exchange reuse.
+    The entry is a localCheckpoint, which no other plan picks up."""
     from dask_cuml_spark.io import enable_table_cache, load_table
 
     sf = _part_dir_corpus(tmp_path, "embeddings")
