@@ -7,7 +7,8 @@ Pass 1: range-partition on the order key (RangePartitioner sampling is
 deterministic — seeds derive from partition index) and rank locally
 inside each range partition. Pass 2: count rows per partition (a
 partition-count-sized driver collect — model state, not data), turn the
-counts into cumulative offsets, and broadcast-join them back:
+counts into cumulative offsets, and index them per row as one array
+literal (no join, so no broadcast job per execution):
 
     global row_number = local row_number + offset(partition)
 
@@ -22,8 +23,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
-
-from dask_cuml_spark.functions.vector import rows_lit
 
 
 def global_row_number(
@@ -53,16 +52,19 @@ def global_row_number(
         local.groupBy("_pid").agg(F.count(F.lit(1)).alias("_cnt")).collect(),
         key=lambda r: r["_pid"],
     )
-    offsets, acc = [], 0
+    # offsets[pid] = rows in the partitions before pid, as one bigint
+    # array literal indexed in-plan: no join, so no broadcast job
+    offsets, acc = {}, 0
     for r in counts:
-        offsets.append((r["_pid"], acc))
+        offsets[r["_pid"]] = acc
         acc += r["_cnt"]
-    off_df = rows_lit(spark, offsets, "_pid int, _off long")
-    out = (
-        local.join(F.broadcast(off_df), "_pid")
-        .withColumn(rn_col, (F.col("_lrn") + F.col("_off")).cast("long"))
-        .drop("_pid", "_lrn", "_off")
+    arr = ", ".join(
+        f"{offsets.get(p, 0)}L" for p in range(max(offsets, default=0) + 1)
     )
+    out = local.withColumn(
+        rn_col,
+        F.expr(f"CAST(_lrn + element_at(array({arr}), _pid + 1) AS BIGINT)"),
+    ).drop("_pid", "_lrn")
     return out, acc
 
 

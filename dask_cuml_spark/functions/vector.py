@@ -11,6 +11,21 @@ are oracle-safe without rounding.
 No Python UDFs here: at 100 TB these expressions run inside whole-stage
 codegen; an equivalent pandas_udf would pay Arrow serialization per batch.
 
+Plans are built as SQL text. PySpark composes a ``Column`` tree with
+one py4j round trip or more per node (operator, literal, lambda), so a
+vector helper built from Column calls costs ~167 round trips; one
+``F.expr`` / ``selectExpr`` / string ``filter`` call hands the JVM the
+whole expression as text and costs ~3. The helpers below therefore take
+SQL expression text (column names or larger expressions) and build one
+expression; l2_sq_sql returns the text for callers that splice it into
+a larger expression. Measured per construction: l2_sq 167 -> 3,
+q121 263 -> 68, q119 155 -> 62, q160 579 -> 52, q145's serving read
+690 -> 110, q149 914 -> 161, q124 482 -> 93 (tests/
+test_construct_budget.py holds the ceilings). Text keeps the tree the
+Column form built: a double literal is ``0D`` (``0.0`` parses as a
+decimal), an integer beyond int range parses as bigint, and sizes are
+``array_size``.
+
 Driver-side values enter a plan only through the literal helpers below:
 sql_lit/array_lit/matrix_lit for one value, rows_lit for a small table
 of rows (a LocalRelation — executing it launches no job).
@@ -26,41 +41,43 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 
-def _to_col(c: Column | str) -> Column:
-    return F.col(c) if isinstance(c, str) else c
+def l2_sq_sql(a: str, b: str) -> str:
+    """Double-precision squared L2 distance of two array expressions
+    (``a`` and ``b`` are SQL text), as SQL text."""
+    return (
+        f"aggregate(zip_with({a}, {b}, "
+        "(x, y) -> (CAST(x AS DOUBLE) - CAST(y AS DOUBLE)) "
+        "* (CAST(x AS DOUBLE) - CAST(y AS DOUBLE))), "
+        "0D, (acc, v) -> acc + v)"
+    )
 
 
-def dot(a: Column | str, b: Column | str) -> Column:
+def dot(a: str, b: str) -> Column:
     """Double-precision dot product of two array columns."""
-    prods = F.zip_with(
-        _to_col(a), _to_col(b), lambda x, y: x.cast("double") * y.cast("double")
+    return F.expr(
+        f"aggregate(zip_with({a}, {b}, "
+        "(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
+        "0D, (acc, v) -> acc + v)"
     )
-    return F.aggregate(prods, F.lit(0.0), lambda acc, v: acc + v)
 
 
-def l2_sq(a: Column | str, b: Column | str) -> Column:
+def l2_sq(a: str, b: str) -> Column:
     """Double-precision squared L2 distance."""
-    diffs = F.zip_with(
-        _to_col(a),
-        _to_col(b),
-        lambda x, y: (x.cast("double") - y.cast("double"))
-        * (x.cast("double") - y.cast("double")),
-    )
-    return F.aggregate(diffs, F.lit(0.0), lambda acc, v: acc + v)
+    return F.expr(l2_sq_sql(a, b))
 
 
-def l2(a: Column | str, b: Column | str) -> Column:
+def l2(a: str, b: str) -> Column:
     """Euclidean distance."""
-    return F.sqrt(l2_sq(a, b))
+    return F.expr(f"sqrt({l2_sq_sql(a, b)})")
 
 
-def cosine_unit(a: Column | str, b: Column | str) -> Column:
+def cosine_unit(a: str, b: str) -> Column:
     """Cosine similarity for unit-norm vectors (≡ dot product —
     fixtures are exactly unit-norm, FIXTURES.md)."""
     return dot(a, b)
 
 
-def norm_sq(a: Column | str) -> Column:
+def norm_sq(a: str) -> Column:
     """Squared L2 norm of an array column."""
     return dot(a, a)
 

@@ -41,6 +41,17 @@ Invariants every layout keeps:
 - ``ensure_layouts`` drops same-prefix tables under any other tag after
   the refresh attempt, and a call on a current layout reads only the
   catalog (SHOW TABLES, SHOW TBLPROPERTIES, tableExists): no Spark job.
+- Layouts are independent: each owns its tables (no table prefix
+  repeats or starts another, asserted at import as ``_PREFIXES``) and
+  no derivation reads another layout's tables. ``ensure_layouts``
+  therefore runs in two phases. The refresh phase runs one thread per
+  requested layout (the completeness check, the append-only refresh
+  and that layout's stale-GC), each thread carrying the caller's job
+  group and local properties; a refresh is Θ(batch), so its time is
+  driver and scheduling latency that overlaps. A failure is raised
+  after every thread has finished. The build phase then runs each
+  needed full build one at a time: a build is Θ(corpus), and builds
+  side by side would multiply its peak memory.
 
 The tables (tag omitted):
 
@@ -83,7 +94,9 @@ The tables (tag omitted):
 
 from __future__ import annotations
 
+import functools
 import os
+import threading
 import time
 from collections.abc import Callable, Iterable
 from dataclasses import dataclass
@@ -91,6 +104,7 @@ from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from dask_cuml_spark.functions.vector import rows_lit, sql_lit
 from dask_cuml_spark.io import footer_schema, load_table
@@ -298,6 +312,16 @@ LAYOUTS: dict[str, Layout] = {
     "cms": Layout(("documents.parquet",), (Table(T._CMS_PREFIX),), _cms),
 }
 
+#: every stored table's prefix. ensure_layouts refreshes layouts
+#: concurrently, so each layout must own its tables: the refresh
+#: detector and the stale-GC match catalog names by prefix, so no
+#: prefix may repeat or start another one
+_PREFIXES = [t.prefix for lay in LAYOUTS.values() for t in lay.tables]
+assert not any(
+    a.startswith(b) for i, a in enumerate(_PREFIXES)
+    for j, b in enumerate(_PREFIXES) if i != j
+), _PREFIXES
+
 
 def layout_tables(name: str, sf_dir: str) -> tuple[str, ...]:
     """The catalog names of layout ``name`` over ``sf_dir``'s current
@@ -394,6 +418,26 @@ def refresh_layout(
     )
 
 
+def _refresh_current(spark: SparkSession, sf_dir: str, name: str):
+    """Refresh phase of one layout: append where the sources only grew,
+    then drop its stale tags. Returns write seconds (0.0 when already
+    current), or None when the layout needs a full build."""
+    tables = layout_tables(name, sf_dir)
+
+    def complete():
+        return all(spark.catalog.tableExists(t) for t in tables)
+
+    # the refresh appends to the previous-tag tables and renames them,
+    # so it runs before the stale-GC would drop them
+    inc = None if complete() else refresh_layout(spark, sf_dir, name)
+    tag = tables[0].rsplit("_", 1)[1]
+    for t in LAYOUTS[name].tables:
+        drop_stale_layouts(spark, t.prefix, tag)
+    # the refresh's 0.0 attests only the primary table: a partial
+    # multi-table layout (a dropped sidecar) is rebuilt in full
+    return (inc or 0.0) if complete() else None
+
+
 def ensure_layouts(
     spark: SparkSession,
     sf_dir: str,
@@ -401,25 +445,41 @@ def ensure_layouts(
 ) -> dict[str, float]:
     """Bring the named layouts up to date for ``sf_dir``: refresh
     incrementally where the sources only grew, else build in full, and
-    drop stale tags. Returns {layout: wall seconds spent writing}, 0.0
-    for a layout already current."""
-    out: dict[str, float] = {}
-    for name in layouts:
-        tables = layout_tables(name, sf_dir)
+    drop stale tags. Returns {layout: wall seconds spent writing}, in
+    the requested order, 0.0 for a layout already current. Refreshes
+    run one thread per layout, full builds one at a time afterwards
+    (see the module docstring)."""
+    names = tuple(dict.fromkeys(layouts))
+    done: dict[str, float | None] = {}
+    failed: dict[str, BaseException] = {}
 
-        def complete():
-            return all(spark.catalog.tableExists(t) for t in tables)
+    def refresh(name: str) -> None:
+        try:
+            done[name] = _refresh_current(spark, sf_dir, name)
+        except BaseException as exc:  # re-raised after every join
+            failed[name] = exc
 
-        # the refresh appends to the previous-tag tables and renames
-        # them, so it runs before the stale-GC would drop them
-        inc = None if complete() else refresh_layout(spark, sf_dir, name)
-        tag = tables[0].rsplit("_", 1)[1]
-        for t in LAYOUTS[name].tables:
-            drop_stale_layouts(spark, t.prefix, tag)
-        # the refresh's 0.0 attests only the primary table: a partial
-        # multi-table layout (a dropped sidecar) is rebuilt here
-        if complete():
-            out[name] = inc or 0.0
-        else:
-            out[name] = build_layout(spark, sf_dir, name)
-    return out
+    # one wrapper per thread: each holds its own copy of the caller's
+    # local properties, which the thread's queries then modify
+    threads = [
+        threading.Thread(
+            target=inheritable_thread_target(spark)(
+                functools.partial(refresh, n)
+            ),
+            name=f"ensure_layouts-{n}",
+        )
+        for n in names
+    ]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    for name in names:
+        if name in failed:
+            raise failed[name]
+    # a full build is Θ(corpus): running builds side by side would
+    # multiply the peak memory a build needs
+    return {
+        n: build_layout(spark, sf_dir, n) if done[n] is None else done[n]
+        for n in names
+    }

@@ -147,20 +147,20 @@ def hamming_candidates(
     path would rank null ham first (Spark nulls-first asc) while the
     kernel's np.stack would crash.
     """
-    sigs = sigs.filter(F.col("sig").isNotNull())
+    sigs = sigs.filter("sig IS NOT NULL")
     if strategy == "expr":
         qlit = sql_lit(
             [{"q": int(qid), "w": [int(w) for w in words]} for qid, words in queries]
         )
-        per_q = F.expr(
+        per_q = (
             f"explode(transform({qlit}, s -> named_struct("
             "'query_id', CAST(s.q AS BIGINT), "
             "'ham', CAST(aggregate(zip_with(sig, s.w, "
             "(a, b) -> bit_count(a ^ b)), 0, (acc, x) -> acc + x) AS BIGINT))))"
         )
-        return sigs.select(
-            F.col("vec_id").alias("neighbor_id"), per_q.alias("s")
-        ).select("neighbor_id", F.col("s.query_id"), F.col("s.ham"))
+        return sigs.selectExpr(
+            "vec_id AS neighbor_id", f"{per_q} AS s"
+        ).selectExpr("neighbor_id", "s.query_id", "s.ham")
 
     qw = np.array([words for _qid, words in queries], dtype=np.int64)
     qids = np.array([qid for qid, _w in queries], dtype=np.int64)

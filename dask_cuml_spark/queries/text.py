@@ -31,10 +31,15 @@ from dask_cuml_spark.io import load_table
 from dask_cuml_spark.registry import register
 
 
-def tokens(col: str = "text"):
-    """Whitespace tokenizer as a Spark expression (fixtures are
-    single-space separated; FIXTURES.md)."""
-    return F.split(F.col(col), " ")
+def tokens_sql(col: str = "text") -> str:
+    """Whitespace tokenizer as SQL text (fixtures are single-space
+    separated; FIXTURES.md)."""
+    return f"split({col}, ' ')"
+
+
+def tokens(col: str = "text") -> Column:
+    """The whitespace tokenizer as a Spark expression."""
+    return F.expr(tokens_sql(col))
 
 
 # ---------------------------------------------------------------------------
@@ -1198,14 +1203,14 @@ def q119_contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the SAME gram frame q121 consumes: distinct-per-doc hashed
     # 5-gram pairs, from the positioned bucketed layout when provisioned
     grams = _gram_pairs(spark, sf_dir)
-    eval_g = grams.filter(F.col("doc_id") % 97 == 0).select("_h").distinct()
+    eval_g = grams.filter("doc_id % 97 = 0").selectExpr("_h").distinct()
     return (
-        grams.filter(F.col("doc_id") % 97 != 0)
+        grams.filter("doc_id % 97 != 0")
         .join(eval_g, "_h")
         .groupBy("doc_id")
         # grams are DISTINCT per doc (array_distinct before the
         # explode), so a plain count is COUNT(DISTINCT shared grams)
-        .agg(F.count(F.lit(1)).alias("n_shared"))
+        .agg(F.expr("count(1) AS n_shared"))
         # no presentation orderBy (r13): the driver hash is
         # order-insensitive and a global sort of the per-doc output is
         # a pure rangepartitioning exchange — plan-pinned in
@@ -1250,6 +1255,10 @@ def q119_contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 _Q121_N = 5  # word n-gram width
 _Q121_DF = 2  # a gram in ≥ this many docs is "common" (boilerplate)
 _Q121_FLAG = 0.5  # flag docs whose common-gram fraction ≥ this
+#: the start offset i of every L-gram of ``toks`` (one, at 0, for a
+#: document shorter than L) and the xxhash64 of the gram's token slice
+_GRAM_STARTS = f"sequence(0, greatest(array_size(toks) - {_Q121_N}, 0))"
+_GRAM_HASH = f"xxhash64(slice(toks, i + 1, {_Q121_N}))"
 
 
 def _q121_hashed_grams(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1258,17 +1267,13 @@ def _q121_hashed_grams(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = (
         load_table(spark, sf_dir, "documents")
         .repartition(spark.sparkContext.defaultParallelism)
-        .select("doc_id", tokens().alias("toks"))
+        .selectExpr("doc_id", f"{tokens_sql()} AS toks")
     )
-    toks = F.col("toks")
-    n = F.array_size(toks)
-    grams = F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(0), F.greatest(n - _Q121_N, F.lit(0))),
-            lambda i: F.xxhash64(F.slice(toks, i + 1, _Q121_N)),
-        )
+    return d.selectExpr(
+        "doc_id",
+        f"explode(array_distinct(transform({_GRAM_STARTS}, "
+        f"i -> {_GRAM_HASH}))) AS _h",
     )
-    return d.select("doc_id", F.explode(grams).alias("_h"))
 
 
 def _positioned_grams(
@@ -1283,21 +1288,14 @@ def _positioned_grams(
     ONLY the appended files' docs through the same construction)."""
     if d is None:
         d = load_table(spark, sf_dir, "documents")
-    d = d.repartition(spark.sparkContext.defaultParallelism).select(
-        "doc_id", tokens().alias("toks")
+    d = d.repartition(spark.sparkContext.defaultParallelism).selectExpr(
+        "doc_id", f"{tokens_sql()} AS toks"
     )
-    toks = F.col("toks")
-    n = F.array_size(toks)
-    grams = F.transform(
-        F.sequence(F.lit(0), F.greatest(n - _Q121_N, F.lit(0))),
-        lambda i: F.struct(
-            i.alias("pos"),
-            F.xxhash64(F.slice(toks, i + 1, _Q121_N)).alias("_h"),
-        ),
-    )
-    return d.select("doc_id", F.explode(grams).alias("g")).select(
-        "doc_id", F.col("g.pos").alias("pos"), F.col("g._h").alias("_h")
-    )
+    return d.selectExpr(
+        "doc_id",
+        f"explode(transform({_GRAM_STARTS}, "
+        f"i -> named_struct('pos', i, '_h', {_GRAM_HASH}))) AS g",
+    ).selectExpr("doc_id", "g.pos AS pos", "g._h AS _h")
 
 
 def _gram_occurrences(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1337,8 +1335,8 @@ def _gram_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         return (
             spark.table(tbl)
             .groupBy("_h", "doc_id")
-            .agg(F.lit(1))
-            .select("doc_id", "_h")
+            .agg(F.expr("1"))
+            .selectExpr("doc_id", "_h")
         )
     return _q121_hashed_grams(spark, sf_dir)
 
@@ -1384,20 +1382,20 @@ def q121_boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (doc_id,_h) exchange both vanish — the window's hash requirement
     # is satisfied by the bucketing, its sort by the bucket sortBy.
     hashed = _gram_pairs(spark, sf_dir)
-    with_df = hashed.withColumn(
-        "df", F.count(F.lit(1)).over(Window.partitionBy("_h"))
+    with_df = hashed.selectExpr(
+        "*", "count(1) OVER (PARTITION BY _h) AS df"
     )
     per_doc = with_df.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_grams"),
-        F.sum((F.col("df") >= _Q121_DF).cast("long")).alias("n_common"),
+        F.expr("count(1) AS n_grams"),
+        F.expr(f"sum(CAST(df >= {_Q121_DF} AS BIGINT)) AS n_common"),
     )
-    frac = F.round(F.col("n_common").cast("double") / F.col("n_grams"), 6)
-    return per_doc.select(
+    frac = "round(CAST(n_common AS DOUBLE) / n_grams, 6)"
+    return per_doc.selectExpr(
         "doc_id",
         "n_grams",
         "n_common",
-        frac.alias("boilerplate_frac"),
-        (frac >= _Q121_FLAG).cast("int").alias("flagged"),
+        f"{frac} AS boilerplate_frac",
+        f"CAST({frac} >= {sql_lit(_Q121_FLAG)} AS INT) AS flagged",
     )
 
 
@@ -3091,12 +3089,11 @@ def _q149_mask(ev_keys: DataFrame) -> DataFrame:
     is present and the sorted word list is the dense array; positions
     lie in [0, m), so no other word exists for any corpus. bit_or is
     idempotent, so duplicate positions need no distinct."""
-    bits = ev_keys.select(F.explode(F.array("p1", "p2")).alias("p")).select(
-        F.expr("shiftright(p, 6) AS w"),
-        F.expr("shiftleft(1L, int(p & 63)) AS b"),
+    bits = ev_keys.selectExpr("explode(array(p1, p2)) AS p").selectExpr(
+        "shiftright(p, 6) AS w", "shiftleft(1L, int(p & 63)) AS b"
     )
-    zeros = ev_keys.sparkSession.range(_Q149_M >> 6).select(
-        F.col("id").alias("w"), F.lit(0).cast("bigint").alias("b")
+    zeros = ev_keys.sparkSession.range(_Q149_M >> 6).selectExpr(
+        "id AS w", "CAST(0 AS BIGINT) AS b"
     )
     return (
         bits.unionByName(zeros)
@@ -3111,9 +3108,9 @@ def _q149_mask(ev_keys: DataFrame) -> DataFrame:
     )
 
 
-def _q149_bit_set(p: str):
-    """Boolean column: bit ``p`` (∈ [0, m)) set in the ``_mask`` words."""
-    return F.expr(
+def _q149_bit_set(p: str) -> str:
+    """SQL text: bit ``p`` (∈ [0, m)) set in the ``_mask`` words."""
+    return (
         f"getbit(element_at(_mask, int(shiftright({p}, 6)) + 1), "
         f"int({p} & 63)) = 1"
     )
@@ -3127,44 +3124,36 @@ def _q149_keyed(d: DataFrame, key_mode: str) -> DataFrame:
     its 5-element slice. key_mode 'xxhash64' keys each gram by
     xxhash64 of its token slice instead, with no per-char work."""
     if key_mode == "portable":
-        toks = F.transform(
-            tokens(),
-            lambda t: F.aggregate(
-                F.transform(
-                    F.split(t, ""), lambda c: F.ascii(c).cast("bigint")
-                ),
-                F.lit(0).cast("bigint"),
-                lambda a, c: (a * 31 + c) % _Q144_MOD,
-            ),
+        toks = (
+            f"transform({tokens_sql()}, t -> aggregate("
+            "transform(split(t, ''), c -> CAST(ascii(c) AS BIGINT)), "
+            f"CAST(0 AS BIGINT), (a, c) -> (a * 31 + c) % {_Q144_MOD}))"
         )
 
         def key(s):
-            return F.aggregate(
-                s,
-                F.lit(0).cast("bigint"),
-                lambda a, t: (a * 10007 + t) % _Q149_GMOD,
+            return (
+                f"aggregate({s}, CAST(0 AS BIGINT), "
+                f"(a, t) -> (a * 10007 + t) % {_Q149_GMOD})"
             )
     elif key_mode == "xxhash64":
-        toks, key = tokens(), F.xxhash64
+        toks = tokens_sql()
+
+        def key(s):
+            return f"xxhash64({s})"
     else:
         raise ValueError(f"unknown key_mode: {key_mode}")
-    seq = F.sequence(
-        F.lit(0), F.greatest(F.array_size("toks") - _Q121_N, F.lit(0))
-    )
-    gk = F.col("gk")
     # pmod: xxhash64 keys can be negative; portable keys are ≥ 0, where
     # pmod equals the oracle's %
-    p1 = F.pmod(gk, F.lit(_Q149_M))
-    return d.select("doc_id", toks.alias("toks")).select(
+    p1 = f"pmod(gk, {_Q149_M})"
+    return d.selectExpr("doc_id", f"{toks} AS toks").selectExpr(
         "doc_id",
-        F.explode(
-            F.transform(seq, lambda i: key(F.slice("toks", i + 1, _Q121_N)))
-        ).alias("gk"),
-    ).select(
+        f"explode(transform({_GRAM_STARTS}, "
+        f"i -> {key(f'slice(toks, i + 1, {_Q121_N})')})) AS gk",
+    ).selectExpr(
         "doc_id",
         "gk",
-        p1.alias("p1"),
-        ((p1 + 1 + F.pmod(gk, F.lit(_Q149_M - 1))) % _Q149_M).alias("p2"),
+        f"{p1} AS p1",
+        f"({p1} + 1 + pmod(gk, {_Q149_M - 1})) % {_Q149_M} AS p2",
     )
 
 
@@ -3183,27 +3172,26 @@ def bloom_decontaminate(
     # repartition, so the train branch folds only train docs and the
     # two eval branches only the 1/97 eval slice; a pin would
     # materialize every gram row of the corpus
-    ev_rows = keyed.filter(F.col("doc_id") % 97 == 0)
-    ev = ev_rows.select("gk").distinct()
+    ev_rows = keyed.filter("doc_id % 97 = 0")
+    ev = ev_rows.selectExpr("gk").distinct()
     train = (
-        keyed.filter(F.col("doc_id") % 97 != 0)
-        .join(F.broadcast(ev.withColumn("_me", F.lit(1))), "gk", "left")
+        keyed.filter("doc_id % 97 != 0")
+        .join(F.broadcast(ev.selectExpr("*", "1 AS _me")), "gk", "left")
         .crossJoin(F.broadcast(_q149_mask(ev_rows)))
-        .select(
+        .selectExpr(
             "doc_id",
-            (_q149_bit_set("p1") & _q149_bit_set("p2"))
-            .cast("bigint")
-            .alias("_bloom"),
-            F.col("_me").isNotNull().cast("bigint").alias("_key"),
+            f"CAST(({_q149_bit_set('p1')}) AND ({_q149_bit_set('p2')}) "
+            "AS BIGINT) AS _bloom",
+            "CAST(_me IS NOT NULL AS BIGINT) AS _key",
         )
     )
     return train.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_grams"),
-        F.sum("_bloom").alias("n_bloom_hits"),
-        F.sum("_key").alias("n_key_hits"),
-        F.round(
-            F.sum("_bloom").cast("double") / F.count(F.lit(1)), 6
-        ).alias("bloom_frac"),
+        F.expr("count(1) AS n_grams"),
+        F.expr("sum(_bloom) AS n_bloom_hits"),
+        F.expr("sum(_key) AS n_key_hits"),
+        F.expr(
+            "round(CAST(sum(_bloom) AS DOUBLE) / count(1), 6) AS bloom_frac"
+        ),
     )
 
 
@@ -3556,35 +3544,30 @@ _Q158_AB = ((48271, 0), (16807, 12345), (69621, 54321), (40692, 99991))
 _Q158_TOPK = 10
 
 
-def _cms_rows() -> Column:
-    """The d sketch rows' (r, a, b) hash parameters as one generator
-    over an array literal: selected beside a row, it replicates that
-    row d× in-plan — no join, no scan, no job."""
+def _cms_rows() -> str:
+    """SQL text: the d sketch rows' (r, a, b) hash parameters as one
+    generator over an array literal: selected beside a row, it
+    replicates that row d× in-plan — no join, no scan, no job."""
     ab = [{"r": r, "a": a, "b": b} for r, (a, b) in enumerate(_Q158_AB)]
-    return F.inline(F.expr(sql_lit(ab)))
+    return f"inline({sql_lit(ab)})"
 
 
-def _cms_x(term: Column) -> Column:
-    """term → its spread code x in [0, P): the q38 char-code
-    convention times one multiply-mod-P (int64-exact in both
-    engines)."""
+def _cms_x(term: str) -> str:
+    """SQL text: term → its spread code x in [0, P), the q38 char-code
+    convention times one multiply-mod-P (int64-exact in both engines;
+    the spread constant exceeds int, so it parses as a bigint)."""
     code = (
-        F.length(term) * 131
-        + 7 * F.ascii(term)
-        + 31 * F.ascii(F.substring(term, 2, 1))
-        + F.ascii(F.substring(term, -1, 1))
+        f"length({term}) * 131 + ascii({term}) * 7"
+        f" + ascii(substring({term}, 2, 1)) * 31"
+        f" + ascii(substring({term}, -1, 1))"
     )
-    return F.pmod(code * F.lit(_Q158_SPREAD), F.lit(_Q158_P))
+    return f"pmod(({code}) * {_Q158_SPREAD}, {_Q158_P})"
 
 
-def _cms_bucket(
-    x: Column, a: Column | None = None, b: Column | None = None
-) -> Column:
-    """Sketch row r's counter for code x: ((a·x + b) mod P) mod w, by
-    default over the (r, a, b) columns of _cms_rows."""
-    a = F.col("a") if a is None else a
-    b = F.col("b") if b is None else b
-    return F.pmod(F.pmod(a * x + b, F.lit(_Q158_P)), F.lit(_Q158_W))
+def _cms_bucket(x: str, a: str = "a", b: str = "b") -> str:
+    """SQL text: sketch row r's counter for code x, ((a·x + b) mod P)
+    mod w, by default over the (r, a, b) columns of _cms_rows."""
+    return f"pmod(pmod({a} * {x} + {b}, {_Q158_P}), {_Q158_W})"
 
 
 @register(
@@ -3628,8 +3611,8 @@ LIMIT {_Q158_TOPK}
 )
 def q158_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    tok = d.select(F.explode(tokens()).alias("term")).select(
-        "term", _cms_x(F.col("term")).alias("x")
+    tok = d.selectExpr(f"explode({tokens_sql()}) AS term").selectExpr(
+        "term", f"{_cms_x('term')} AS x"
     )
     (cms_tbl,) = _cms_tables(sf_dir)
     if spark.catalog.tableExists(cms_tbl):
@@ -3657,8 +3640,8 @@ def q158_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c",
     )
     est = (
-        cand.select("*", _cms_rows())
-        .withColumn("cand_bucket", _cms_bucket(F.col("x")))
+        cand.selectExpr("*", _cms_rows())
+        .selectExpr("*", f"{_cms_bucket('x')} AS cand_bucket")
         .join(
             F.broadcast(ctr),
             (F.col("cr") == F.col("r"))
@@ -3943,14 +3926,14 @@ def _cms_counters(
     incremental refresh (batch slice), and q160's plain branch."""
     if d is None:
         d = load_table(spark, sf_dir, "documents")
-    tok = d.select(F.explode(tokens()).alias("term")).select(
-        _cms_x(F.col("term")).alias("x")
+    tok = d.selectExpr(f"explode({tokens_sql()}) AS term").selectExpr(
+        f"{_cms_x('term')} AS x"
     )
     return (
-        tok.select("x", _cms_rows())
-        .select("r", _cms_bucket(F.col("x")).alias("bucket"))
+        tok.selectExpr("x", _cms_rows())
+        .selectExpr("r", f"{_cms_bucket('x')} AS bucket")
         .groupBy("r", "bucket")
-        .agg(F.count(F.lit(1)).alias("c"))
+        .agg(F.expr("count(1) AS c"))
     )
 
 
@@ -3997,32 +3980,27 @@ def q160_cms_point_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         if spark.catalog.tableExists(tbl)
         else _cms_counters(spark, sf_dir)
     )
-    cand = F.expr(
-        sql_lit(
-            [
-                {"term": t, "r": r, "a": a, "b": b}
-                for r, (a, b) in enumerate(_Q158_AB)
-                for t in _Q160_TERMS
-            ]
-        )
+    cand = sql_lit(
+        [
+            {"term": t, "r": r, "a": a, "b": b}
+            for r, (a, b) in enumerate(_Q158_AB)
+            for t in _Q160_TERMS
+        ]
     )
-
-    def counts(s: Column) -> Column:
-        bucket = _cms_bucket(_cms_x(s["term"]), s["a"], s["b"])
-        return (s["r"] == F.col("r")) & (bucket == F.col("bucket"))
-
-    hits = deltas.select("c", F.inline(F.filter(cand, counts)))
-    zeros = spark.range(1).select(F.inline(cand)).select(
-        "term", "r", F.lit(0).cast("long").alias("c")
+    bucket = _cms_bucket(_cms_x("s.term"), "s.a", "s.b")
+    counts = f"s -> s.r = r AND {bucket} = bucket"
+    hits = deltas.selectExpr("c", f"inline(filter({cand}, {counts}))")
+    zeros = spark.range(1).selectExpr(f"inline({cand})").selectExpr(
+        "term", "r", "CAST(0 AS BIGINT) AS c"
     )
-    per_r = [
-        F.sum(F.when(F.col("r") == r, F.col("c"))) for r in range(_Q158_D)
-    ]
+    per_r = ", ".join(
+        f"sum(CASE WHEN r = {r} THEN c END)" for r in range(_Q158_D)
+    )
     return (
-        hits.select("term", "r", "c")
+        hits.selectExpr("term", "r", "c")
         .unionByName(zeros)
         .groupBy("term")
-        .agg(F.least(*per_r).cast("long").alias("est_n"))
+        .agg(F.expr(f"CAST(least({per_r}) AS BIGINT) AS est_n"))
     )
 
 

@@ -24,7 +24,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from dask_cuml_spark.functions.vector import dot, l2_sq, rows_lit
+from dask_cuml_spark.functions.vector import (
+    dot,
+    l2_sq,
+    l2_sq_sql,
+    rows_lit,
+    sql_lit,
+)
 from dask_cuml_spark.io import load_table
 from dask_cuml_spark.plans.cost import embeddings_strategy, session_state
 from dask_cuml_spark.registry import register
@@ -137,16 +143,16 @@ def q41_centroid_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     # deletes is k× the corpus. array_position takes the FIRST min, so
     # ties break to the lowest centroid_id exactly like the oracle's
     # ORDER BY dist_sq, centroid_id.
-    from dask_cuml_spark.functions.vector import array_lit, matrix_lit
+    from dask_cuml_spark.functions.vector import array_lit
 
     e = load_table(spark, sf_dir, "embeddings")
     rows = sorted(
         e.filter(F.col("vec_id") < 10).select("vec_id", "embedding").collect(),
         key=lambda r: r.vec_id,
     )
-    cents = matrix_lit([r.embedding for r in rows])
+    cents = sql_lit([[float(v) for v in r.embedding] for r in rows])
     ids = array_lit([r.vec_id for r in rows])
-    dists = F.transform(cents, lambda c: l2_sq(F.col("embedding"), c))
+    dists = F.expr(f"transform({cents}, c -> {l2_sq_sql('embedding', 'c')})")
     md = F.array_min(dists)
     cid = F.element_at(ids, F.array_position(dists, md).cast("int"))
     return _par(e).select(
@@ -826,36 +832,32 @@ def q124_embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q124_outliers(e: DataFrame) -> DataFrame:
-    from dask_cuml_spark.functions.vector import l2
-
     # pass 1: one centroid row — the allreduce analogue as a partial+final
     # per-dimension agg; sorting the (dim, mean) structs puts the means
     # in dimension order
     dims = (
-        e.select(F.posexplode("embedding").alias("i", "v"))
+        e.selectExpr("posexplode(embedding) AS (i, v)")
         .groupBy("i")
-        .agg(F.avg(F.col("v").cast("double")).alias("m"))
+        .agg(F.expr("avg(CAST(v AS DOUBLE)) AS m"))
     )
     cen = dims.agg(
-        F.array_sort(F.collect_list(F.struct("i", "m"))).alias("_c")
-    ).select(F.col("_c.m").alias("cen"))
-    dists = e.crossJoin(F.broadcast(cen)).select(
-        "vec_id", l2("embedding", "cen").alias("dist")
+        F.expr("array_sort(collect_list(struct(i, m))) AS _c")
+    ).selectExpr("_c.m AS cen")
+    dists = e.crossJoin(F.broadcast(cen)).selectExpr(
+        "vec_id", f"sqrt({l2_sq_sql('embedding', 'cen')}) AS dist"
     )
     # pass 2: exact interpolated percentile (== DuckDB QUANTILE_CONT)
     # joined back as a broadcast single-row fold; approx_percentile is
     # the 100 TB substitute, same as q12's documented trade
-    thr = dists.agg(F.percentile("dist", _Q124_PCT).alias("thr"))
+    thr = dists.agg(F.expr(f"percentile(dist, {sql_lit(_Q124_PCT)}) AS thr"))
     # the flag compares the SAME 6-dp-rounded values the oracle rounds:
     # centroid aggregation order differs between engines
     # by float jitter, and an unrounded comparison at the exact p99
     # boundary could flip is_outlier while center_dist still matched
-    return dists.crossJoin(F.broadcast(thr)).select(
+    return dists.crossJoin(F.broadcast(thr)).selectExpr(
         "vec_id",
-        F.round("dist", 6).alias("center_dist"),
-        (F.round("dist", 6) > F.round("thr", 6))
-        .cast("int")
-        .alias("is_outlier"),
+        "round(dist, 6) AS center_dist",
+        "CAST(round(dist, 6) > round(thr, 6) AS INT) AS is_outlier",
     )
 
 
@@ -1616,10 +1618,11 @@ def q145_signhash_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from dask_cuml_spark.operators.knn import brute_force_knn
 
-    e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    e = load_table(spark, sf_dir, "embeddings").selectExpr(
+        "vec_id", "embedding"
+    )
     qrows = sorted(
-        e.filter(F.col("vec_id") < _Q145_NQ).collect(),
-        key=lambda r: r.vec_id,
+        e.filter(f"vec_id < {_Q145_NQ}").collect(), key=lambda r: r.vec_id
     )
     Q = np.stack([np.asarray(r.embedding, dtype=np.float64) for r in qrows])
     planes = hyperplanes(_Q145_NBITS, Q.shape[1], _SIG_SEED)
@@ -1758,29 +1761,35 @@ def _signatures(e: DataFrame, planes) -> DataFrame:
 def _serving_rerank(e, shortlist, nq: int, k: int):
     """Exact re-rank + top-k over a (query_id, neighbor_id) shortlist
     — the shared refine step (candidate-sized work)."""
-    qf = e.filter(F.col("vec_id") < nq).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
+    qf = e.filter(f"vec_id < {nq}").selectExpr(
+        "vec_id AS query_id", "embedding AS qv"
     )
-    cv = e.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("cv")
-    )
-    w2 = Window.partitionBy("query_id").orderBy("dist", "neighbor_id")
+    cv = e.selectExpr("vec_id AS neighbor_id", "embedding AS cv")
     return (
         shortlist.join(F.broadcast(qf), "query_id")
         .join(cv, "neighbor_id")
-        .select("query_id", "neighbor_id", l2_sq("qv", "cv").alias("dist"))
-        .withColumn("rk", F.row_number().over(w2))
-        .filter(F.col("rk") <= k)
+        .selectExpr(
+            "query_id", "neighbor_id", f"{l2_sq_sql('qv', 'cv')} AS dist"
+        )
+        .selectExpr(
+            "*",
+            "row_number() OVER (PARTITION BY query_id "
+            "ORDER BY dist, neighbor_id) AS rk",
+        )
+        .filter(f"rk <= {k}")
     )
 
 
 def _serving_shortlist(scored, order_col: str, shortlist_n: int):
-    w = Window.partitionBy("query_id").orderBy(order_col, "neighbor_id")
     return (
-        scored.filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= shortlist_n)
-        .select("query_id", "neighbor_id")
+        scored.filter("neighbor_id != query_id")
+        .selectExpr(
+            "*",
+            "row_number() OVER (PARTITION BY query_id "
+            f"ORDER BY {order_col}, neighbor_id) AS rk",
+        )
+        .filter(f"rk <= {shortlist_n}")
+        .selectExpr("query_id", "neighbor_id")
     )
 
 
@@ -1910,10 +1919,11 @@ def signhash_serving_topk(
         signatures_of,
     )
 
-    e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    e = load_table(spark, sf_dir, "embeddings").selectExpr(
+        "vec_id", "embedding"
+    )
     qrows = sorted(
-        e.filter(F.col("vec_id") < _Q145_NQ).collect(),
-        key=lambda r: r.vec_id,
+        e.filter(f"vec_id < {_Q145_NQ}").collect(), key=lambda r: r.vec_id
     )
     Q = np.stack([np.asarray(r.embedding, dtype=np.float64) for r in qrows])
     planes = hyperplanes(_Q145_NBITS, Q.shape[1], _SIG_SEED)

@@ -14,7 +14,10 @@ Shape per micro-batch:
      (positioned grams / sign signatures / PQ codes with the EXISTING
      codebooks — literal FAISS add() semantics), appends into the
      bucketed tables and rolls the fingerprint tag + manifest forward.
-     Per-batch work is Θ(|batch|), never Θ(corpus);
+     Per-batch work is Θ(|batch|), never Θ(corpus). The layouts refresh
+     side by side, one thread each, inside the sink's own job group
+     (the stream's run id); the reported refresh seconds are
+     per-layout and overlap, so they can sum past the batch's wall;
   3. consumers (q121's gram pairs, q145's signature scan, q138/q141's
      code scan) read the refreshed tables mid-stream with no knowledge
      that an ingest is running — the catalog-gated layout branch is the

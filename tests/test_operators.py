@@ -1086,6 +1086,139 @@ def test_ensure_layouts_idempotent_and_stale_gc(spark, tmp_path):
     spark.sql(f"DROP TABLE IF EXISTS {tbl2}")
 
 
+def _ingest_corpus(sf: str, append: bool) -> None:
+    """A documents + embeddings corpus of part directories under ``sf``
+    (sf0.001 as part-0); ``append`` adds its first 100 rows as part-1."""
+    import os
+    import shutil
+
+    import pyarrow.parquet as pq_mod
+    from conftest import SF_SMOKE
+
+    for t in ("documents", "embeddings"):
+        tdir = f"{sf}/{t}.parquet"
+        if not append:
+            os.makedirs(tdir)
+            shutil.copy(f"{SF_SMOKE}/{t}.parquet", f"{tdir}/part-0.parquet")
+            continue
+        part = pq_mod.read_table(f"{SF_SMOKE}/{t}.parquet").slice(0, 100)
+        pq_mod.write_table(part, f"{tdir}/part-1.parquet")
+
+
+def _drop_layouts(spark, sf: str, names) -> None:
+    from dask_cuml_spark.layouts import layout_tables
+
+    for name in names:
+        for t in layout_tables(name, sf):
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
+def test_concurrent_refresh_matches_serial_refreshes(spark, tmp_path):
+    """ensure_layouts refreshes the layouts of one call side by side.
+    After one appended part, a three-layout call leaves the same tables,
+    with the same rows, as three single-layout calls on a twin copy."""
+    from dask_cuml_spark.layouts import ensure_layouts, layout_tables
+
+    three = ("grams", "signs", "cms")
+    both, serial = str(tmp_path / "both"), str(tmp_path / "serial")
+    for sf in (both, serial):
+        _ingest_corpus(sf, append=False)
+        ensure_layouts(spark, sf, layouts=three)
+        _ingest_corpus(sf, append=True)
+    got = ensure_layouts(spark, both, layouts=three)
+    assert list(got) == list(three) and all(got[n] > 0.0 for n in three)
+    assert ensure_layouts(spark, both, layouts=three) == {
+        n: 0.0 for n in three
+    }
+    # the twin's stale-GC drops same-prefix tables of other tags, these
+    # among them: pin their rows first
+    kept = {}
+    for name in three:
+        for t in layout_tables(name, both):
+            assert spark.catalog.tableExists(t), t
+            kept[t] = spark.table(t).localCheckpoint()
+    for name in three:
+        assert ensure_layouts(spark, serial, layouts=(name,))[name] > 0.0
+    for name in three:
+        for a, b in zip(layout_tables(name, both), layout_tables(name, serial)):
+            # the tag hashes the corpus path, so only the prefix matches
+            assert a[:-12] == b[:-12]
+            assert spark.catalog.tableExists(b), b
+            ta, tb = kept[a], spark.table(b)
+            assert ta.count() == tb.count() > 0, name
+            assert ta.exceptAll(tb).count() == 0, name
+            assert tb.exceptAll(ta).count() == 0, name
+    _drop_layouts(spark, serial, three)
+
+
+def test_concurrent_refresh_failure_reaches_the_caller(
+    spark, tmp_path, monkeypatch
+):
+    """A derivation that raises inside its refresh thread: the error
+    reaches the ensure_layouts caller once every refresh thread has
+    finished, and the other layouts' refreshes completed."""
+    import threading
+
+    import dask_cuml_spark.layouts as L
+
+    three = ("grams", "signs", "cms")
+    sf = str(tmp_path / "sf")
+    _ingest_corpus(sf, append=False)
+    L.ensure_layouts(spark, sf, layouts=three)
+    _ingest_corpus(sf, append=True)
+
+    def broken(spark_, sf_dir, src, old):
+        raise RuntimeError("derivation failed")
+
+    monkeypatch.setitem(
+        L.LAYOUTS, "cms", L.Layout(L.LAYOUTS["cms"].sources,
+                                   L.LAYOUTS["cms"].tables, broken)
+    )
+    with pytest.raises(RuntimeError, match="derivation failed"):
+        L.ensure_layouts(spark, sf, layouts=three)
+    alive = [
+        t.name for t in threading.enumerate()
+        if t.name.startswith("ensure_layouts-")
+    ]
+    assert alive == []
+    for name in ("grams", "signs"):
+        assert all(
+            spark.catalog.tableExists(t) for t in L.layout_tables(name, sf)
+        ), name
+    monkeypatch.undo()
+    assert L.ensure_layouts(spark, sf, layouts=("cms",))["cms"] > 0.0
+    _drop_layouts(spark, sf, three)
+
+
+def test_concurrent_refresh_jobs_keep_the_caller_job_group(spark, tmp_path):
+    """Every job a concurrent refresh launches is listed under the job
+    group the caller set: a foreachBatch sink's refreshes stay in its
+    stream's run-id group."""
+    from dask_cuml_spark.benchlib import max_job_id
+    from dask_cuml_spark.layouts import ensure_layouts
+
+    three = ("grams", "signs", "cms")
+    sf = str(tmp_path / "sf")
+    _ingest_corpus(sf, append=False)
+    ensure_layouts(spark, sf, layouts=three)
+    _ingest_corpus(sf, append=True)
+    sc = spark.sparkContext
+    group = "concurrent-refresh-probe"
+    sc.setJobGroup(group, group)
+    try:
+        j0 = max_job_id(spark)
+        got = ensure_layouts(spark, sf, layouts=three)
+        j1 = max_job_id(spark)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert all(got[n] > 0.0 for n in three)
+    ids = set(sc.statusTracker().getJobIdsForGroup(group))
+    assert j1 > j0
+    assert set(range(j0 + 1, j1 + 1)) <= ids
+    _drop_layouts(spark, sf, three)
+
+
 def test_ensure_layouts_steady_state_launches_no_jobs(spark, tmp_path):
     """The per-batch provisioning call of an ingest stream pays no
     Spark job when nothing changed: the stale-GC and the refresh

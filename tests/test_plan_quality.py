@@ -458,3 +458,23 @@ def test_q162_rrf_fusion_plan(spark):
     assert "Union" in plan, plan[:2000]
     assert "TakeOrderedAndProject" in plan, plan[:2000]
     assert "BroadcastExchange" in plan, plan[:2000]
+
+
+def test_global_row_number_offsets_ride_no_broadcast(spark):
+    """global_row_number adds each partition's offset from one array
+    literal indexed by the partition id: a broadcast join of the
+    offsets runs one extra job per execution only to ship them."""
+    import pyspark.sql.functions as F
+
+    from dask_cuml_spark.benchlib import max_job_id
+    from dask_cuml_spark.functions.ranking import global_row_number
+    from dask_cuml_spark.io import load_table
+
+    c = load_table(spark, SF, "customer").select("c_custkey").repartition(5)
+    ranked, n = global_row_number(c, [F.col("c_custkey")])
+    plan = ranked._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastExchange" not in plan, plan[:2000]
+    j0 = max_job_id(spark)
+    rows = ranked.collect()
+    assert max_job_id(spark) - j0 <= 1
+    assert sorted(r._rn for r in rows) == list(range(1, n + 1))
